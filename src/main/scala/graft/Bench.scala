@@ -30,9 +30,13 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
+    // a query that throws is FAILED, not timed: its name is reported and
+    // its time is left out of every total
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def pass(): Seq[(String, Double)] = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try fn(spark, sfDir).count()
+      catch { case _: Throwable => failed += name }
       val dt = (System.nanoTime() - t0) / 1e9
       clearCaches()
       name -> dt
@@ -49,22 +53,24 @@ object Bench {
     val warm = !sys.env.contains("SPARK_GRAFT_NO_WARMUP")
     val cold = pass()
     val results =
-      if (warm) pass().zip(pass()).map { case ((k, a), (_, b)) => k -> math.min(a, b) }
-      else cold
+      (if (warm) pass().zip(pass()).map { case ((k, a), (_, b)) => k -> math.min(a, b) }
+      else cold).filterNot(r => failed(r._1))
     // The harness keeps only a bounded tail of this process's output, so the
     // single JSON line must stay compact enough to survive intact: per-query
     // times at millisecond precision (3 decimals — noise dominates below
-    // that anyway), and the headline metric/value fields LAST so that even a
-    // head-clipped tail still shows the totals.
+    // that anyway), then the compact list of failed query names, and the
+    // headline metric/value fields LAST so that even a head-clipped tail
+    // still shows the failures and the totals.
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val coldTotal = cold.map(_._2).sum
+    val coldTotal = cold.filterNot(r => failed(r._1)).map(_._2).sum
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // "reps" tags the estimator so cross-round comparisons can't conflate
     // min-of-2 steady-state totals with earlier single-pass numbers
     val reps = if (warm) 2 else 1
-    println(s"""{"queries":$qs,"cold_total_sec":${f3(coldTotal)},"reps":$reps,"sf":"$sfDir","metric":"total","unit":"sec","value":${f3(total)}}""")
+    println(s"""{"queries":$qs,"cold_total_sec":${f3(coldTotal)},"reps":$reps,"sf":"$sfDir","failed":$failedJson,"metric":"total","unit":"sec","value":${f3(total)}}""")
     spark.stop()
   }
 }

@@ -275,8 +275,8 @@ object FunnelMv {
         "applied" -> appliedDf(spark, Nil).coalesce(1)))
   }
 
-  /** Snapshot read of the funnel view at version `v` (marker-body table
-    * reference or legacy layout — sources.ManifestedPartitions resolves).
+  /** Snapshot read of the funnel view at version `v` — the `@view`
+    * sidecar table that version's marker body references.
     */
   def readView(spark: SparkSession, root: String, v: Long): DataFrame =
     graft.sources.ManifestedPartitions.readSidecarTable(
@@ -379,5 +379,6 @@ object FunnelMv {
     * BOUNDED as the stream ages. Returns the number of compacted buckets.
     */
   def compactFps(spark: SparkSession, root: String): Int =
-    graft.sources.ManifestedPartitions.compact(spark, root, FpsData, "fpb")
+    graft.sources.ManifestedPartitions.compact(spark, root,
+      Seq((FpsData, "fpb")))
 }

@@ -3797,7 +3797,7 @@ object MiscCatalog {
         val noLostUpdate =
           VersionedView.committedVersions(root) == (1L to 7L)
         // scheduled maintenance through the same default API
-        val compacted = MP.compact(s, root, "d", "part")
+        val compacted = MP.compact(s, root, Seq(("d", "part")))
         val oneWinnerPerVersion = compacted > 0 &&
           VersionedView.committedVersions(root) == (1L to 8L)
         MP.readLatest(s, root, "d", "part")

@@ -643,7 +643,7 @@ object SimilarityCatalog {
     * generation ids, so their staged files can't clobber each other),
     * then race the version-3 commit. The marker is installed by an
     * atomic link-if-absent CAS carrying the manifest IN its body
-    * (ManifestedPartitions.tryCommitManifests), so exactly one writer
+    * (ManifestedPartitions.commitManifestsCas), so exactly one writer
     * wins; the loser's commit returns false — the LOST-UPDATE shape a
     * replace-marker would have silently swallowed — and it re-stages
     * its delete against the winner's committed snapshot and lands as
@@ -692,14 +692,14 @@ object SimilarityCatalog {
         val w2 = ManifestedPartitions.stageRewriteAt(s, root, "lists",
           "cell", affected, anti, snapshotV = 2L, gen = 102L)
         // the race: one CAS wins version 3, the other detects conflict
-        val w1Won = ManifestedPartitions.tryCommitManifests(root, 3L,
+        val w1Won = ManifestedPartitions.commitManifestsCas(s, root, 3L,
           Map("lists" -> w1))
-        val w2Lost = !ManifestedPartitions.tryCommitManifests(root, 3L,
+        val w2Lost = !ManifestedPartitions.commitManifestsCas(s, root, 3L,
           Map("lists" -> w2))
         // loser retries: re-stage the delete on the WINNER's snapshot
         val w2Retry = ManifestedPartitions.stageRewriteAt(s, root, "lists",
           "cell", affected, anti, snapshotV = 3L, gen = 103L)
-        val w2Won = ManifestedPartitions.tryCommitManifests(root, 4L,
+        val w2Won = ManifestedPartitions.commitManifestsCas(s, root, 4L,
           Map("lists" -> w2Retry))
         require(w1Won && w2Lost && w2Won, "OCC race did not serialize")
         val compactionSurvived = ManifestedPartitions.fragmentedParts(
@@ -2558,9 +2558,9 @@ object SimilarityCatalog {
           "raw", "rb", affBuckets2, anti, snapshotV = 2L, gen = 204L)
         // the race: ONE marker carries BOTH manifests — the compactor's
         // CAS wins version 3; the delete's pair is rejected WHOLE
-        val w1Won = ManifestedPartitions.tryCommitManifests(root, 3L,
+        val w1Won = ManifestedPartitions.commitManifestsCas(s, root, 3L,
           Map("lists" -> w1Lists, "raw" -> w1Raw))
-        val w2Lost = !ManifestedPartitions.tryCommitManifests(root, 3L,
+        val w2Lost = !ManifestedPartitions.commitManifestsCas(s, root, 3L,
           Map("lists" -> w2Lists, "raw" -> w2Raw))
         // loser retries: re-discover cells AND buckets on the winner's
         // snapshot, re-stage both rewrites, commit as version 4
@@ -2569,7 +2569,7 @@ object SimilarityCatalog {
           "lists", "cell", affCells3, anti, snapshotV = 3L, gen = 205L)
         val w2RawR = ManifestedPartitions.stageRewriteAt(s, root,
           "raw", "rb", affBuckets3, anti, snapshotV = 3L, gen = 206L)
-        val w2Won = ManifestedPartitions.tryCommitManifests(root, 4L,
+        val w2Won = ManifestedPartitions.commitManifestsCas(s, root, 4L,
           Map("lists" -> w2ListsR, "raw" -> w2RawR))
         require(w1Won && w2Lost && w2Won, "OCC race did not serialize")
         val compactionSurvived =

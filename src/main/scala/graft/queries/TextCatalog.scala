@@ -786,9 +786,9 @@ object TextCatalog {
   /** OPTIMISTIC-CONCURRENCY maintenance for the SIDECAR-carrying postings
     * family (r17, verdict order #3): BM25 was the one persisted family
     * that could not race two maintenance writers — its 1-row corpus stats
-    * ride a parquet sidecar, and the OCC marker-body commit had no
-    * sidecar channel. Now tryCommitManifests serializes the stats INTO
-    * the CAS marker body alongside the manifest, so {postings pointer
+    * rode a parquet sidecar, and the marker-body commit had no sidecar
+    * channel. Now commitManifestsCas serializes the stats INTO the CAS
+    * marker body alongside the manifest, so {postings pointer
     * set, corpus statistics, commit point} are ONE atomic object — a
     * probe can never score one version's postings with another's
     * idf/avgdl, even mid-race. The gate replays q_s_ivf_occ_maint's
@@ -845,12 +845,12 @@ object TextCatalog {
         // the race: the compactor's CAS wins version 3 (stats carried
         // unchanged IN the marker body); the delete's commit — carrying
         // its decremented stats — is rejected
-        val w1Won = ManifestedPartitions.tryCommitManifests(root, 3L,
+        val w1Won = ManifestedPartitions.commitManifestsCas(s, root, 3L,
           Map("postings" -> w1),
-          Map("stats" -> PostingsIndex.statsScalars(st2)))
-        val w2Lost = !ManifestedPartitions.tryCommitManifests(root, 3L,
+          sidecarScalars = Map("stats" -> PostingsIndex.statsScalars(st2)))
+        val w2Lost = !ManifestedPartitions.commitManifestsCas(s, root, 3L,
           Map("postings" -> w2),
-          Map("stats" -> PostingsIndex.statsScalars(
+          sidecarScalars = Map("stats" -> PostingsIndex.statsScalars(
             PostingsIndex.decrementStats(st2, dead2))))
         // loser retries: re-read stats AND re-discover on the WINNER's
         // snapshot (the compaction moved its rows to a new generation)
@@ -860,9 +860,9 @@ object TextCatalog {
           .collect().map(_.getInt(0)).toSeq
         val w2r = ManifestedPartitions.stageRewriteAt(s, root, "postings",
           "tb", affected3, anti, snapshotV = 3L, gen = 103L)
-        val w2Won = ManifestedPartitions.tryCommitManifests(root, 4L,
+        val w2Won = ManifestedPartitions.commitManifestsCas(s, root, 4L,
           Map("postings" -> w2r),
-          Map("stats" -> PostingsIndex.statsScalars(
+          sidecarScalars = Map("stats" -> PostingsIndex.statsScalars(
             PostingsIndex.decrementStats(st3, dead3))))
         require(w1Won && w2Lost && w2Won, "OCC race did not serialize")
         val compactionSurvived = ManifestedPartitions.fragmentedParts(

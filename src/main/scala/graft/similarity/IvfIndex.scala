@@ -106,7 +106,7 @@ object IvfIndex {
     * both). Returns the number of compacted cells.
     */
   def compact(spark: SparkSession, path: String): Int =
-    ManifestedPartitions.compact(spark, path, Lists, Cell)
+    ManifestedPartitions.compact(spark, path, Seq((Lists, Cell)))
 
   /** DELETE a tombstone batch (vector ids) from the persisted index — the
     * GDPR leg of the ANN lifecycle: the affected cells are discovered by

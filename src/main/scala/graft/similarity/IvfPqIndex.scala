@@ -209,38 +209,14 @@ object IvfPqIndex {
 
   /** COMPACT fragmented partitions in both datasets (each append commits
     * one generation per dataset): rewrite exactly the cells/buckets whose
-    * live rows span several files back to one file each, committing both
-    * new manifests under one marker — partition-local, crash-safe, probe
-    * results bit-identical before/after. Returns the number of compacted
-    * partitions across both datasets.
+    * live rows span several files back to one file each, committing the
+    * rewritten manifests under one marker — partition-local, crash-safe,
+    * probe results bit-identical before/after. Returns the number of
+    * compacted partitions across both datasets.
     */
   def compact(spark: SparkSession, path: String): Int =
-    // fragmentation is re-discovered per CAS attempt against that
-    // attempt's snapshot (a racing writer may already have compacted —
-    // or vacuumed — some of the planned partitions)
-    ManifestedPartitions.retrying(path) { (inV, outV) =>
-      val fragLists = ManifestedPartitions.fragmentedParts(
-        spark, path, Lists, "cell", Some(inV))
-      val fragRaw = ManifestedPartitions.fragmentedParts(
-        spark, path, Raw, "rb", Some(inV))
-      if (fragLists.isEmpty && fragRaw.isEmpty) Some(0)
-      else {
-        val listsMerged =
-          if (fragLists.nonEmpty)
-            ManifestedPartitions.stageRewriteAt(spark, path, Lists, "cell",
-              fragLists, identity, inV, ManifestedPartitions.freshGen())
-          else ManifestedPartitions.readEntries(spark, path, Lists, inV)
-        val rawMerged =
-          if (fragRaw.nonEmpty)
-            ManifestedPartitions.stageRewriteAt(spark, path, Raw, "rb",
-              fragRaw, identity, inV, ManifestedPartitions.freshGen())
-          else ManifestedPartitions.readEntries(spark, path, Raw, inV)
-        if (ManifestedPartitions.commitManifestsCas(spark, path, outV,
-            Map(Lists -> listsMerged, Raw -> rawMerged)))
-          Some(fragLists.size + fragRaw.size)
-        else None
-      }
-    }
+    ManifestedPartitions.compact(spark, path,
+      Seq((Lists, "cell"), (Raw, "rb")))
 
   /** RETENTION GC over both datasets: expire below-horizon manifest
     * versions (marker-first — stale time travel fails loudly) and delete

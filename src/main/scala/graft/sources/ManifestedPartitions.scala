@@ -18,49 +18,51 @@ import org.apache.spark.sql.types.StructType
 class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
 /** MANIFEST-COMMITTED partitioned datasets — the crash-atomic maintenance
-  * substrate for every persisted index family (r15 verdict order #1). The
-  * previous maintenance primitive swapped live partition directories with
-  * two sequential `Files.move` calls; a crash (or a concurrent probe)
-  * between the moves observed an index with a partition silently MISSING.
-  * Here nothing committed is ever mutated in place:
+  * substrate for every persisted index family. Nothing committed is ever
+  * mutated in place:
   *
   *   - data lives in immutable GENERATION directories
   *     `<root>/<dataName>/g=<gen>/<partCol>=<p>/` — append and
   *     rewrite WRITE NEW generations, never touch old ones;
-  *   - which generations are live is decided by a tiny MANIFEST table of
-  *     [[Entry]] rows — a partition's live rows are the union of its
-  *     listed generations; since r17 each entry also carries the
-  *     generation-partition's FILE and ROW counts, so maintenance
-  *     planning (fragmentation discovery, compaction targeting) reads
-  *     the manifest instead of walking data directories (r16 verdict
-  *     order #4: the `Files.list` planning loop was the last
-  *     O(|partitions|) driver filesystem scan on the maintenance path) —
-  *     committed through [[VersionedView]]'s marker-last protocol (data
-  *     first, zero-byte marker last; the marker IS the commit point),
-  *     optionally alongside sidecar tables (e.g. BM25 corpus stats)
-  *     under the SAME marker so manifest and sidecar can never diverge;
-  *   - readers resolve a committed manifest version and construct the
-  *     exact directory list to scan — pruning to a probed partition
-  *     subset is path construction, stronger than partition filtering,
-  *     and a probe pinned to version v keeps serving v bit-exactly while
-  *     maintenance commits v+1 (snapshot isolation, r15 order #3);
+  *   - which generations are live is decided by the MANIFEST: [[Entry]]
+  *     rows (partition, generation, file count, row count) — a
+  *     partition's live rows are the union of its listed generations, and
+  *     the per-entry counts let maintenance planning (fragmentation
+  *     discovery, compaction targeting) read the manifest instead of
+  *     walking data directories;
+  *   - a version is committed by ONE marker file `<root>/_commits/<v>`
+  *     whose body holds every manifest and sidecar of the root (the
+  *     marker-body format below), installed with
+  *     [[VersionedView.tryMark]]'s atomic link-if-absent — data first,
+  *     marker last; the marker IS the commit point, so manifests and
+  *     sidecars (e.g. BM25 corpus stats) can never diverge;
+  *   - every committed body is COMPLETE: [[commitManifestsCas]] copies
+  *     forward each key of the previous body the new commit does not
+  *     override, so a read of version v parses v's marker alone;
+  *   - readers resolve a committed version and construct the exact
+  *     directory list to scan — pruning to a probed partition subset is
+  *     path construction, stronger than partition filtering, and a probe
+  *     pinned to version v keeps serving v bit-exactly while maintenance
+  *     commits v+1 (snapshot isolation);
   *   - a TORN maintenance run (new generation written, no marker) is
-  *     invisible: readers keep resolving the old manifest — the
-  *     time-travel discipline `q_pipeline_mv_timetravel` proved for the
-  *     funnel view, now applied to index maintenance;
+  *     invisible: readers keep resolving the old version;
   *   - old generations are garbage-collected only when no retained
-  *     manifest references them ([[expire]] — retention GC), with an
+  *     version references them ([[expire]] — retention GC), with an
   *     in-flight grace window shielding freshly STAGED generations a
-  *     concurrent writer has not committed yet (ADVICE r16).
+  *     concurrent writer has not committed yet.
   *
-  * This is directory-granularity manifesting — the honest single-table
-  * core of what Delta/Iceberg do at file granularity (their manifests
-  * list files with per-file statistics; ours lists partition-generation
-  * directories with per-directory file/row counts, which is the same
-  * commit-point discipline with a coarser unit). At 100 TB the manifest
-  * stays tiny: |partitions| × live generations rows, thousands of rows
-  * against billions of data rows, read once per probe and folded into
-  * driver-side path construction.
+  * Marker-body format: `{"<key>":"<value>",…}`, keys sorted. A bare
+  * identifier key is a dataset's manifest (`part:gen:files:rows;…`),
+  * `~<name>` a scalar sidecar's fields (`field:value;…`), `@<name>` a
+  * sidecar TABLE's writer-unique directory under `<root>/<name>/`.
+  *
+  * This is directory-granularity manifesting — the single-table core of
+  * what Delta/Iceberg do at file granularity (their manifests list files
+  * with per-file statistics; ours lists partition-generation directories
+  * with per-directory file/row counts, the same commit-point discipline
+  * with a coarser unit). The manifest stays tiny: |partitions| × live
+  * generations entries, read once per probe and folded into driver-side
+  * path construction.
   */
 object ManifestedPartitions {
 
@@ -90,9 +92,6 @@ object ManifestedPartitions {
 
   private implicit val entryOrdering: Ordering[Entry] =
     Ordering.by(e => (e.part, e.gen))
-
-  /** Manifest table name for a dataset. */
-  def manifestTable(dataName: String): String = s"${dataName}_manifest"
 
   /** Run `body` with a Spark job description (guide §1.5 — labelled jobs
     * make the UI and job-level profiles attributable), restoring the
@@ -207,82 +206,24 @@ object ManifestedPartitions {
     finally st.close()
   }
 
-  /** The committed manifest of `dataName` at version `v` — driver-side,
-    * bounded by |partitions| × live generations. Two storage forms: the
-    * single-writer path commits the manifest as a parquet table beside
-    * the data, while the OCC path ([[tryCommitManifests]]) embeds it in
-    * the marker body itself — readers handle both, so probes are
-    * agnostic to which writer discipline produced a version. An OCC
-    * marker that does not carry `dataName` (a commit touching only a
-    * subset of the root's datasets) CARRIES FORWARD the previous
-    * version's entries instead of throwing (ADVICE r16: the old
-    * IllegalStateException made retention GC permanently impossible for
-    * the omitted dataset).
+  /** The committed manifest of `dataName` at version `v` — a direct
+    * lookup in v's marker body, driver-side, bounded by |partitions| ×
+    * live generations. Throws IllegalStateException if the body has no
+    * `dataName` key (the dataset was never committed under this root).
     */
   def readEntries(spark: SparkSession, root: String, dataName: String,
-      v: Long): Seq[Entry] = {
-    val body = VersionedView.markerBody(root, v)
-    if (body.startsWith("{")) {
-      val pat = ("\"" + java.util.regex.Pattern.quote(dataName) +
-        "\":\"([^\"]*)\"").r
-      pat.findFirstMatchIn(body) match {
-        case Some(m) =>
-          val s = m.group(1)
-          if (s.isEmpty) Nil
-          else s.split(";").toSeq.map { e =>
-            val Array(p, g, f, r) = e.split(":")
-            Entry(p.toInt, g.toLong, f.toInt, r.toLong)
-          }.sorted
-        case None =>
-          // this commit didn't touch `dataName`: its live entries are the
-          // previous committed version's (carry-forward). If retention GC
-          // already expired every prior version, [[expire]] materialized
-          // the resolved entries as this version's parquet manifest table
-          // — read that instead.
-          val prev = VersionedView.committedVersions(root).filter(_ < v)
-          if (prev.nonEmpty) readEntries(spark, root, dataName, prev.max)
-          else try
-            VersionedView.readTable(spark, root, manifestTable(dataName), v)
-              .select("part", "gen", "files", "rows").collect()
-              .map(r => Entry(r.getInt(0), r.getLong(1), r.getInt(2),
-                r.getLong(3)))
-              .toSeq.sorted
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new IllegalStateException(
-                s"version $v marker at $root has no manifest for " +
-                  s"$dataName, no prior version to carry forward, and no " +
-                  "materialized manifest table", e)
-          }
-      }
-    } else
-      VersionedView.readTable(spark, root, manifestTable(dataName), v)
-        .select("part", "gen", "files", "rows").collect()
-        .map(r => Entry(r.getInt(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        .toSeq.sorted
-  }
+      v: Long): Seq[Entry] =
+    entriesOf(bodyAt(root, v), root, v, dataName)
 
-  /** OPTIMISTIC-CONCURRENCY commit (r16): serialize the manifests INTO
-    * the version marker — `{"<dataName>":"part:gen:files:rows;…", …}` —
-    * and install it with [[VersionedView.tryMark]]'s atomic
-    * link-if-absent. The marker IS both the commit point and the
-    * data-pointer set, so two writers racing to version `v` cannot
-    * interleave: exactly one link succeeds, the loser gets `false`,
-    * re-reads the winner's snapshot, re-stages its maintenance on a
-    * fresh generation ([[stageRewriteAt]] with a writer-unique gen),
-    * and retries at v+1. Sidecar-carrying families ride the same body:
-    * `sidecarScalars` serializes small all-numeric sidecar rows (e.g.
-    * BM25's 1-row corpus stats) as `"~<name>":"field:value;…"` under the
-    * SAME atomic marker (r16 verdict order #3 — the `~` prefix cannot
-    * collide with a dataset name, which is always a bare identifier).
-    */
-  def tryCommitManifests(root: String, v: Long,
-      manifests: Map[String, Seq[Entry]],
-      sidecarScalars: Map[String, Seq[(String, Long)]] = Map.empty)
-      : Boolean =
-    VersionedView.tryMark(root, v, bodyOf(
-      manifests.map { case (dn, es) => dn -> entryStr(es) } ++
-        sidecarScalars.map { case (n, kvs) => s"~$n" -> scalarStr(kvs) }))
+  private def entriesOf(body: Map[String, String], root: String, v: Long,
+      dataName: String): Seq[Entry] = {
+    val s = valueOf(body, root, v, dataName)
+    if (s.isEmpty) Nil
+    else s.split(";").toSeq.map { e =>
+      val Array(p, g, f, r) = e.split(":")
+      Entry(p.toInt, g.toLong, f.toInt, r.toLong)
+    }.sorted
+  }
 
   private def entryStr(es: Seq[Entry]): String =
     es.sorted.map(e => s"${e.part}:${e.gen}:${e.files}:${e.rows}")
@@ -291,49 +232,59 @@ object ManifestedPartitions {
   private def scalarStr(kvs: Seq[(String, Long)]): String =
     kvs.map { case (k, x) => s"$k:$x" }.mkString(";")
 
-  /** Flat key→value marker-body serialization. Key namespaces: a bare
-    * identifier is a dataset's manifest entries, `~<name>` a scalar
-    * sidecar's fields, `@<name>` a sidecar TABLE's version-nonce
-    * directory (relative to `<root>/<name>/`).
-    */
+  /** Marker-body serialization (format in the object header). */
   private def bodyOf(pairs: Iterable[(String, String)]): String =
     pairs.toSeq.sortBy(_._1)
       .map { case (k, value) => "\"" + k + "\":\"" + value + "\"" }
       .mkString("{", ",", "}")
 
-  private def parseBody(body: String): Seq[(String, String)] =
-    "\"([^\"]+)\":\"([^\"]*)\"".r.findAllMatchIn(body)
-      .map(m => (m.group(1), m.group(2))).toSeq
+  private val BodyPair = "\"([^\"]+)\":\"([^\"]*)\"".r
 
-  /** CAS-BY-DEFAULT commit (r18, verdict order #1) — the commit point of
-    * EVERY default lifecycle API. Like [[tryCommitManifests]] the marker
-    * is installed with VersionedView.tryMark's atomic link-if-absent, so
-    * two independent jobs racing version `v` serialize: exactly one wins,
-    * the loser re-reads the winner's snapshot and retries at v+1 — an
-    * acknowledged commit can never be silently replaced. Two additions
-    * over the raw API:
+  private def parseBody(body: String): Map[String, String] =
+    BodyPair.findAllMatchIn(body).map(m => (m.group(1), m.group(2))).toMap
+
+  /** Version `v`'s marker body as key → value (loud
+    * IllegalArgumentException if `v` is not committed).
+    */
+  private def bodyAt(root: String, v: Long): Map[String, String] =
+    parseBody(VersionedView.markerBody(root, v))
+
+  private def valueOf(body: Map[String, String], root: String, v: Long,
+      key: String): String =
+    body.getOrElse(key, throw new IllegalStateException(
+      s"version $v marker at $root has no key $key"))
+
+  /** THE commit point of every lifecycle API: install version `v`'s
+    * marker with VersionedView.tryMark's atomic link-if-absent, so two
+    * independent jobs racing version `v` serialize — exactly one wins,
+    * the loser gets `false`, re-reads the winner's snapshot, re-stages
+    * its maintenance on a fresh generation ([[stageRewriteAt]] with a
+    * writer-unique gen) and retries at v+1. An acknowledged commit can
+    * never be replaced.
     *
-    *   - sidecar TABLES (multi-row / non-numeric state the scalar channel
-    *     can't carry — the funnel MV's view and applied-batches ledger)
-    *     are staged WRITER-UNIQUE at `<root>/<name>/v=<v>-<nonce>` and
-    *     referenced from the marker body (`"@<name>":"v=<v>-<nonce>"`),
-    *     so two racing stagers cannot clobber each other's table files
-    *     before either marks — a loser's staged directory is garbage
-    *     until [[expire]]'s grace window passes;
-    *   - AUTO-CARRY-FORWARD: every dataset / scalar / table key of the
-    *     previous committed version's body that this commit does not
-    *     override is copied verbatim into the new body. A commit touching
-    *     one dataset of a multi-dataset root therefore yields a version
-    *     whose body is still COMPLETE — reads never walk a carry-forward
-    *     chain of markers (r17 verdict order #5: the walk was unbounded
-    *     over single-dataset-touching histories; now it is 0 hops for any
-    *     version committed through this path).
+    *   - `sidecarScalars` serializes small all-numeric sidecar rows (e.g.
+    *     BM25's 1-row corpus stats) as `"~<name>":"field:value;…"`;
+    *   - `sidecarTables` (multi-row / non-numeric state — the funnel MV's
+    *     view, the applied-batches ledgers) are staged WRITER-UNIQUE at
+    *     `<root>/<name>/v=<v>-<nonce>` and referenced as
+    *     `"@<name>":"v=<v>-<nonce>"`, so two racing stagers cannot
+    *     clobber each other's files — a loser's staged directory is
+    *     garbage until [[expire]]'s grace window passes;
+    *   - CARRY-FORWARD: every key of the previous version's body that
+    *     this commit does not override is copied into the new body, so
+    *     every committed body is complete by induction from [[init]].
+    *
+    * A version at or below the latest committed one is refused (`false`)
+    * before anything is staged: a commit there could not carry forward
+    * from its predecessor.
     */
   def commitManifestsCas(spark: SparkSession, root: String, v: Long,
       manifests: Map[String, Seq[Entry]],
       sidecarTables: Map[String, DataFrame] = Map.empty,
       sidecarScalars: Map[String, Seq[(String, Long)]] = Map.empty)
       : Boolean = {
+    val prev = VersionedView.latestVersion(root)
+    if (prev.exists(_ >= v)) return false
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val tableRefs = sidecarTables.map { case (name, df) =>
       val ref = s"v=$v-$nonce"
@@ -346,38 +297,17 @@ object ManifestedPartitions {
       manifests.map { case (dn, es) => dn -> entryStr(es) } ++
         sidecarScalars.map { case (n, kvs) => s"~$n" -> scalarStr(kvs) } ++
         tableRefs.map { case (n, ref) => s"@$n" -> ref }
-    val carried = VersionedView.latestVersion(root).filter(_ < v).toSeq
-      .flatMap { pv =>
-        val b = VersionedView.markerBody(root, pv)
-        if (b.startsWith("{"))
-          parseBody(b).filterNot { case (k, _) => own.contains(k) }
-        else Nil
-      }
-    VersionedView.tryMark(root, v, bodyOf(own ++ carried))
+    val carried = prev.map(bodyAt(root, _)).getOrElse(Map.empty)
+    VersionedView.tryMark(root, v, bodyOf(carried ++ own))
   }
 
-  /** Resolve one sidecar TABLE at version `v` — the three storage forms
-    * in age order: a `@<name>` version-nonce reference in the marker body
-    * (every [[commitManifestsCas]] commit), carry-forward to the previous
-    * version when an OCC body omits it (raw [[tryCommitManifests]]
-    * commits; bounded — auto-carry keeps default-API chains at 0 hops),
-    * and the legacy `<root>/<name>/v=<v>` table of a pre-CAS marker.
+  /** Sidecar TABLE `name` at version `v`: the directory its `@<name>`
+    * key references (IllegalStateException if the body has none).
     */
   def readSidecarTable(spark: SparkSession, root: String, name: String,
-      v: Long): DataFrame = {
-    val body = VersionedView.markerBody(root, v)
-    if (!body.startsWith("{"))
-      return VersionedView.readTable(spark, root, name, v)
-    parseBody(body).collectFirst {
-      case (k, ref) if k == s"@$name" => ref
-    } match {
-      case Some(ref) => spark.read.parquet(s"$root/$name/$ref")
-      case None =>
-        val prev = VersionedView.committedVersions(root).filter(_ < v)
-        if (prev.nonEmpty) readSidecarTable(spark, root, name, prev.max)
-        else VersionedView.readTable(spark, root, name, v)
-    }
-  }
+      v: Long): DataFrame =
+    spark.read.parquet(
+      s"$root/$name/${valueOf(bodyAt(root, v), root, v, s"@$name")}")
 
   /** THE CAS retry loop every default lifecycle API wraps around
     * [[commitManifestsCas]]: run `attempt(inV, outV)` against the latest
@@ -411,28 +341,16 @@ object ManifestedPartitions {
     retrying(root)((inV, outV) =>
       if (attempt(inV, outV)) Some(outV) else None)
 
-  /** The body-embedded scalar sidecar of an OCC commit: Some(fields) if
-    * version `v`'s marker carries `"~<name>"`, None if the version was
-    * committed by the single-writer path (sidecar lives as a parquet
-    * table) or the OCC body omitted it (caller carries forward).
+  /** Scalar sidecar `name` at version `v`: Some(fields) if v's body
+    * carries `"~<name>"`, None if the root never committed it.
     */
   def readSidecarScalars(root: String, name: String,
-      v: Long): Option[Map[String, Long]] = {
-    val body = VersionedView.markerBody(root, v)
-    if (!body.startsWith("{")) return None
-    val pat = ("\"~" + java.util.regex.Pattern.quote(name) +
-      "\":\"([^\"]*)\"").r
-    pat.findFirstMatchIn(body).map { m =>
-      m.group(1).split(";").filter(_.nonEmpty).map { kv =>
+      v: Long): Option[Map[String, Long]] =
+    bodyAt(root, v).get(s"~$name").map(
+      _.split(";").filter(_.nonEmpty).map { kv =>
         val Array(k, x) = kv.split(":")
         k -> x.toLong
-      }.toMap
-    }
-  }
-
-  /** Whether version `v` was committed through the OCC marker-body path. */
-  def isOccVersion(root: String, v: Long): Boolean =
-    VersionedView.markerBody(root, v).startsWith("{")
+      }.toMap)
 
   /** Latest committed manifest version of the root (shared by every
     * dataset and sidecar committed under it).
@@ -514,11 +432,10 @@ object ManifestedPartitions {
 
   /** Commit one or more datasets' manifests (+ sidecar tables) as version
     * `v` under a single marker — [[commitManifestsCas]] with the CAS loss
-    * surfaced as a LOUD [[ConcurrentCommitException]] (r18 order #1: the
-    * pre-CAS path replaced an existing marker, silently losing whichever
-    * independent job committed `v` first). Single-writer callers keep the
-    * old contract; potentially-racing callers use [[retryingCommit]] or
-    * their own re-stage loop instead of catching this.
+    * surfaced as a LOUD [[ConcurrentCommitException]] instead of a
+    * `false`. For single-writer callers; potentially-racing callers use
+    * [[retryingCommit]] or their own re-stage loop instead of catching
+    * this.
     */
   def commitManifests(spark: SparkSession, root: String, v: Long,
       manifests: Map[String, Seq[Entry]],
@@ -591,7 +508,7 @@ object ManifestedPartitions {
     * stages the rewrite as generation `gen`, which the caller must make
     * writer-unique (racing writers staging into the same generation
     * directory would clobber each other's files before either commits).
-    * Returns the merged entry list to pass to [[tryCommitManifests]];
+    * Returns the merged entry list to pass to [[commitManifestsCas]];
     * a lost race abandons the staged generation (dead until [[expire]]'s
     * grace window passes) and re-stages from the winner's snapshot.
     */
@@ -686,25 +603,30 @@ object ManifestedPartitions {
       }
   }
 
-  /** COMPACT: rewrite exactly the fragmented partitions to one file each
-    * (identity transform — physical layout only, zero logical effect).
-    * The fragmentation discovery runs PER CAS ATTEMPT against that
-    * attempt's snapshot — a racing writer may have compacted (or
-    * vacuumed) some of the planned partitions, and a stale plan would
-    * fail stageRewriteAt's liveness check. Returns the number of
-    * compacted partitions (0 if nothing was fragmented).
+  /** COMPACT: rewrite exactly the fragmented partitions of each
+    * `(dataName, partCol)` dataset to one file each (identity transform —
+    * physical layout only, zero logical effect), committing the rewritten
+    * datasets under ONE marker; untouched datasets carry forward. The
+    * fragmentation discovery runs PER CAS ATTEMPT against that attempt's
+    * snapshot — a racing writer may have compacted (or vacuumed) some of
+    * the planned partitions, and a stale plan would fail stageRewriteAt's
+    * liveness check. Returns the number of compacted partitions across
+    * all datasets (0 if nothing was fragmented).
     */
-  def compact(spark: SparkSession, root: String, dataName: String,
-      partCol: String,
-      sidecars: Map[String, DataFrame] = Map.empty): Int =
+  def compact(spark: SparkSession, root: String,
+      dataNames: Seq[(String, String)]): Int =
     retrying(root) { (inV, outV) =>
-      val frag = fragmentedParts(spark, root, dataName, partCol, Some(inV))
+      val frag = dataNames.map { case (dn, pc) =>
+        (dn, pc, fragmentedParts(spark, root, dn, pc, Some(inV)))
+      }.filter(_._3.nonEmpty)
       if (frag.isEmpty) Some(0)
       else {
-        val merged = stageRewriteAt(spark, root, dataName, partCol, frag,
-          identity, inV, freshGen())
-        if (commitManifestsCas(spark, root, outV,
-            Map(dataName -> merged), sidecars)) Some(frag.size)
+        val merged = frag.map { case (dn, pc, parts) =>
+          dn -> stageRewriteAt(spark, root, dn, pc, parts, identity, inV,
+            freshGen())
+        }.toMap
+        if (commitManifestsCas(spark, root, outV, merged))
+          Some(frag.map(_._3.size).sum)
         else None
       }
     }
@@ -720,19 +642,21 @@ object ManifestedPartitions {
     */
   val DefaultInFlightGraceMs: Long = 24L * 3600 * 1000
 
-  /** RETENTION GC for a manifested root: expire manifest versions below
-    * the keep-horizon (marker-first — below-horizon time travel fails
-    * loudly, never serves a half-deleted snapshot), then delete every
+  /** RETENTION GC for a manifested root: expire the versions below the
+    * keep-horizon (marker-first — below-horizon time travel fails loudly,
+    * never serves a half-deleted snapshot), then delete every
     * (generation, partition) directory of `dataNames` that no RETAINED
-    * manifest references — (gen, part) granularity, not whole
+    * version references — (gen, part) granularity, not whole
     * generations, because a rewrite leaves its generation PARTIALLY
     * referenced (untouched partitions keep pointing at it) while the
     * rewritten partitions' old bytes in that same generation are dead:
     * exactly the tombstoned bytes a GDPR vacuum must make go away. An
-    * emptied generation directory is removed outright. Never-committed
-    * generations (an OCC loser's abandoned stage, or a writer's
-    * IN-FLIGHT stage) are deleted only when older than
-    * `inFlightGraceMs`; pass 0 only when provably no writer is
+    * emptied generation directory is removed outright, and so is every
+    * sidecar-table directory no retained version references. Because
+    * every body is complete, the retained markers are left as they are.
+    * Never-committed generations and tables (an OCC loser's abandoned
+    * stage, or a writer's IN-FLIGHT stage) are deleted only when older
+    * than `inFlightGraceMs`; pass 0 only when provably no writer is
     * concurrent (single-writer tests/gates). Returns (expired versions,
     * deleted partition-directory count).
     */
@@ -740,114 +664,31 @@ object ManifestedPartitions {
       dataNames: Seq[(String, String)], // (dataName, partCol) pairs
       keepLast: Int,
       inFlightGraceMs: Long = DefaultInFlightGraceMs): (Seq[Long], Int) = {
-    // capture, per dataset, every (gen, part) ANY committed version ever
-    // referenced, and the entries of every RETAINED version — BEFORE the
-    // markers go (carry-forward resolution of an OCC subset marker needs
-    // the prior markers alive; and once a writer's commit landed, its
-    // generation is no longer in-flight and needs no age shield)
+    // plan from the bodies of ONE version snapshot, read before any marker
+    // goes: every (gen, part) a committed version ever referenced (once a
+    // writer's commit landed, its generation needs no age shield), and
+    // what the retained versions still reference
     val allVersions = VersionedView.committedVersions(root)
-    val keptPlan = allVersions.takeRight(keepLast)
-    val everReferenced: Map[String, Set[(Long, Int)]] =
-      dataNames.map { case (dn, _) =>
-        dn -> allVersions
-          .flatMap(v => readEntries(spark, root, dn, v))
-          .map(e => (e.gen, e.part)).toSet
-      }.toMap
-    val retainedPer: Map[String, Set[(Long, Int)]] =
-      dataNames.map { case (dn, _) =>
-        dn -> keptPlan.flatMap(v => readEntries(spark, root, dn, v))
-          .map(e => (e.gen, e.part)).toSet
-      }.toMap
-    // the OLDEST retained version anchors every later carry-forward:
-    // ENRICH its marker body with every dataset / scalar-sidecar /
-    // table-sidecar key an older (about-to-be-expired) version carries
-    // that it omits, so reads at and above the new horizon never need
-    // the expired markers. This generalizes the old manifest-table
-    // materialization to ALL sidecar kinds (ADVICE r17: an OCC marker
-    // omitting the stats scalars was poisoned-after-expire exactly like
-    // the r16 manifest case) — the rewrite is semantically inert (the
-    // enriched body resolves to the same snapshot) and atomic.
-    keptPlan.headOption.foreach { v0 =>
-      val body0 = VersionedView.markerBody(root, v0)
-      if (body0.startsWith("{")) {
-        val own = parseBody(body0).toMap
-        val carried = scala.collection.mutable.LinkedHashMap[String, String]()
-        allVersions.filter(_ < v0).reverse.foreach { pv =>
-          val b = VersionedView.markerBody(root, pv)
-          if (b.startsWith("{"))
-            parseBody(b).foreach { case (k, value) =>
-              if (!own.contains(k) && !carried.contains(k))
-                carried += k -> value
-            }
-        }
-        // a dataset whose chain below v0 is legacy TABLE-form is
-        // invisible in the bodies — resolve it through readEntries
-        dataNames.foreach { case (dn, _) =>
-          if (!own.contains(dn) && !carried.contains(dn))
-            carried += dn -> entryStr(readEntries(spark, root, dn, v0))
-        }
-        // LEGACY sidecar TABLES (pre-CAS layout `<name>/v=<k>`, written
-        // by VersionedView.commitTables) that v0's carry-forward walk
-        // resolves to a BELOW-HORIZON version: readSidecarTable/statsAt
-        // advertise resolving them, but the marker deletion below would
-        // destroy their bytes — migrate the resolved table directory
-        // into the anchor under an `@` reference first.
-        val deadSet = allVersions.dropRight(keepLast).toSet
-        val rootSt0 = Files.list(Paths.get(root))
-        val legacyDirs = try rootSt0.iterator().asScala.toList
-          .filter(d => Files.isDirectory(d) &&
-            d.getFileName.toString != "_commits" &&
-            !d.getFileName.toString.endsWith("_manifest"))
-          .map { d =>
-            val st = Files.list(d)
-            val legacyVs = try st.iterator().asScala
-              .map(_.getFileName.toString).filter(_.matches("v=\\d+"))
-              .map(_.stripPrefix("v=").toLong).toSet
-            finally st.close()
-            d -> legacyVs
-          }.filter(_._2.nonEmpty)
-        finally rootSt0.close()
-        legacyDirs.foreach { case (d, legacyVs) =>
-          val name = d.getFileName.toString
-          // emulate readSidecarTable's walk from v0: the first OCC body
-          // carrying `@name` ends it (that ref is protected below); the
-          // first LEGACY body is where the legacy read would land
-          var target: Option[Long] = None
-          var stop = false
-          allVersions.filter(_ <= v0).reverse.foreach { v =>
-            if (!stop) {
-              val b = VersionedView.markerBody(root, v)
-              if (b.startsWith("{")) {
-                if (parseBody(b).exists(_._1 == s"@$name")) stop = true
-              } else { target = Some(v); stop = true }
-            }
-          }
-          target.filter(deadSet.contains).filter(legacyVs.contains)
-            .foreach { k =>
-              val ref = s"v=$v0-gcleg" +
-                java.util.UUID.randomUUID().toString.take(8)
-              Files.move(d.resolve(s"v=$k"), d.resolve(ref))
-              carried += s"@$name" -> ref
-            }
-        }
-        if (carried.nonEmpty)
-          VersionedView.rewriteMarker(root, v0, bodyOf(own ++ carried))
+    val bodies = allVersions.map(v => v -> bodyAt(root, v))
+    val kept = bodies.takeRight(keepLast)
+    def refs(bs: Seq[(Long, Map[String, String])],
+        dn: String): Set[(Long, Int)] =
+      bs.flatMap { case (v, b) => entriesOf(b, root, v, dn) }
+        .map(e => (e.gen, e.part)).toSet
+    val everReferenced = dataNames.map { case (dn, _) =>
+      dn -> refs(bodies, dn) }.toMap
+    val retainedPer = dataNames.map { case (dn, _) =>
+      dn -> refs(kept, dn) }.toMap
+    // sidecar-table directories a retained body references (possibly
+    // staged under an expired version's number — `@` refs carry forward)
+    val protectedRefs: Set[(String, String)] = kept.flatMap { case (_, b) =>
+      b.collect {
+        case (k, ref) if k.startsWith("@") => (k.stripPrefix("@"), ref)
       }
-    }
-    // sidecar-table directories a RETAINED marker references (possibly
-    // staged under an expired version's number — `@` refs survive
-    // carry-forward) must outlive the GC below
-    val protectedRefs: Set[(String, String)] = keptPlan.flatMap { v =>
-      val b = VersionedView.markerBody(root, v)
-      if (b.startsWith("{"))
-        parseBody(b).collect {
-          case (k, ref) if k.startsWith("@") => (k.stripPrefix("@"), ref)
-        }
-      else Nil
     }.toSet
     // delete EXACTLY the versions this plan was computed from — a
-    // re-derived horizon would race a concurrent commit and could expire
-    // the just-enriched anchor itself (one snapshot for plan + deletion)
+    // re-derived horizon would race a concurrent commit (one snapshot for
+    // plan + deletion)
     val dead = VersionedView.expireExact(root,
       allVersions.dropRight(keepLast))
     val horizon = System.currentTimeMillis() - inFlightGraceMs
@@ -882,12 +723,10 @@ object ManifestedPartitions {
     // tables and OCC losers' abandoned stages — everything no retained
     // marker references, aged past the grace window so an IN-FLIGHT
     // commit's freshly staged table survives (same shield as staged
-    // generations above). Plain legacy `v=<n>` table dirs were already
-    // removed by VersionedView.expire for dead versions.
+    // generations above)
     val rootSt = Files.list(Paths.get(root))
     val sidecarDirs = try rootSt.iterator().asScala.toList
       .filter(d => Files.isDirectory(d) &&
-        !d.getFileName.toString.startsWith("v=") &&
         d.getFileName.toString != "_commits")
     finally rootSt.close()
     sidecarDirs.foreach { d =>

@@ -8,9 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * persisted materialized view needs on object storage, where a job can
   * die mid-write and "directory rename" is not atomic across files:
   *
-  *   - data for version v lands under `<path>/v=<v>/` FIRST;
-  *   - the zero-byte marker `<path>/_commits/<v>` is written LAST, staged
-  *     as a dotfile and moved into place atomically — the marker IS the
+  *   - data for version v lands FIRST — under `<path>/v=<v>/` for a
+  *     single-table view ([[commit]]), or wherever the marker body of a
+  *     manifested root (ManifestedPartitions) points;
+  *   - the marker `<path>/_commits/<v>` is written LAST, staged as a
+  *     dotfile and moved ([[mark]]) or linked ([[tryMark]], the
+  *     compare-and-swap form) into place atomically — the marker IS the
   *     commit point;
   *   - readers resolve `latestVersion` from the marker directory ONLY, so
   *     a torn write (data files present, no marker — the crash shape) is
@@ -34,34 +37,6 @@ object VersionedView {
     mark(path, v)
   }
 
-  /** Commit SEVERAL named tables as one version under ONE marker — each
-    * table lands at `<path>/<name>/v=<v>` first; the single marker
-    * commits them all atomically. Since r18 this is the FROZEN
-    * LEGACY-format writer: the default lifecycle path stages sidecar
-    * tables writer-unique and references them from the CAS marker body
-    * instead (ManifestedPartitions.commitManifestsCas), because two
-    * racing commitTables stagers clobber each other's `v=<v>` files
-    * before either marks. Retained for pre-CAS artifacts: readers
-    * (readTable / ManifestedPartitions.readSidecarTable) still resolve
-    * this layout, and retention GC migrates reachable legacy tables into
-    * its enrichment anchor before deleting their versions.
-    */
-  def commitTables(tables: Map[String, DataFrame], path: String,
-      v: Long): Unit = {
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$path/$name/v=$v")
-    }
-    mark(path, v)
-  }
-
-  /** Snapshot read of one table of a [[commitTables]] version. */
-  def readTable(spark: SparkSession, path: String, name: String,
-      v: Long): DataFrame = {
-    require(Files.exists(Paths.get(path, "_commits", v.toString)),
-      s"version $v of $path is not committed")
-    spark.read.parquet(s"$path/$name/v=$v")
-  }
-
   /** All COMMITTED versions, ascending (marker-backed only). */
   def committedVersions(path: String): Seq[Long] = {
     import scala.jdk.CollectionConverters._
@@ -80,41 +55,26 @@ object VersionedView {
     * committed versions, physically delete everything below the horizon.
     * Order is marker FIRST, data second — the marker delete is the
     * "retire" point, so a reader racing the expiry (or arriving after a
-    * crash mid-expiry) fails the [[readVersion]]/[[readTable]] commit
-    * check LOUDLY instead of silently serving a half-deleted snapshot.
-    * Data dirs are removed for both layouts: `<path>/v=<k>` (single-table
-    * [[commit]]) and `<path>/<table>/v=<k>` ([[commitTables]]). Returns
-    * the expired versions, ascending.
+    * crash mid-expiry) fails the [[readVersion]] commit check LOUDLY
+    * instead of silently serving a half-deleted snapshot. Returns the
+    * expired versions, ascending.
     */
   def expire(path: String, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     expireExact(path, committedVersions(path).dropRight(keepLast))
   }
 
-  /** Expire an EXPLICIT version list — the form a caller that planned its
-    * GC against a captured snapshot must use: recomputing the horizon
-    * here from `committedVersions` would race a concurrent writer's
-    * commit, shifting the horizon past the version the caller just
-    * pinned carry-forward state into (ManifestedPartitions.expire's
-    * enrichment anchor). Plan and deletion share ONE snapshot.
+  /** Expire an EXPLICIT version list: each marker, then its `v=<v>` data
+    * directory (absent on a manifested root, whose data ManifestedPartitions
+    * GCs itself). A caller that planned its GC against a captured snapshot
+    * must use this form — recomputing the horizon here from
+    * `committedVersions` would race a concurrent writer's commit. Plan and
+    * deletion share ONE snapshot.
     */
   def expireExact(path: String, dead: Seq[Long]): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    if (dead.isEmpty) return Nil
-    // table dirs of the commitTables layout: any child that is neither a
-    // version dir nor the marker dir
-    val tableDirs = {
-      val st = Files.list(Paths.get(path))
-      try st.iterator().asScala.toList
-        .filter(d => Files.isDirectory(d) &&
-          !d.getFileName.toString.startsWith("v=") &&
-          d.getFileName.toString != "_commits")
-      finally st.close()
-    }
     dead.foreach { v =>
       Files.deleteIfExists(Paths.get(path, "_commits", v.toString))
       deleteDir(Paths.get(path, s"v=$v"))
-      tableDirs.foreach(t => deleteDir(t.resolve(s"v=$v")))
     }
     dead
   }
@@ -181,27 +141,8 @@ object VersionedView {
     } finally Files.deleteIfExists(staging)
   }
 
-  /** Atomically REPLACE an existing committed marker's body — retention
-    * GC's enrichment step only (pinning carry-forward state into the
-    * oldest retained version before the older markers are deleted). The
-    * replacement must be semantically inert: it resolves to the same
-    * snapshot the original did. Never a commit path — commits go through
-    * [[mark]]/[[tryMark]].
-    */
-  def rewriteMarker(path: String, v: Long, body: String): Unit = {
-    val commits = Paths.get(path, "_commits")
-    val marker = commits.resolve(v.toString)
-    require(Files.exists(marker),
-      s"cannot rewrite uncommitted version $v at $path")
-    val staging = commits.resolve(
-      s".$v.${java.util.UUID.randomUUID()}.enrich.staging")
-    Files.writeString(staging, body)
-    Files.move(staging, marker,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** The committed marker's content (empty-bodied markers carry the
-    * version number; OCC index commits carry their manifest).
+  /** The committed marker's content: the version number for a
+    * single-table view, the manifests and sidecars of a manifested root.
     */
   def markerBody(path: String, v: Long): String = {
     val marker = Paths.get(path, "_commits", v.toString)

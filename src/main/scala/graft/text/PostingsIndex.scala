@@ -18,14 +18,12 @@ import graft.sources.{ManifestedPartitions, VersionedView}
   *     so a query's term lookups statically PRUNE the scan to exactly the
   *     probed buckets' live directories (≈ |query| of n_buckets buckets)
   *     instead of rescanning the corpus;
-  *   - `<path>/stats`: one row (n_docs, total_dl, n_buckets) — the corpus
-  *     statistics BM25's idf/avgdl need, persisted so a probe never
-  *     recomputes them from the postings (which would be a full scan) —
-  *     committed as a SIDECAR TABLE of the postings manifest, under the
-  *     SAME marker (r15 verdict order #1: the old staged-move stats swap
-  *     had a window with no stats directory at all; now a maintenance
-  *     commit lands postings manifest + stats atomically or not at all,
-  *     and a torn run leaves the previous snapshot of BOTH fully live).
+  *   - the corpus statistics (n_docs, total_dl, n_buckets) BM25's
+  *     idf/avgdl need, persisted so a probe never recomputes them from
+  *     the postings (which would be a full scan) — committed as scalars
+  *     in the SAME marker body as the postings manifest, so a maintenance
+  *     commit lands postings + stats atomically or not at all, and a torn
+  *     run leaves the previous snapshot of BOTH fully live.
   *
   * Determinism contract: tf/dl/df and the corpus stats are integers that
   * round-trip parquet exactly, and the probe scores them through the SAME
@@ -40,17 +38,15 @@ object PostingsIndex {
   private val Tb = "tb"
   private val StatsName = "stats"
 
-  /** The 1-row corpus statistics BM25 scoring needs. Committed either as
-    * a parquet sidecar table under the postings manifest's marker
-    * (single-writer path) or serialized INTO an OCC marker body
-    * ([[statsScalars]] — r16 verdict order #3, so racing maintenance
-    * writers can carry the stats through the same atomic CAS as the
-    * manifest).
+  /** The 1-row corpus statistics BM25 scoring needs, committed as the
+    * `~stats` scalar sidecar IN the marker body ([[statsScalars]]) — so
+    * racing maintenance writers carry the stats through the same atomic
+    * CAS as the postings manifest.
     */
   case class Stats(nDocs: Long, totalDl: Long, nBuckets: Int)
 
   /** Marker-body encoding of a stats row for
-    * ManifestedPartitions.tryCommitManifests' `sidecarScalars`.
+    * ManifestedPartitions.commitManifestsCas' `sidecarScalars`.
     */
   def statsScalars(st: Stats): Seq[(String, Long)] =
     Seq("n_docs" -> st.nDocs, "total_dl" -> st.totalDl,
@@ -74,9 +70,8 @@ object PostingsIndex {
       pmod(xxhash64(col("w")), lit(nBuckets.toLong)).cast("int"))
 
   /** Build + persist the index for `docs` at `path` (overwrites): the
-    * initial postings generation, the stats (as marker-body scalars —
-    * since r18 EVERY commit carries them there, so single-writer and OCC
-    * paths share one storage form), and an empty applied-batches ledger
+    * initial postings generation, the stats (as marker-body scalars),
+    * and an empty applied-batches ledger
     * (the streaming exactly-once channel, [[ingestBatch]]) land under ONE
     * manifest commit.
     */
@@ -112,37 +107,21 @@ object PostingsIndex {
     rows.toDF("batch_id", "in_v", "out_v")
   }
 
-  /** The committed corpus statistics at the latest (or pinned) version.
-    * Resolves BOTH storage forms: the parquet sidecar table of a
-    * single-writer commit, and the marker-body scalars of an OCC commit;
-    * an OCC marker that omitted the stats carries forward the previous
-    * version's (the manifest carry-forward discipline, ADVICE r16).
+  /** The committed corpus statistics at the latest (or pinned) version —
+    * the `~stats` scalars of that version's marker body.
     */
   def readStats(spark: SparkSession, path: String,
       version: Option[Long] = None): Stats = {
     val v = version.orElse(VersionedView.latestVersion(path)).getOrElse(
       throw new IllegalStateException(s"no committed index at $path"))
-    statsAt(spark, path, v)
+    statsAt(path, v)
   }
 
-  private def statsAt(spark: SparkSession, path: String, v: Long): Stats =
-    if (ManifestedPartitions.isOccVersion(path, v))
-      ManifestedPartitions.readSidecarScalars(path, StatsName, v) match {
-        case Some(m) =>
-          Stats(m("n_docs"), m("total_dl"), m("n_buckets").toInt)
-        case None =>
-          val prev = VersionedView.committedVersions(path).filter(_ < v)
-          if (prev.nonEmpty) statsAt(spark, path, prev.max)
-          else statsTableAt(spark, path, v) // legacy / GC-materialized
-      }
-    else statsTableAt(spark, path, v)
-
-  private def statsTableAt(spark: SparkSession, path: String,
-      v: Long): Stats = {
-    val r = VersionedView.readTable(spark, path, StatsName, v).collect()(0)
-    Stats(r.getLong(r.fieldIndex("n_docs")),
-      r.getLong(r.fieldIndex("total_dl")),
-      r.getInt(r.fieldIndex("n_buckets")))
+  private def statsAt(path: String, v: Long): Stats = {
+    val m = ManifestedPartitions.readSidecarScalars(path, StatsName, v)
+      .getOrElse(throw new IllegalStateException(
+        s"version $v marker at $path has no key ~$StatsName"))
+    Stats(m("n_docs"), m("total_dl"), m("n_buckets").toInt)
   }
 
   /** APPEND a document batch WITHOUT rebuilding: the batch's postings are
@@ -169,7 +148,7 @@ object PostingsIndex {
       ManifestedPartitions.writeGen(posts, path, Postings, Tb,
         ManifestedPartitions.freshGen())
     ManifestedPartitions.retryingCommit(path) { (inV, outV) =>
-      val st = statsAt(spark, path, inV)
+      val st = statsAt(path, inV)
       ManifestedPartitions.commitManifestsCas(spark, path, outV,
         Map(Postings ->
           (ManifestedPartitions.readEntries(spark, path, Postings, inV)
@@ -223,7 +202,7 @@ object PostingsIndex {
       if (prior2.nonEmpty) Some(prior2(0).getAs[Long]("out_v"))
       else {
         val (batch, written) = stage()
-        val st = statsAt(spark, path, inV)
+        val st = statsAt(path, inV)
         val appliedOut = applied
           .unionByName(appliedDf(spark, Seq((batchId, inV, outV))))
         if (ManifestedPartitions.commitManifestsCas(spark, path, outV,
@@ -271,7 +250,7 @@ object PostingsIndex {
         .collect().map(_.getInt(0)).toSeq // bounded by the delete batch
       if (affected.isEmpty) Some(0L)
       else {
-        val st = statsAt(spark, path, inV)
+        val st = statsAt(path, inV)
         val merged = ManifestedPartitions.stageRewriteAt(
           spark, path, Postings, Tb, affected,
           df => df.join(broadcast(ts), df("id") === ts("doc_id"),
@@ -311,7 +290,7 @@ object PostingsIndex {
     // commit path's auto-carry-forward — compaction is physical only, so
     // re-reading them here would only risk installing a stale copy under
     // a race (the exact lost update r18 order #1 closes)
-    ManifestedPartitions.compact(spark, path, Postings, Tb)
+    ManifestedPartitions.compact(spark, path, Seq((Postings, Tb)))
 
   /** RETENTION GC: expire manifest versions below the keep-horizon and
     * delete unreferenced postings generations — where deleted documents'
@@ -370,7 +349,7 @@ object PostingsIndex {
     // with another's postings)
     val v = version.orElse(VersionedView.latestVersion(path)).getOrElse(
       throw new IllegalStateException(s"no committed index at $path"))
-    val st = statsAt(spark, path, v)
+    val st = statsAt(path, v)
     // consumed twice (as the tf rows and for the per-term df counts) —
     // materialize once so the pruned scan doesn't re-run (ADVICE r14
     // pattern)

@@ -5,22 +5,19 @@ import java.nio.file.{Files, Paths}
 import graft.similarity.IvfIndex
 import graft.sources.{ManifestedPartitions => MP, VersionedView}
 
-/** CAS-BY-DEFAULT commit protocol (r18, verdict order #1) + the
-  * carry-forward cap (order #5) + the expire enrichment (ADVICE r17).
-  * Protocol-level pins independent of any index family:
+/** CAS-BY-DEFAULT commit protocol (r18, verdict order #1) + complete
+  * marker bodies. Protocol-level pins independent of any index family:
   *
   *   - two INDEPENDENT writers racing the DEFAULT lifecycle APIs (no
   *     stageRewriteAt choreography) serialize: one winner per version,
   *     gapless chain, both writers' effects land — the REPLACE_EXISTING
   *     lost-update of the r17 protocol is structurally gone;
-  *   - commit-time AUTO-CARRY-FORWARD keeps every marker body COMPLETE:
-  *     a long single-dataset-touching history resolves the untouched
+  *   - commit-time CARRY-FORWARD keeps every marker body COMPLETE: a
+  *     long single-dataset-touching history resolves the untouched
   *     dataset with ZERO walk over older markers (proven by physically
-  *     removing them);
-  *   - retention GC ENRICHES the oldest retained marker with the
-  *     dataset/scalar/table keys only older markers carried, so
-  *     carry-forward state survives the horizon (the r16 manifest fix
-  *     generalized to scalar and table sidecars);
+  *     removing them), and every body of a mixed history holds every
+  *     dataset, scalar and table key — also after retention GC;
+  *   - scalar sidecars committed only below the horizon survive GC;
   *   - version-nonce sidecar-table directories are GC'd exactly when no
   *     retained marker references them.
   */
@@ -72,11 +69,13 @@ class CasDefaultSpec extends SparkSpec {
     val stage = Files.createTempDirectory("graft_cas_carry")
     val root = stage.toString
     try {
-      // two datasets under one v1 marker
+      // two datasets, a sidecar table and scalars under one v1 marker
       val e1 = MP.writeGen(df(1 -> 0), root, "a", "p", 1L)
       val e2 = MP.writeGen(df(7 -> 0), root, "b", "p", 1L)
       assert(MP.commitManifestsCas(spark, root, 1L,
-        Map("a" -> e1, "b" -> e2)))
+        Map("a" -> e1, "b" -> e2),
+        sidecarTables = Map("t" -> Seq(42L).toDF("n")),
+        sidecarScalars = Map("stats" -> Seq("n" -> 5L))))
       // a 25-commit history touching ONLY dataset a through the default
       // API (the shape whose carry-forward chain used to grow unbounded)
       (0 until 25).foreach { i =>
@@ -103,6 +102,32 @@ class CasDefaultSpec extends SparkSpec {
         Files.move(hidden.resolve(v.toString),
           Paths.get(root, "_commits", v.toString))
       }
+      // a mixed history keeps EVERY body complete: a one-dataset rewrite
+      // of b, then a compaction that rewrites only a (b is not
+      // fragmented), then retention GC down to the head
+      def assertComplete(): Unit =
+        VersionedView.committedVersions(root).foreach { v =>
+          val body = VersionedView.markerBody(root, v)
+          Seq("a", "b", "~stats", "@t").foreach { k =>
+            assert(body.contains("\"" + k + "\":\""),
+              s"version $v body lacks key $k: $body")
+          }
+        }
+      MP.rewrite(spark, root, "b", "p", Seq(0), identity)
+      assert(MP.compact(spark, root, Seq(("a", "p"), ("b", "p"))) == 1)
+      assertComplete()
+      val (expired, _) = MP.expire(spark, root,
+        Seq(("a", "p"), ("b", "p")), keepLast = 1, inFlightGraceMs = 0L)
+      assert(expired == (1L to head + 1))
+      assert(VersionedView.committedVersions(root) == Seq(head + 2))
+      assertComplete()
+      assert(MP.readSidecarTable(spark, root, "t", head + 2)
+        .collect()(0).getLong(0) == 42L)
+      assert(MP.readSidecarScalars(root, "stats", head + 2)
+        .contains(Map("n" -> 5L)))
+      assert(MP.readLatest(spark, root, "a", "p").count() == 26)
+      assert(MP.readLatest(spark, root, "b", "p")
+        .select("x").collect().map(_.getInt(0)).toSeq == Seq(7))
     } finally IvfIndex.deleteDir(root)
   }
 
@@ -162,53 +187,18 @@ class CasDefaultSpec extends SparkSpec {
       val e1 = MP.writeGen(df(1 -> 0), root, "d", "p", 1L)
       assert(MP.commitManifestsCas(spark, root, 1L, Map("d" -> e1),
         sidecarScalars = Map("stats" -> Seq("n" -> 5L, "t" -> 9L))))
-      // a raw OCC commit OMITTING the stats (the poisoned-after-expire
-      // shape: its reads carry forward to v1's body)
+      // a commit that does not pass the stats (the shape that was
+      // poisoned after expire while bodies could omit keys)
       val e2 = MP.stageRewriteAt(spark, root, "d", "p", Seq(0),
         identity, snapshotV = 1L, gen = 2L)
-      assert(MP.tryCommitManifests(root, 2L, Map("d" -> e2)))
-      assert(MP.readSidecarScalars(root, "stats", 2L).isEmpty,
-        "v2 body unexpectedly carries stats — test setup is vacuous")
+      assert(MP.commitManifestsCas(spark, root, 2L, Map("d" -> e2)))
       val (expired, _) = MP.expire(spark, root, Seq(("d", "p")),
         keepLast = 1, inFlightGraceMs = 0L)
       assert(expired == Seq(1L))
-      // the enriched v2 marker now carries the stats itself
+      // the v2 marker carries the stats itself
       assert(MP.readSidecarScalars(root, "stats", 2L)
         .contains(Map("n" -> 5L, "t" -> 9L)),
         "expire did not pin the carried-forward scalars into the horizon")
-    } finally IvfIndex.deleteDir(root)
-  }
-
-  test("retention GC MIGRATES carry-forward-reachable LEGACY sidecar " +
-    "tables into the anchor before deleting their versions") {
-    val stage = Files.createTempDirectory("graft_cas_legacy")
-    val root = stage.toString
-    try {
-      // a PRE-CAS history: v1 committed through the frozen legacy writer
-      // (manifest as a parquet table + a sidecar table at `view/v=1`)
-      val e1 = MP.writeGen(df(1 -> 0), root, "d", "p", 1L)
-      VersionedView.commitTables(Map(
-        "d_manifest" -> e1.map(e => (e.part, e.gen, e.files, e.rows))
-          .toDF("part", "gen", "files", "rows").coalesce(1),
-        "view" -> Seq(42L).toDF("n").coalesce(1)), root, 1L)
-      // one r18 CAS commit touching only the dataset: its body cannot
-      // auto-carry from the body-less legacy v1, so `view` stays
-      // reachable ONLY via the carry-forward walk to v1
-      val e2 = MP.stageRewriteAt(spark, root, "d", "p", Seq(0),
-        identity, snapshotV = 1L, gen = 2L)
-      MP.commitManifests(spark, root, 2L, Map("d" -> e2))
-      assert(MP.readSidecarTable(spark, root, "view", 2L)
-        .collect()(0).getLong(0) == 42L, "pre-GC legacy walk broken")
-      // GC to keepLast=1: without migration this deletes view/v=1 while
-      // v2 still resolves to it — permanent data loss + poisoned reads
-      MP.expire(spark, root, Seq(("d", "p")), keepLast = 1,
-        inFlightGraceMs = 0L)
-      assert(VersionedView.markerBody(root, 2L).contains("\"@view\":\""),
-        "enrichment did not install the migrated table reference")
-      assert(MP.readSidecarTable(spark, root, "view", 2L)
-        .collect()(0).getLong(0) == 42L,
-        "legacy sidecar table unreachable after GC")
-      assert(MP.readLatest(spark, root, "d", "p").count() == 1)
     } finally IvfIndex.deleteDir(root)
   }
 

@@ -136,7 +136,7 @@ class ManifestedPartitionsSpec extends SparkSpec {
       // the appended generation carries a writer-unique id (r18)
       val appendGen = MP.readEntries(spark, root, "d", 2L)
         .map(_.gen).filter(_ != 1L).head
-      MP.compact(spark, root, "d", "p") // v3: p=0 rewritten to a new gen
+      MP.compact(spark, root, Seq(("d", "p"))) // v3: p=0 rewritten to a new gen
       val latest = MP.readLatest(spark, root, "d", "p")
         .select("x").collect().map(_.getInt(0)).sorted.toSeq
       assert(latest == Seq(1, 2, 3))
@@ -155,7 +155,7 @@ class ManifestedPartitionsSpec extends SparkSpec {
         .select("x").collect().map(_.getInt(0)).sorted.toSeq == latest)
       // below-horizon access fails loudly, not half-served
       intercept[IllegalArgumentException] {
-        VersionedView.readTable(spark, root, "d_manifest", 1L)
+        MP.readEntries(spark, root, "d", 1L)
       }
       intercept[IllegalArgumentException] {
         VersionedView.readVersion(spark, root, 2L)
@@ -196,7 +196,7 @@ class ManifestedPartitionsSpec extends SparkSpec {
           "liveStats touched the (hidden) data directories")
       } finally Files.move(stage.resolve("d__hidden"), stage.resolve("d"))
       // and the planned compaction then actually runs
-      MP.compact(spark, root, "d", "p")
+      MP.compact(spark, root, Seq(("d", "p")))
       assert(MP.liveStats(spark, root, "d").forall(_._2._1 == 1),
         "compaction left a fragmented partition")
       assert(MP.readLatest(spark, root, "d", "p")
@@ -235,11 +235,11 @@ class ManifestedPartitionsSpec extends SparkSpec {
       val e1 = MP.writeGen(df(1 -> 0, 2 -> 1), root, "a", "p", 1L)
       val e2 = MP.writeGen(df(7 -> 0), root, "b", "p", 1L)
       MP.commitManifests(spark, root, 1L, Map("a" -> e1, "b" -> e2))
-      // an OCC commit touching ONLY dataset a (tryCommitManifests accepts
-      // any subset — the shape that used to poison readEntries/expire)
+      // a commit touching ONLY dataset a (the shape that used to poison
+      // readEntries/expire)
       val e1b = MP.stageRewriteAt(spark, root, "a", "p", Seq(0),
         identity, snapshotV = 1L, gen = 2L)
-      assert(MP.tryCommitManifests(root, 2L, Map("a" -> e1b)))
+      assert(MP.commitManifestsCas(spark, root, 2L, Map("a" -> e1b)))
       // dataset b at v2 = its v1 entries, carried forward
       assert(MP.readEntries(spark, root, "b", 2L) == e2,
         "carry-forward read of the omitted dataset failed")
@@ -253,6 +253,27 @@ class ManifestedPartitionsSpec extends SparkSpec {
       assert(MP.readLatest(spark, root, "b", "p").count() == 1,
         "GC deleted the carried-forward dataset's live generation")
       assert(MP.readLatest(spark, root, "a", "p").count() == 2)
+    } finally IvfIndex.deleteDir(root)
+  }
+
+  test("reading a key the marker body lacks throws IllegalStateException " +
+    "naming root, version and key — no walk back to earlier markers") {
+    val stage = Files.createTempDirectory("graft_mp_missing")
+    val root = stage.toString
+    try {
+      MP.init(df(1 -> 0), root, "d", "p")
+      MP.append(spark, root, "d", "p", df(2 -> 0))
+      val noData = intercept[IllegalStateException] {
+        MP.readEntries(spark, root, "nope", 2L)
+      }
+      assert(noData.getMessage.contains(root) &&
+        noData.getMessage.contains("version 2") &&
+        noData.getMessage.contains("nope"), noData.getMessage)
+      val noTable = intercept[IllegalStateException] {
+        MP.readSidecarTable(spark, root, "view", 2L)
+      }
+      assert(noTable.getMessage.contains("@view"), noTable.getMessage)
+      assert(MP.readSidecarScalars(root, "stats", 2L).isEmpty)
     } finally IvfIndex.deleteDir(root)
   }
 

@@ -15,7 +15,7 @@ import graft.sources.{ManifestedPartitions => MP, VersionedView}
   * writer-unique generation ids, zero-file entries, empty manifests,
   * empty scalar lists) would corrupt snapshots silently. Generated with
   * ScalaCheck Gens, evaluated through the REAL commit/read path
-  * (tryCommitManifests → readEntries / readSidecarScalars on disk).
+  * (commitManifestsCas → readEntries / readSidecarScalars on disk).
   */
 class MarkerBodyPropertySpec extends SparkSpec {
 
@@ -50,9 +50,10 @@ class MarkerBodyPropertySpec extends SparkSpec {
         genScalars)).sample.get
       sample.zipWithIndex.foreach { case ((ea, eb, kvs), i) =>
         val v = i + 1L
-        assert(MP.tryCommitManifests(root, v,
+        assert(MP.commitManifestsCas(spark, root, v,
           Map("alpha" -> ea, "beta" -> eb),
-          Map("stats" -> kvs)), s"CAS lost on a fresh version $v")
+          sidecarScalars = Map("stats" -> kvs)),
+          s"CAS lost on a fresh version $v")
         assert(MP.readEntries(spark, root, "alpha", v) == ea.sortBy(e => (e.part, e.gen)),
           s"alpha entries did not round-trip at v=$v")
         assert(MP.readEntries(spark, root, "beta", v) == eb.sortBy(e => (e.part, e.gen)),
@@ -71,8 +72,8 @@ class MarkerBodyPropertySpec extends SparkSpec {
     val stage = Files.createTempDirectory("graft_body_empty")
     val root = stage.toString
     try {
-      assert(MP.tryCommitManifests(root, 1L, Map("d" -> Nil),
-        Map("stats" -> Nil)))
+      assert(MP.commitManifestsCas(spark, root, 1L, Map("d" -> Nil),
+        sidecarScalars = Map("stats" -> Nil)))
       assert(MP.readEntries(spark, root, "d", 1L).isEmpty)
       assert(MP.readSidecarScalars(root, "stats", 1L)
         .contains(Map.empty[String, Long]))

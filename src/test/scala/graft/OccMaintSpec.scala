@@ -17,9 +17,7 @@ import graft.sources.{ManifestedPartitions => MP, VersionedView}
   *   - the loser's retry against the winner's snapshot lands BOTH
   *     writers' effects;
   *   - the abandoned staged generation is garbage: unreferenced by any
-  *     committed manifest and physically removed by expire;
-  *   - marker-embedded (OCC) and parquet-table (single-writer) manifests
-  *     interoperate in one version history — readers are agnostic.
+  *     committed manifest and physically removed by expire.
   */
 class OccMaintSpec extends SparkSpec {
 
@@ -43,8 +41,8 @@ class OccMaintSpec extends SparkSpec {
       val w2 = MP.stageRewriteAt(spark, root, "d", "p", Seq(0),
         _.filter(col("x") =!= 2), snapshotV = 2L, gen = 102L)
 
-      assert(MP.tryCommitManifests(root, 3L, Map("d" -> w1)), "W1 lost?")
-      assert(!MP.tryCommitManifests(root, 3L, Map("d" -> w2)),
+      assert(MP.commitManifestsCas(spark, root, 3L, Map("d" -> w1)), "W1 lost?")
+      assert(!MP.commitManifestsCas(spark, root, 3L, Map("d" -> w2)),
         "W2's conflicting commit was NOT rejected — lost update")
 
       // v3 is the WINNER's manifest: references gen 101, never 102
@@ -58,7 +56,7 @@ class OccMaintSpec extends SparkSpec {
       // loser retries from v3 — both effects in v4
       val w2r = MP.stageRewriteAt(spark, root, "d", "p", Seq(0),
         _.filter(col("x") =!= 2), snapshotV = 3L, gen = 103L)
-      assert(MP.tryCommitManifests(root, 4L, Map("d" -> w2r)))
+      assert(MP.commitManifestsCas(spark, root, 4L, Map("d" -> w2r)))
       assert(MP.readLatest(spark, root, "d", "p")
         .select("x").collect().map(_.getInt(0)).sorted.toSeq
         == Seq(1, 3, 4), "retry lost the delete or a compacted row")
@@ -120,11 +118,11 @@ class OccMaintSpec extends SparkSpec {
             val staged = MP.stageRewriteAt(spark, root, "d", "p", Seq(0),
               transform, snapshotV = 2L, gen = gen1)
             gate.await(30, TimeUnit.SECONDS)
-            val won = MP.tryCommitManifests(root, 3L, Map("d" -> staged))
+            val won = MP.commitManifestsCas(spark, root, 3L, Map("d" -> staged))
             if (!won) {
               val restaged = MP.stageRewriteAt(spark, root, "d", "p",
                 Seq(0), transform, snapshotV = 3L, gen = gen2)
-              require(MP.tryCommitManifests(root, 4L, Map("d" -> restaged)),
+              require(MP.commitManifestsCas(spark, root, 4L, Map("d" -> restaged)),
                 "loser's retry at v4 failed — a third writer?")
             }
             won

@@ -205,7 +205,7 @@ class PostingsIndexSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSeq
       // an OCC maintenance commit: delete doc 4, stats decremented in
-      // the MARKER BODY (no parquet stats table at v2)
+      // the MARKER BODY
       val ts = Seq(4L).toDF("doc_id").localCheckpoint(true)
       val dead = ManifestedPartitions.readLatest(spark, root,
           "postings", "tb")
@@ -220,9 +220,9 @@ class PostingsIndexSpec extends SparkSpec {
           "left_anti"),
         snapshotV = 1L, gen = 2L)
       val st2 = PostingsIndex.decrementStats(st1, dead)
-      assert(ManifestedPartitions.tryCommitManifests(root, 2L,
+      assert(ManifestedPartitions.commitManifestsCas(spark, root, 2L,
         Map("postings" -> merged),
-        Map("stats" -> PostingsIndex.statsScalars(st2))))
+        sidecarScalars = Map("stats" -> PostingsIndex.statsScalars(st2))))
       // no parquet stats table exists for v2, yet readStats resolves it
       assert(!Files.exists(stage.resolve("stats").resolve("v=2")))
       assert(PostingsIndex.readStats(spark, root)
@@ -240,8 +240,7 @@ class PostingsIndexSpec extends SparkSpec {
       assert(vals(root) == vals(rebuilt.toString),
         "OCC-committed probe diverged from the rebuild")
       IvfIndex.deleteDir(rebuilt.toString)
-      // the version-PINNED probe still serves v1 (parquet-stats form) —
-      // the two storage forms interoperate in one history
+      // the version-PINNED probe still serves v1 with v1's stats
       assert(vals(root, Some(1L)) == before,
         "pinned v1 probe changed after the OCC commit")
     } finally IvfIndex.deleteDir(root)
