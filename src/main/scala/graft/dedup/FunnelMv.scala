@@ -148,37 +148,22 @@ object FunnelMv {
 
   /** VACUUM a tombstone batch out of the persisted index: physically
     * rewrite ONLY the fp-buckets holding deleted docs (GDPR-style removal
-    * — a logical tombstone list is not deletion; the bytes must go). The
-    * affected-bucket discovery is a column-pruned (doc_id, fpb) scan
-    * joined to the tombstones — at cluster scale a doc_id-keyed sidecar
-    * or fp-carrying delete feed makes even that probe-local — and the
-    * rewrite is ManifestedPartitions' partition-pruned anti-join into a
-    * fresh generation under a marker-last manifest commit: untouched
-    * buckets' files are never opened, a fully-tombstoned bucket simply
+    * — a logical tombstone list is not deletion; the bytes must go) —
+    * ManifestedPartitions.delete keyed by `doc_id`. At cluster scale a
+    * doc_id-keyed sidecar or fp-carrying delete feed makes even the
+    * affected-bucket discovery probe-local. A fully-tombstoned bucket
     * drops out of the manifest, a crash at any point leaves the
     * pre-vacuum snapshot intact, and keep-first succession needs no
-    * special casing because dead rows are gone from every later
-    * snapshot read (their bytes are removed once retention GC passes
-    * the time-travel horizon). Returns the number of rows purged.
+    * special casing because dead rows are gone from every later snapshot
+    * read (their bytes are removed once retention GC passes the
+    * time-travel horizon). Returns the number of rows purged; tombstones
+    * are deduplicated first, so a repeated doc_id cannot inflate it
+    * (q_pipeline_incr_vacuum pins before - after == purged).
     */
   def vacuum(spark: SparkSession, path: String,
-      tombstones: DataFrame): Long = {
-    import graft.sources.ManifestedPartitions
-    // deduplicate first: a repeated doc_id in the batch must not inflate
-    // the purge count (ADVICE r15 — q_pipeline_incr_vacuum pins
-    // before - after == purged)
-    val ts = tombstones.select("doc_id").distinct().localCheckpoint(true)
-    val dead = readDocIndex(spark, path)
-      .select("doc_id", "fpb") // column-pruned: never reads fp/flags
-      .join(broadcast(ts), Seq("doc_id"))
-      .localCheckpoint(true) // consumed twice (bucket list + purge count)
-    val affected = dead.select("fpb").distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded by the delete batch
-    if (affected.isEmpty) return 0L
-    ManifestedPartitions.rewrite(spark, path, "docindex", "fpb", affected,
-      df => df.join(broadcast(ts), Seq("doc_id"), "left_anti"))
-    dead.count()
-  }
+      tombstones: DataFrame): Long =
+    graft.sources.ManifestedPartitions.delete(spark, path,
+      Seq(("docindex", "fpb")), "doc_id", tombstones)()
 
   /** Apply an insert batch: within-batch keep-first, anti-probe against
     * the PERSISTED fingerprint index, per-doc gates on the survivors, add
@@ -229,16 +214,17 @@ object FunnelMv {
   }
 
   // ------------------------------------------------------------------
-  // VERSIONED STREAMING LIFECYCLE (r17, verdict order #1). The r16
-  // streaming ingest committed each micro-batch's fingerprints as a NEW
-  // VersionedView table and re-assembled the full fp index by unioning
-  // versions 1..V per batch — O(V) table opens per batch, O(V²) over the
-  // stream: a real outage at 10k micro-batches. Here the fp index is ONE
-  // fp-bucketed ManifestedPartitions dataset: a batch's fps land as one
-  // GENERATION under the same marker as the updated view (+ the applied-
-  // batches ledger), the anti-probe statically prunes to the batch's fp
-  // buckets, and scheduled compaction folds the generations — per-batch
-  // cost depends on the compaction cadence, never on stream age.
+  // VERSIONED STREAMING LIFECYCLE. The fp index is ONE fp-bucketed
+  // ManifestedPartitions dataset under the root, and the funnel view and
+  // the applied-batches ledger ride its markers as sidecar tables:
+  //   - writeVersioned: base view + fp index + empty ledger as version 1;
+  //   - ingestBatch: a batch's fps land as one GENERATION under the same
+  //     marker as the updated view, exactly once (ManifestedPartitions.
+  //     ingestOnce); its anti-probe statically prunes to the batch's fp
+  //     buckets;
+  //   - compactFps: scheduled compaction folds the generations, so
+  //     per-batch cost depends on the compaction cadence, never on
+  //     stream age.
   // ------------------------------------------------------------------
 
   /** Dataset name of the fp-bucketed fingerprint index. */
@@ -247,13 +233,6 @@ object FunnelMv {
   private def withFpb(df: DataFrame, nBuckets: Int): DataFrame =
     df.withColumn("fpb",
       pmod(xxhash64(col("fp")), lit(nBuckets.toLong)).cast("int"))
-
-  private def appliedDf(spark: SparkSession,
-      rows: Seq[(Long, Long, Long)]): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    rows.toDF("batch_id", "in_v", "out_v")
-  }
 
   /** Materialize base view + fp-bucketed fp index + empty applied-batches
     * ledger at `root` as version 1 — ONE marker commits all three
@@ -272,7 +251,8 @@ object FunnelMv {
       withFpb(withFp.select("fp").distinct(), nBuckets),
       root, FpsData, "fpb",
       sidecars = Map("view" -> view.coalesce(1),
-        "applied" -> appliedDf(spark, Nil).coalesce(1)))
+        graft.sources.ManifestedPartitions.Applied ->
+          graft.sources.ManifestedPartitions.emptyLedger(spark)))
   }
 
   /** Snapshot read of the funnel view at version `v` — the `@view`
@@ -285,87 +265,49 @@ object FunnelMv {
   /** Snapshot read of the applied-batches ledger at version `v`. */
   def readApplied(spark: SparkSession, root: String, v: Long): DataFrame =
     graft.sources.ManifestedPartitions.readSidecarTable(
-      spark, root, "applied", v)
+      spark, root, graft.sources.ManifestedPartitions.Applied, v)
 
-  /** Ingest micro-batch `batchId` EXACTLY ONCE. The applied-batches
-    * ledger (one coalesced file, one row per ingested batch, carried
-    * under every marker) maps batchId → (input version, output version):
-    * a batch seen for the first time reads the LATEST snapshot and
-    * CAS-commits latest+1, retrying on a lost race (an independent
-    * compactor — or any maintenance job — may take the version first; the
-    * batch re-stages against the winner's snapshot, r18 order #1/#3). A
-    * RE-DELIVERED batch (the crash-between-commit-and-checkpoint shape)
-    * finds its ledger row and SKIPS — its output version is already
-    * committed and immutable, and rewriting a committed generation in
-    * place would transiently break the immutable-generation invariant
-    * for concurrent snapshot readers (ADVICE r17). The ledger decouples
-    * exactly-once from "version = f(batchId)", which is what lets
-    * maintenance commits interleave with the stream. Per-batch reads are
-    * BOUNDED: the view (1 file), the ledger (1 file), the manifest
-    * (marker/driver rows), and the batch's fp buckets' live generations
-    * — never versions 1..V. Returns the committed (or already-committed)
-    * version.
+  /** Ingest micro-batch `batchId` EXACTLY ONCE (ManifestedPartitions.
+    * ingestOnce — a re-delivered batch SKIPS before any fingerprinting or
+    * staging, its output version already committed and immutable). A
+    * first delivery stages the batch's fps ONCE as a writer-unique
+    * generation, then per CAS attempt anti-probes them against that
+    * attempt's fp index and adds the batch's stage counts to that
+    * attempt's view — another writer may have absorbed colliding fps, so
+    * a lost race recomputes both on the winner's snapshot. Per-batch
+    * reads are BOUNDED: the view (1 file), the ledger (1 file), the
+    * manifest (marker/driver rows), and the batch's fp buckets' live
+    * generations — never versions 1..V. Returns the committed (or
+    * already-committed) version.
     */
   def ingestBatch(spark: SparkSession, root: String, batch: DataFrame,
       batchId: Long, nBuckets: Int, minTokens: Int, maxStopword: Double,
       minDistinct: Double, maxTopBigram: Double): Long = {
     import graft.sources.{ManifestedPartitions => MP}
-    // fingerprint + stage LAZILY, inside the retry loop: the loop's
-    // first attempt already reads the ledger at the latest snapshot, so a
-    // separate up-front replay check paid one extra sidecar read + collect
-    // per batch (r18 optimization) — a RE-DELIVERED batch still returns
-    // from the ledger before any fingerprinting or staging happens
-    var stagedFp: Option[(DataFrame, Set[Int], Seq[MP.Entry])] = None
-    def stage(): (DataFrame, Set[Int], Seq[MP.Entry]) = stagedFp.getOrElse {
-      val withFp = batch.select(col("doc_id"), col("text"))
+    lazy val (withFp, bucketSet, written) = {
+      val fps = batch.select(col("doc_id"), col("text"))
         .withColumn("fp", md5(TextAnalysis.normText(col("text"))))
         .localCheckpoint(true)
-      // the batch's fps land ONCE as a writer-unique generation; a lost
-      // version race re-merges the immutable entries (append shape) but
-      // must RECOMPUTE the anti-probe and view update against the
-      // winner's snapshot — another writer may have absorbed colliding fps.
       // newFps is consumed exactly once (this write), so no checkpoint;
       // the anti-probe's bucket set — the BATCH's fp buckets, outside
       // which nothing can collide — is the written generation's own
-      // partition list (writeGen footers), not a second collect job (r19).
-      val newFps = withFpb(withFp.select("fp").distinct(), nBuckets)
-      val written = MP.writeGen(newFps, root, FpsData, "fpb", MP.freshGen())
-      val t = (withFp, written.map(_.part).toSet, written)
-      stagedFp = Some(t)
-      t
+      // partition list (writeGen footers), not a second collect job
+      val newFps = withFpb(fps.select("fp").distinct(), nBuckets)
+      val staged = MP.writeGen(newFps, root, FpsData, "fpb", MP.freshGen())
+      (fps, staged.map(_.part).toSet, staged)
     }
-    MP.retrying(root) { (inV, outV) =>
-      // CHECK the ledger at this attempt's snapshot: a RE-DELIVERED batch
-      // (crash-between-commit-and-checkpoint), or one a second writer
-      // delivered and won the race with (split-brain checkpoint — two
-      // stream writers on one MV), finds its ledger row and SKIPS — its
-      // output version is already committed and immutable
-      // no materialization: the ledger is one coalesced file, so the
-      // replay-check filter and the commit's union re-read it for less
-      // than an eager localCheckpoint job costs
-      val applied = readApplied(spark, root, inV)
-      val prior2 = applied.filter(col("batch_id") === batchId).collect()
-      if (prior2.nonEmpty) Some(prior2(0).getAs[Long]("out_v"))
-      else {
-        val (withFp, bucketSet, written) = stage()
-        // ONE manifest resolution per attempt serves both the pruned
-        // anti-probe and the commit's entry merge
-        val entries = MP.readEntries(spark, root, FpsData, inV)
-        val fpIndex = MP.read(spark, root, FpsData, "fpb",
-          entries.filter(e => bucketSet.contains(e.part)))
-          .select("fp")
-        val updated = applyInsertsFp(
-          readView(spark, root, inV), fpIndex, withFp,
-          minTokens, maxStopword, minDistinct, maxTopBigram)
-        val appliedOut = applied
-          .unionByName(appliedDf(spark, Seq((batchId, inV, outV))))
-        if (MP.commitManifestsCas(spark, root, outV,
-            Map(FpsData -> (entries ++ written)),
-            sidecarTables = Map("view" -> updated.coalesce(1),
-              "applied" -> appliedOut.coalesce(1))))
-          Some(outV)
-        else None
-      }
+    MP.ingestOnce(spark, root, batchId) { (inV, _) =>
+      // ONE manifest resolution per attempt serves both the pruned
+      // anti-probe and the commit's entry merge
+      val entries = MP.readEntries(spark, root, FpsData, inV)
+      val fpIndex = MP.read(spark, root, FpsData, "fpb",
+        entries.filter(e => bucketSet.contains(e.part)))
+        .select("fp")
+      val updated = applyInsertsFp(
+        readView(spark, root, inV), fpIndex, withFp,
+        minTokens, maxStopword, minDistinct, maxTopBigram)
+      MP.Commit(Map(FpsData -> (entries ++ written)),
+        tables = Map("view" -> updated.coalesce(1)))
     }
   }
 

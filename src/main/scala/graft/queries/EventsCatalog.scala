@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Dirs
+
 import QueryDef._
 
 /** Event-time twins over the `events` table: tumbling-window aggregation
@@ -85,24 +87,8 @@ object EventsCatalog {
   // stale copies don't accumulate on disk. All staged dirs go on JVM exit.
   private val streamDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private def deleteStagedDir(p: String): Unit = {
-    // defensive recursive delete: one surprise file (e.g. an OS metadata
-    // drop-in) must not abort cleanup of the remaining dirs
-    try {
-      val d = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(d)) {
-        val s = java.nio.file.Files.walk(d)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach { f =>
-            try java.nio.file.Files.deleteIfExists(f)
-            catch { case _: java.io.IOException => () }
-          }
-        finally s.close()
-      }
-    } catch { case _: java.io.IOException => () }
-  }
   private lazy val streamDirCleanup = sys.addShutdownHook {
-    streamDirCache.values.forEach { case (_, p) => deleteStagedDir(p) }
+    streamDirCache.values.forEach { case (_, p) => Dirs.delete(p) }
   }
   private[queries] def streamableEventsDir(dir: String): String = {
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
@@ -115,7 +101,7 @@ object EventsCatalog {
     streamDirCache.compute(src.toString, (_, prev) => prev match {
       case (id, p) if id == identity => (id, p)
       case other =>
-        if (other != null) deleteStagedDir(other._2) // evict superseded copy
+        if (other != null) Dirs.delete(other._2) // evict superseded copy
         streamDirCleanup // register the shutdown hook once, on first staging
         val d = java.nio.file.Files.createTempDirectory("graft_stream_events")
         java.nio.file.Files.copy(src, d.resolve("events.parquet"))
@@ -141,7 +127,7 @@ object EventsCatalog {
   private val heartbeatDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private lazy val heartbeatDirCleanup = sys.addShutdownHook {
-    heartbeatDirCache.values.forEach { case (_, p) => deleteStagedDir(p) }
+    heartbeatDirCache.values.forEach { case (_, p) => Dirs.delete(p) }
   }
   private[queries] def streamableEventsDirWithHeartbeat(
       s: org.apache.spark.sql.SparkSession, dir: String): String = {
@@ -155,7 +141,7 @@ object EventsCatalog {
     heartbeatDirCache.compute(src.toString, (_, prev) => prev match {
       case (id, p) if id == identity => (id, p)
       case other =>
-        if (other != null) deleteStagedDir(other._2)
+        if (other != null) Dirs.delete(other._2)
         heartbeatDirCleanup
         val ev = t(s, dir, "events") // ts normalized to epoch µs
         // one day past the real data: far beyond any watermark delay +
@@ -177,7 +163,7 @@ object EventsCatalog {
           finally st.close()
         val d = java.nio.file.Files.createTempDirectory("graft_stream_hb")
         java.nio.file.Files.move(part, d.resolve("events.parquet"))
-        deleteStagedDir(tmp.toString)
+        Dirs.delete(tmp)
         (identity, d.toString)
     })._2
   }
@@ -1027,14 +1013,7 @@ object EventsCatalog {
           try q.processAllAvailable() finally q.stop()
         }
         state.orderBy(col("c_custkey"), col("valid_from"))
-      } finally {
-        try {
-          val w = Files.walk(stage)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally w.close()
-        } catch { case _: java.io.IOException => () }
-      }
+      } finally Dirs.delete(stage)
     },
     Some("""
       WITH base AS (SELECT c_custkey, c_acctbal FROM customer),
@@ -2136,7 +2115,7 @@ object EventsCatalog {
           case Some(v) => s.conf.set(key, v)
           case None    => s.conf.unset(key)
         }
-        deleteStagedDir(stage.toString)
+        Dirs.delete(stage)
       }
     },
     Some("""
@@ -2252,7 +2231,7 @@ object EventsCatalog {
           case Some(v) => s.conf.set(key, v)
           case None    => s.conf.unset(key)
         }
-        deleteStagedDir(stage.toString)
+        Dirs.delete(stage)
       }
     },
     Some(s"""
@@ -2359,7 +2338,7 @@ object EventsCatalog {
           case Some(v) => s.conf.set(logKey, v)
           case None    => s.conf.unset(logKey)
         }
-        deleteStagedDir(stage.toString)
+        Dirs.delete(stage)
       }
     },
     Some(s"""
@@ -2436,7 +2415,7 @@ object EventsCatalog {
             // materialize before the feed files are deleted below
             .localCheckpoint(true)
         }
-      } finally deleteStagedDir(stage.toString)
+      } finally Dirs.delete(stage)
     },
     Some(s"""
       SELECT event_type, count(*) AS n,
@@ -2549,7 +2528,7 @@ object EventsCatalog {
             .orderBy("hour", "event_type")
             .localCheckpoint(true) // materialize before the sink is deleted
         }
-      } finally deleteStagedDir(stage.toString)
+      } finally Dirs.delete(stage)
     },
     Some("""
       SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
@@ -2684,7 +2663,7 @@ object EventsCatalog {
             lit(stateParts).as("state_parts"))
           .orderBy("hour", "event_type")
           .localCheckpoint(true) // materialize before the sink is deleted
-      } finally deleteStagedDir(stage.toString)
+      } finally Dirs.delete(stage)
     },
     Some("""
       SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Dirs
+
 import QueryDef._
 
 /** Remaining SURVEY §2 shapes: top-k ordering (O3), the volume-spike
@@ -2052,14 +2054,7 @@ object MiscCatalog {
             sumE(col("l_extendedprice")).as("sum_price"))
           .orderBy("l_returnflag")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally {
-        try {
-          val w = Files.walk(stage)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally w.close()
-        } catch { case _: java.io.IOException => () }
-      }
+      } finally Dirs.delete(stage)
     },
     Some(s"""
       SELECT l_returnflag, count(*) AS n,
@@ -2113,14 +2108,7 @@ object MiscCatalog {
               .as("sum_price_good"))
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally {
-        try {
-          val w = Files.walk(stage)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally w.close()
-        } catch { case _: java.io.IOException => () }
-      }
+      } finally Dirs.delete(stage)
     },
     Some(s"""
       SELECT o_orderstatus, count(*) AS n_rows,
@@ -2159,14 +2147,7 @@ object MiscCatalog {
             sumE(col("l_quantity")).as("sum_qty"))
           .orderBy("l_returnflag")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally {
-        try {
-          val w = Files.walk(stage)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally w.close()
-        } catch { case _: java.io.IOException => () }
-      }
+      } finally Dirs.delete(stage)
     },
     Some(s"""
       SELECT l_returnflag, count(*) AS n,
@@ -2935,14 +2916,7 @@ object MiscCatalog {
             r2(sumE(coalesce(col("o_totalprice"), lit(0.0))))
               .as("sum_price"))
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally {
-        try {
-          val w = Files.walk(stage)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally w.close()
-        } catch { case _: java.io.IOException => () }
-      }
+      } finally Dirs.delete(stage)
     },
     Some(s"""
       SELECT count(*) AS n_rows,
@@ -2985,14 +2959,7 @@ object MiscCatalog {
             r2(sumE(col("o_totalprice"))).as("sum_price"))
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally {
-        try {
-          val w = Files.walk(stage)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally w.close()
-        } catch { case _: java.io.IOException => () }
-      }
+      } finally Dirs.delete(stage)
     },
     Some(s"""
       SELECT o_orderstatus, count(*) AS n,
@@ -3030,14 +2997,7 @@ object MiscCatalog {
             r2(sumE(col("o_totalprice"))).as("sum_price"))
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally {
-        try {
-          val w = Files.walk(stage)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.deleteIfExists(f); () })
-          finally w.close()
-        } catch { case _: java.io.IOException => () }
-      }
+      } finally Dirs.delete(stage)
     },
     Some(s"""
       SELECT o_orderstatus, count(*) AS n,

@@ -40,6 +40,17 @@ object SimilarityCatalog {
   private val PqSub = PqDim / PqM
   private val PqK = 16
 
+  /** A kNN probe's gate rows: self-matches dropped, then (query_id,
+    * rank BIGINT, nn_id, score) — `score` defaults to the cosine rounded
+    * to 6 places.
+    */
+  private def nnRows(df: DataFrame,
+      score: org.apache.spark.sql.Column = r6(col("cos")).as("cos"))
+      : DataFrame =
+    df.filter(col("nn_id") =!= col("query_id"))
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("nn_id"), score)
+
   /** Spark-computed intermediates the IVF oracle replays: corpus→cell
     * assignments and the L2-normalized centroids the probe ranking scored
     * against.
@@ -205,9 +216,7 @@ object SimilarityCatalog {
       val e = t(s, dir, "embeddings")
       Ann.ivfTopK(e, e.filter(col("vec_id") < QueryIdMax), "vec_id",
           "embedding", "vec_id", k = TopK, nCells = IvfCells, nProbe = IvfProbe)
-        .filter(col("nn_id") =!= col("query_id"))
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("nn_id"), r6(col("cos")).as("cos"))
+        .transform(nnRows(_))
         .orderBy("query_id", "rank")
     },
     Some(s"""
@@ -322,9 +331,7 @@ object SimilarityCatalog {
       Ann.ivfTopK(e, e.filter(col("vec_id") < QueryIdMax), "vec_id",
           "embedding", "vec_id", k = TopK, nCells = c,
           nProbe = IvfScaledProbe)
-        .filter(col("nn_id") =!= col("query_id"))
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("nn_id"), r6(col("cos")).as("cos"))
+        .transform(nnRows(_))
         .orderBy("query_id", "rank")
     },
     Some(ivfReplaySql("ivf_scaled_cells", "ivf_scaled_centroids"))
@@ -358,9 +365,7 @@ object SimilarityCatalog {
         IvfIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IvfScaledProbe)
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .orderBy("query_id", "rank")
           // materialize before the persisted index is deleted below
           .localCheckpoint(true)
@@ -403,9 +408,7 @@ object SimilarityCatalog {
         IvfIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IvfScaledProbe)
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally IvfIndex.deleteDir(stage.toString)
@@ -448,9 +451,7 @@ object SimilarityCatalog {
         IvfIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IvfScaledProbe)
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally IvfIndex.deleteDir(stage.toString)
@@ -489,9 +490,7 @@ object SimilarityCatalog {
         IvfIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IvfScaledProbe)
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally IvfIndex.deleteDir(stage.toString)
@@ -536,9 +535,7 @@ object SimilarityCatalog {
         def probeRows() = IvfIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IvfScaledProbe)
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
         // TORN compaction: new generation staged, marker never written
@@ -597,11 +594,8 @@ object SimilarityCatalog {
         .createTempDirectory("graft_ivf_snapshot")
       try {
         IvfIndex.write(base, "vec_id", "embedding", c, stage.toString) // v1
-        def shape(df: DataFrame) = df
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
-          .orderBy("query_id", "rank")
+        def shape(df: DataFrame) =
+          nnRows(df).orderBy("query_id", "rank")
         // the long-running probe OPENS v1 now: its pruned directory list
         // is resolved against v1's manifest at construction
         val pinned = shape(IvfIndex.probe(s, stage.toString, q,
@@ -707,9 +701,7 @@ object SimilarityCatalog {
         IvfIndex.probe(s, root,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IvfScaledProbe)
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .withColumn("conflict_detected", lit(w1Won && w2Lost && w2Won))
           .withColumn("compaction_survived", lit(compactionSurvived))
           .orderBy("query_id", "rank")
@@ -782,9 +774,7 @@ object SimilarityCatalog {
         IvfIndex.probe(s, s"${stage.toString}/index",
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IvfScaledProbe)
-          .filter(col("nn_id") =!= col("query_id"))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .withColumn("multi_batch", lit(batches >= 2))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
@@ -814,9 +804,7 @@ object SimilarityCatalog {
       graft.similarity.Pq.adcTopK(e, e.filter(col("vec_id") < QueryIdMax),
           "vec_id", "embedding", "vec_id", topK = TopK, dim = PqDim,
           m = PqM, k = PqK)
-        .filter(col("nn_id") =!= col("query_id"))
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("nn_id"), r6(col("adc")).as("adc"))
+        .transform(nnRows(_, r6(col("adc")).as("adc")))
         .orderBy("query_id", "rank")
     },
     Some(s"""
@@ -871,9 +859,7 @@ object SimilarityCatalog {
       val e = t(s, dir, "embeddings")
       graft.similarity.Sq.sqTopK(e, e.filter(col("vec_id") < QueryIdMax),
           "vec_id", "embedding", "vec_id", k = TopK, dim = PqDim)
-        .filter(col("nn_id") =!= col("query_id"))
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("nn_id"), col("sqd"))
+        .transform(nnRows(_, col("sqd")))
         .orderBy("query_id", "rank")
     },
     Some(s"""
@@ -2087,9 +2073,8 @@ object SimilarityCatalog {
           lit(0.0), _ + _))
         .withColumn("rank", row_number().over(
           Window.partitionBy("query_id").orderBy(col("adc"), col("nn_id"))))
-        .filter(col("rank") <= TopK && col("nn_id") =!= col("query_id"))
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("nn_id"), r6(col("adc")).as("adc"))
+        .filter(col("rank") <= TopK)
+        .transform(nnRows(_, r6(col("adc")).as("adc")))
         .orderBy("query_id", "rank")
     },
     Some(s"""
@@ -2217,8 +2202,7 @@ object SimilarityCatalog {
         IvfPqIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IpProbe, refine = IpRefine)
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
@@ -2290,8 +2274,7 @@ object SimilarityCatalog {
         IvfPqIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IpProbe, refine = IpRefine)
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
@@ -2337,8 +2320,7 @@ object SimilarityCatalog {
         IvfPqIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IpProbe, refine = IpRefine)
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .withColumn("compacted_both", lit(fragLists && fragRaw))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
@@ -2391,8 +2373,7 @@ object SimilarityCatalog {
         IvfPqIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IpProbe, refine = IpRefine)
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .withColumn("purged", lit(deadLive == 0L))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
@@ -2433,10 +2414,8 @@ object SimilarityCatalog {
       try {
         IvfPqIndex.write(e, "vec_id", "embedding", IvfCells,
           PqDim, PqM, PqK, stage.toString) // v1
-        def shape(df: DataFrame) = df
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
-          .orderBy("query_id", "rank")
+        def shape(df: DataFrame) =
+          nnRows(df).orderBy("query_id", "rank")
         // the long-running probe OPENS v1 now: its pruned directory
         // lists — codes AND raw — are resolved against v1's manifest
         val pinned = shape(IvfPqIndex.probe(s, stage.toString, q,
@@ -2597,8 +2576,7 @@ object SimilarityCatalog {
         IvfPqIndex.probe(s, root,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
             k = TopK, nProbe = IpProbe, refine = IpRefine)
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("nn_id"), r6(col("cos")).as("cos"))
+          .transform(nnRows(_))
           .withColumn("conflict_detected", lit(w1Won && w2Lost && w2Won))
           .withColumn("compaction_survived", lit(compactionSurvived))
           .withColumn("atomic_pair", lit(atomicPair))

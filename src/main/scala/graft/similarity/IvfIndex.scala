@@ -109,34 +109,22 @@ object IvfIndex {
     ManifestedPartitions.compact(spark, path, Seq((Lists, Cell)))
 
   /** DELETE a tombstone batch (vector ids) from the persisted index — the
-    * GDPR leg of the ANN lifecycle: the affected cells are discovered by
-    * a column-pruned (id, cell) scan joined to the (deduplicated)
-    * tombstones, and ONLY those cells are rewritten — anti-join into a
-    * fresh generation, manifest commit retires the old one (untouched
-    * cells' files are never opened; a fully-emptied cell simply drops out
-    * of the manifest). Probes afterwards can never return a deleted
-    * vector — the new snapshot has no such row, and the dead generations'
-    * bytes are physically removed by the retention GC ([[expire]]; a
-    * deployment runs it after its time-travel horizon passes). The coarse
-    * quantizer is untouched (centroids retrain on a slow cadence, exactly
-    * like append's frozen-quantizer contract). Returns the rows purged —
-    * tombstones are deduplicated first so a repeated id in the batch
-    * cannot inflate the count (ADVICE r15).
+    * GDPR leg of the ANN lifecycle, ManifestedPartitions.delete keyed by
+    * `id`: only the cells holding tombstoned vectors are rewritten
+    * (untouched cells' files are never opened; a fully-emptied cell
+    * simply drops out of the manifest). Probes afterwards can never
+    * return a deleted vector — the new snapshot has no such row, and the
+    * dead generations' bytes are physically removed by the retention GC
+    * ([[expire]]; a deployment runs it after its time-travel horizon
+    * passes). The coarse quantizer is untouched (centroids retrain on a
+    * slow cadence, exactly like append's frozen-quantizer contract).
+    * Returns the rows purged — tombstones are deduplicated first so a
+    * repeated id in the batch cannot inflate the count (ADVICE r15).
     */
   def delete(spark: SparkSession, path: String,
-      tombstones: DataFrame): Long = {
-    val ts = tombstones.select("id").distinct().localCheckpoint(true)
-    val dead = ManifestedPartitions.readLatest(spark, path, Lists, Cell)
-      .select("id", Cell) // column-pruned: never reads the vectors
-      .join(broadcast(ts), Seq("id"))
-      .localCheckpoint(true) // cell list + purge count
-    val affected = dead.select(Cell).distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded by the delete batch
-    if (affected.isEmpty) return 0L
-    ManifestedPartitions.rewrite(spark, path, Lists, Cell, affected,
-      df => df.join(broadcast(ts), Seq("id"), "left_anti"))
-    dead.count()
-  }
+      tombstones: DataFrame): Long =
+    ManifestedPartitions.delete(spark, path, Seq((Lists, Cell)), "id",
+      tombstones)()
 
   /** RETENTION GC: expire manifest versions below the keep-horizon and
     * physically delete the generations no retained version references —
@@ -238,23 +226,6 @@ object IvfIndex {
     ManifestedPartitions.read(spark, path, Lists, Cell,
       ManifestedPartitions.prunedEntries(spark, path, Lists, probed, version))
 
-  /** Recursive delete of a staged index dir (children before parents).
-    * Per-file failures are swallowed (ADVICE r14): this runs from `finally`
-    * blocks in gated queries, where a stray file landing between walk and
-    * delete must not mask the query's real result or exception.
-    */
-  def deleteDir(p: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
-    val root = Paths.get(p)
-    if (Files.exists(root)) {
-      val st = Files.walk(root)
-      try st.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach { f =>
-          try Files.deleteIfExists(f)
-          catch { case _: java.io.IOException => () }
-        }
-      finally st.close()
-    }
-  }
+  /** Recursive delete of a staged index dir (sources.Dirs.delete). */
+  def deleteDir(p: String): Unit = graft.sources.Dirs.delete(p)
 }

@@ -94,15 +94,11 @@ object IvfPqIndex {
     }
     // the inverted lists carry CODES ONLY — the 8-byte payload is the
     // entire point; the exact vector is written once, to the side table
-    val listEntries = ManifestedPartitions.writeGen(
+    ManifestedPartitions.init(
       Pq.encode(res, "id", "r", dim, cb, m, keep = Seq("cell")),
-      path, Lists, "cell", 1L)
-    val rawEntries = ManifestedPartitions.writeGen(
-      withRawBucket(corpus.select(col(idCol).as("id"),
-        transform(col(vecCol), _.cast("double")).as("v"))),
-      path, Raw, "rb", 1L)
-    ManifestedPartitions.commitManifests(sp, path, 1L,
-      Map(Lists -> listEntries, Raw -> rawEntries))
+      path, Lists, "cell",
+      more = Seq((withRawBucket(corpus.select(col(idCol).as("id"),
+        transform(col(vecCol), _.cast("double")).as("v"))), Raw, "rb")))
   }
 
   /** APPEND a vector batch WITHOUT retraining — the PQ twin of
@@ -136,22 +132,16 @@ object IvfPqIndex {
         zip_with(col("v"), col("c"), (x, y) => x - y).as("r"))
       .localCheckpoint(true) // feeds both the encode and the cell re-join
     // both datasets stage ONCE under writer-unique generations; a lost
-    // version race (r18 order #1) re-merges the immutable entries onto
-    // the winner's snapshot — ONE CAS marker still commits both
-    val listsWritten = ManifestedPartitions.writeGen(
-      Pq.encode(res, "id", "r", dim, cb, m, keep = Seq("cell")),
-      path, Lists, "cell", ManifestedPartitions.freshGen())
-    val rawWritten = ManifestedPartitions.writeGen(
-      withRawBucket(delta.select(col(idCol).as("id"),
-        transform(col(vecCol), _.cast("double")).as("v"))),
-      path, Raw, "rb", ManifestedPartitions.freshGen())
-    ManifestedPartitions.retryingCommit(path) { (inV, outV) =>
-      ManifestedPartitions.commitManifestsCas(spark, path, outV, Map(
-        Lists -> (ManifestedPartitions.readEntries(spark, path, Lists, inV)
-          ++ listsWritten),
-        Raw -> (ManifestedPartitions.readEntries(spark, path, Raw, inV)
-          ++ rawWritten)))
-    }
+    // version race re-merges the immutable entries onto the winner's
+    // snapshot — ONE CAS marker still commits both
+    ManifestedPartitions.commitAppend(spark, path, Map(
+      Lists -> ManifestedPartitions.writeGen(
+        Pq.encode(res, "id", "r", dim, cb, m, keep = Seq("cell")),
+        path, Lists, "cell", ManifestedPartitions.freshGen()),
+      Raw -> ManifestedPartitions.writeGen(
+        withRawBucket(delta.select(col(idCol).as("id"),
+          transform(col(vecCol), _.cast("double")).as("v"))),
+        path, Raw, "rb", ManifestedPartitions.freshGen())))()
     ()
   }
 
@@ -169,43 +159,9 @@ object IvfPqIndex {
     * list rows purged.
     */
   def delete(spark: SparkSession, path: String,
-      tombstones: DataFrame): Long = {
-    val ts = tombstones.select("id").distinct().localCheckpoint(true)
-    // the whole plan — affected cells AND buckets, both rewrites — is a
-    // function of the input snapshot: every CAS attempt (r18 order #2)
-    // re-discovers against the then-latest version (a racing compactor
-    // moves rows between generations)
-    ManifestedPartitions.retrying(path) { (inV, outV) =>
-      def at(dn: String, pc: String) = ManifestedPartitions.read(
-        spark, path, dn, pc,
-        ManifestedPartitions.readEntries(spark, path, dn, inV))
-      val deadLists = at(Lists, "cell")
-        .select("id", "cell") // column-pruned: never reads the codes
-        .join(broadcast(ts), Seq("id"))
-        .localCheckpoint(true)
-      val affCells = deadLists.select("cell").distinct()
-        .collect().map(_.getInt(0)).toSeq // bounded by the delete batch
-      if (affCells.isEmpty) Some(0L)
-      else {
-        val affBuckets = at(Raw, "rb")
-          .select("id", "rb")
-          .join(broadcast(ts), Seq("id"))
-          .select("rb").distinct().collect().map(_.getInt(0)).toSeq
-        val anti = (df: DataFrame) =>
-          df.join(broadcast(ts), Seq("id"), "left_anti")
-        val listsMerged = ManifestedPartitions.stageRewriteAt(
-          spark, path, Lists, "cell", affCells, anti, inV,
-          ManifestedPartitions.freshGen())
-        val rawMerged = ManifestedPartitions.stageRewriteAt(
-          spark, path, Raw, "rb", affBuckets, anti, inV,
-          ManifestedPartitions.freshGen())
-        if (ManifestedPartitions.commitManifestsCas(spark, path, outV,
-            Map(Lists -> listsMerged, Raw -> rawMerged)))
-          Some(deadLists.count())
-        else None
-      }
-    }
-  }
+      tombstones: DataFrame): Long =
+    ManifestedPartitions.delete(spark, path,
+      Seq((Lists, "cell"), (Raw, "rb")), "id", tombstones)()
 
   /** COMPACT fragmented partitions in both datasets (each append commits
     * one generation per dataset): rewrite exactly the cells/buckets whose
@@ -251,9 +207,7 @@ object IvfPqIndex {
     val sp = spark
     import sp.implicits._
     // ONE version resolution serving both datasets' reads below
-    val v = version.orElse(ManifestedPartitions.latestVersion(path))
-      .getOrElse(throw new IllegalStateException(
-        s"no committed version at $path"))
+    val v = graft.sources.VersionedView.resolve(path, version)
     val centRows = readCentroids(spark, path)
     val dim = centRows.head._2.length
     val cDf = centRows.map { case (cell, c, _) => (cell, c) }

@@ -56,6 +56,23 @@ class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
   * `~<name>` a scalar sidecar's fields (`field:value;…`), `@<name>` a
   * sidecar TABLE's writer-unique directory under `<root>/<name>/`.
   *
+  * The index lifecycle lives here once; every persisted-index family
+  * (IvfIndex, IvfPqIndex, PostingsIndex, FunnelMv) supplies only its
+  * partition function, payload, scalar stats and probe. Each operation is
+  * one CAS loop ([[retrying]]) that re-plans against every attempt's
+  * snapshot:
+  *   - [[init]]: generation 1 of one or more datasets plus sidecars,
+  *     committed as version 1;
+  *   - [[commitAppend]] ([[append]]): generations staged once under
+  *     writer-unique ids, merged onto each attempt's manifests, with
+  *     per-attempt scalars;
+  *   - [[delete]]: keyed tombstone purge — affected partitions found per
+  *     attempt, anti-join rewrites staged and committed under one marker;
+  *   - [[ingestOnce]]: exactly-once micro-batch commit keyed by the
+  *     applied-batches ledger;
+  *   - [[compact]]: fragmented partitions folded to one file each;
+  *   - [[expire]]: retention GC.
+  *
   * This is directory-granularity manifesting — the single-table core of
   * what Delta/Iceberg do at file granularity (their manifests list files
   * with per-file statistics; ours lists partition-generation directories
@@ -309,7 +326,7 @@ object ManifestedPartitions {
     spark.read.parquet(
       s"$root/$name/${valueOf(bodyAt(root, v), root, v, s"@$name")}")
 
-  /** THE CAS retry loop every default lifecycle API wraps around
+  /** THE CAS retry loop every lifecycle operation wraps around
     * [[commitManifestsCas]]: run `attempt(inV, outV)` against the latest
     * snapshot until it finishes — `Some(result)` ends the loop (either
     * the attempt's CAS landed, or it discovered there is nothing to do /
@@ -319,11 +336,11 @@ object ManifestedPartitions {
     * [[ConcurrentCommitException]] LOUDLY rather than ever falling back
     * to a replacing commit.
     */
-  def retrying[T](root: String)(attempt: (Long, Long) => Option[T]): T = {
+  private def retrying[T](root: String)(
+      attempt: (Long, Long) => Option[T]): T = {
     var tries = 0
     while (tries < MaxCommitRetries) {
-      val inV = latestVersion(root).getOrElse(
-        throw new IllegalStateException(s"no committed version at $root"))
+      val inV = VersionedView.resolve(root)
       attempt(inV, inV + 1) match {
         case Some(t) => return t
         case None => tries += 1
@@ -332,14 +349,6 @@ object ManifestedPartitions {
     throw new ConcurrentCommitException(
       s"$root: lost the optimistic version race $MaxCommitRetries times")
   }
-
-  /** [[retrying]] for the common attempt shape that just commits:
-    * true = CAS landed (returns the committed version), false = retry.
-    */
-  def retryingCommit(root: String)(attempt: (Long, Long) => Boolean)
-      : Long =
-    retrying(root)((inV, outV) =>
-      if (attempt(inV, outV)) Some(outV) else None)
 
   /** Scalar sidecar `name` at version `v`: Some(fields) if v's body
     * carries `"~<name>"`, None if the root never committed it.
@@ -395,11 +404,9 @@ object ManifestedPartitions {
 
   /** Read the latest committed snapshot of the whole dataset. */
   def readLatest(spark: SparkSession, root: String, dataName: String,
-      partCol: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    read(spark, root, dataName, partCol, readEntries(spark, root, dataName, v))
-  }
+      partCol: String): DataFrame =
+    read(spark, root, dataName, partCol,
+      readEntries(spark, root, dataName, VersionedView.resolve(root)))
 
   /** Latest-committed entries restricted to `parts` — the probe-side
     * pruning helper. Empty result means none of the probed partitions
@@ -407,26 +414,28 @@ object ManifestedPartitions {
     */
   def prunedEntries(spark: SparkSession, root: String, dataName: String,
       parts: Seq[Int], version: Option[Long] = None): Seq[Entry] = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
     val ps = parts.toSet
-    readEntries(spark, root, dataName, v).filter(e => ps.contains(e.part))
+    readEntries(spark, root, dataName, VersionedView.resolve(root, version))
+      .filter(e => ps.contains(e.part))
   }
 
-  /** INIT: write `df` as generation 1 and commit manifest version 1
-    * (plus sidecar tables/scalars) under one marker. Overwrites any prior
-    * index at the root (markers included), matching the families'
-    * write() overwrite contract.
+  /** INIT: write `df` (and each `(df, dataName, partCol)` of `more`) as
+    * generation 1 and commit manifest version 1 (plus sidecar
+    * tables/scalars) under one marker. Overwrites any prior index at the
+    * root (markers included), matching the families' write() overwrite
+    * contract.
     */
   def init(df: DataFrame, root: String, dataName: String, partCol: String,
       sidecars: Map[String, DataFrame] = Map.empty,
-      sidecarScalars: Map[String, Seq[(String, Long)]] = Map.empty)
-      : Unit = {
-    VersionedView.deleteDir(Paths.get(root, "_commits"))
-    Files.deleteIfExists(Paths.get(root, dataName, "_schema"))
-    val spark = df.sparkSession
-    val entries = writeGen(df, root, dataName, partCol, 1L)
-    require(commitManifestsCas(spark, root, 1L, Map(dataName -> entries),
+      sidecarScalars: Map[String, Seq[(String, Long)]] = Map.empty,
+      more: Seq[(DataFrame, String, String)] = Nil): Unit = {
+    Dirs.delete(Paths.get(root, "_commits"))
+    val manifests = ((df, dataName, partCol) +: more).map {
+      case (d, dn, pc) =>
+        Files.deleteIfExists(Paths.get(root, dn, "_schema"))
+        dn -> writeGen(d, root, dn, pc, 1L)
+    }.toMap
+    require(commitManifestsCas(df.sparkSession, root, 1L, manifests,
       sidecars, sidecarScalars), s"init lost a version-1 race at $root")
   }
 
@@ -434,8 +443,8 @@ object ManifestedPartitions {
     * `v` under a single marker — [[commitManifestsCas]] with the CAS loss
     * surfaced as a LOUD [[ConcurrentCommitException]] instead of a
     * `false`. For single-writer callers; potentially-racing callers use
-    * [[retryingCommit]] or their own re-stage loop instead of catching
-    * this.
+    * the lifecycle operations or their own re-stage loop instead of
+    * catching this.
     */
   def commitManifests(spark: SparkSession, root: String, v: Long,
       manifests: Map[String, Seq[Entry]],
@@ -444,44 +453,48 @@ object ManifestedPartitions {
       throw new ConcurrentCommitException(
         s"$root: version $v was committed concurrently by another writer")
 
-  /** STAGE an append: write `delta` as generation `latest+1` and return
-    * (newVersion, merged entries) WITHOUT committing — the torn-run shape
-    * is exactly "staged but never committed". Callers commit via
-    * [[commitManifests]]; [[append]] composes the two.
+  /** `written` (staged entries per dataset) merged onto each dataset's
+    * manifest at version `inV` — the manifests an append commits.
     */
-  def stageAppend(spark: SparkSession, root: String, dataName: String,
-      partCol: String, delta: DataFrame): (Long, Seq[Entry]) = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val gen = v + 1
-    val written = writeGen(delta, root, dataName, partCol, gen)
-    (gen, readEntries(spark, root, dataName, v) ++ written)
-  }
+  def appended(spark: SparkSession, root: String, inV: Long,
+      written: Map[String, Seq[Entry]]): Map[String, Seq[Entry]] =
+    written.map { case (dn, es) =>
+      dn -> (readEntries(spark, root, dn, inV) ++ es)
+    }
 
-  /** APPEND: new generation + CAS manifest commit with retry. Ingest cost
-    * ∝ batch (one generation write, no rewrite of live data). The
-    * generation is staged ONCE under a writer-unique id; losing the
-    * version race re-merges the immutable staged entries onto the
-    * winner's snapshot and retries — append results are
-    * snapshot-independent, so no re-write is needed. A crashed append
-    * (staged, never committed) leaves an orphan generation for
-    * [[expire]]'s grace window. Returns the committed version.
-    *
-    * `sidecars` tables are re-staged verbatim per attempt — a caller
-    * whose sidecar DEPENDS on the input snapshot (e.g. advancing corpus
-    * statistics) must run its own [[retryingCommit]] loop recomputing
-    * them per attempt instead.
+  /** Commit already-staged generations — `written` entries per dataset,
+    * each staged ONCE under a writer-unique id — with CAS retry. Losing
+    * the version race re-merges the immutable staged entries onto the
+    * winner's snapshot ([[appended]]) and retries: append results are
+    * snapshot-independent, so no re-write is needed. `sidecars` tables
+    * are re-staged verbatim per attempt; `scalars(inV)` is recomputed per
+    * attempt, so a sidecar that advances from the input snapshot (e.g.
+    * corpus statistics) never clobbers an interleaved writer's update. A
+    * crashed append (staged, never committed) leaves orphan generations
+    * for [[expire]]'s grace window. Returns the committed version.
+    */
+  def commitAppend(spark: SparkSession, root: String,
+      written: Map[String, Seq[Entry]],
+      sidecars: Map[String, DataFrame] = Map.empty)(
+      scalars: Long => Map[String, Seq[(String, Long)]] = _ => Map.empty)
+      : Long =
+    retrying(root) { (inV, outV) =>
+      if (commitManifestsCas(spark, root, outV,
+          appended(spark, root, inV, written), sidecars, scalars(inV)))
+        Some(outV)
+      else None
+    }
+
+  /** APPEND: `delta` as one new writer-unique generation of `dataName`,
+    * committed by [[commitAppend]]. Ingest cost ∝ batch (one generation
+    * write, no rewrite of live data). Returns the committed version.
     */
   def append(spark: SparkSession, root: String, dataName: String,
       partCol: String, delta: DataFrame,
-      sidecars: Map[String, DataFrame] = Map.empty): Long = {
-    val written = writeGen(delta, root, dataName, partCol, freshGen())
-    retryingCommit(root) { (inV, outV) =>
-      commitManifestsCas(spark, root, outV,
-        Map(dataName -> (readEntries(spark, root, dataName, inV) ++ written)),
-        sidecars)
-    }
-  }
+      sidecars: Map[String, DataFrame] = Map.empty): Long =
+    commitAppend(spark, root,
+      Map(dataName -> writeGen(delta, root, dataName, partCol, freshGen())),
+      sidecars)()
 
   /** STAGE a rewrite of exactly `parts` through `transform` (must be
     * partition-local — filters/projections, which every caller's is):
@@ -495,8 +508,7 @@ object ManifestedPartitions {
   def stageRewrite(spark: SparkSession, root: String, dataName: String,
       partCol: String, parts: Seq[Int],
       transform: DataFrame => DataFrame): (Long, Seq[Entry]) = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
+    val v = VersionedView.resolve(root)
     (v + 1,
       stageRewriteAt(spark, root, dataName, partCol, parts, transform,
         v, v + 1))
@@ -525,20 +537,113 @@ object ManifestedPartitions {
     old.filterNot(e => ps.contains(e.part)) ++ written
   }
 
-  /** REWRITE: staged rewrite + CAS manifest commit with retry. A lost
-    * race RE-STAGES the transform on the winner's snapshot (a rewrite's
-    * result depends on its input — the staged generation of a lost
-    * attempt is abandoned to [[expire]]'s grace window). Same `sidecars`
-    * caveat as [[append]]. Returns the committed version.
+  /** DELETE a tombstone batch keyed by `key` from `datasets` ((dataName,
+    * partCol) pairs) — the GDPR leg of every family. The tombstones are
+    * deduplicated and materialized once (a repeated key cannot inflate
+    * the purge count). Each CAS attempt then plans against ITS snapshot
+    * (a racing writer may have moved or purged the rows):
+    *   - the affected partitions of each dataset come from a
+    *     column-pruned `(key, partCol ++ keep)` scan joined to the
+    *     broadcast tombstones; the first dataset's hits (`dead`) are
+    *     materialized, the others only yield their partition list;
+    *   - the datasets after the first are side tables keyed like it, so a
+    *     batch with no live hit in the first dataset commits nothing, and
+    *     any other dataset without hits is skipped;
+    *   - only the affected partitions are rewritten (anti-join into fresh
+    *     generations; a partition the purge empties drops out of the
+    *     manifest) and ONE marker commits them with `scalars(inV, dead)`.
+    * The dead generations' bytes are removed by [[expire]]. Returns the
+    * number of rows purged from the first dataset.
     */
-  def rewrite(spark: SparkSession, root: String, dataName: String,
-      partCol: String, parts: Seq[Int], transform: DataFrame => DataFrame,
-      sidecars: Map[String, DataFrame] = Map.empty): Long =
-    retryingCommit(root) { (inV, outV) =>
-      commitManifestsCas(spark, root, outV,
-        Map(dataName -> stageRewriteAt(spark, root, dataName, partCol,
-          parts, transform, inV, freshGen())),
-        sidecars)
+  def delete(spark: SparkSession, root: String,
+      datasets: Seq[(String, String)], key: String, tombstones: DataFrame,
+      keep: Seq[String] = Nil)(
+      scalars: (Long, DataFrame) => Map[String, Seq[(String, Long)]] =
+        (_, _) => Map.empty): Long = {
+    val ts = tombstones.select(key).distinct().localCheckpoint(true)
+    val anti = (df: DataFrame) => df.join(broadcast(ts), Seq(key), "left_anti")
+    def parts(hits: DataFrame, partCol: String): Seq[Int] =
+      hits.select(partCol).distinct()
+        .collect().map(_.getInt(0)).toSeq // bounded by the delete batch
+    retrying(root) { (inV, outV) =>
+      def hits(dataName: String, partCol: String,
+          cols: Seq[String]): DataFrame =
+        read(spark, root, dataName, partCol,
+            readEntries(spark, root, dataName, inV))
+          .select((key +: partCol +: cols).map(col): _*) // column-pruned
+          .join(broadcast(ts), Seq(key))
+      val (dn0, pc0) = datasets.head
+      val dead = hits(dn0, pc0, keep).localCheckpoint(true)
+      val parts0 = parts(dead, pc0)
+      if (parts0.isEmpty) Some(0L)
+      else {
+        val affected = (dn0, pc0, parts0) +: datasets.tail.map {
+          case (dn, pc) => (dn, pc, parts(hits(dn, pc, Nil), pc))
+        }.filter(_._3.nonEmpty)
+        val merged = affected.map { case (dn, pc, ps) =>
+          dn -> stageRewriteAt(spark, root, dn, pc, ps, anti, inV,
+            freshGen())
+        }.toMap
+        if (commitManifestsCas(spark, root, outV, merged,
+            sidecarScalars = scalars(inV, dead)))
+          Some(dead.count())
+        else None
+      }
+    }
+  }
+
+  /** What one [[ingestOnce]] attempt commits besides the ledger. */
+  case class Commit(manifests: Map[String, Seq[Entry]],
+      tables: Map[String, DataFrame] = Map.empty,
+      scalars: Map[String, Seq[(String, Long)]] = Map.empty)
+
+  /** Name of the applied-batches ledger sidecar table: one row
+    * (batch_id, in_v, out_v) per batch [[ingestOnce]] committed.
+    */
+  val Applied = "applied"
+
+  private def ledger(spark: SparkSession,
+      rows: Seq[(Long, Long, Long)]): DataFrame = {
+    val sp = spark
+    import sp.implicits._
+    rows.toDF("batch_id", "in_v", "out_v")
+  }
+
+  /** The empty ledger the [[init]] of an [[ingestOnce]] root commits. */
+  def emptyLedger(spark: SparkSession): DataFrame =
+    ledger(spark, Nil).coalesce(1)
+
+  /** Commit micro-batch `batchId` EXACTLY ONCE. Each attempt first checks
+    * the applied-batches ledger at its snapshot: a batch seen before — a
+    * re-delivery after a crash between commit and checkpoint, or a second
+    * writer's delivery that won the race — SKIPS and returns its recorded
+    * version, because that version is committed and immutable. A new
+    * batch runs `attempt(inV, outV)` for the family's manifests, tables
+    * and scalars and CAS-commits them at outV together with the ledger
+    * plus this batch's row; a lost race re-runs the attempt on the
+    * winner's snapshot. The ledger decouples exactly-once from "version =
+    * f(batchId)", so maintenance commits interleave with the stream (the
+    * ledger rides their markers by carry-forward). Returns the committed
+    * (or already-committed) version.
+    */
+  def ingestOnce(spark: SparkSession, root: String, batchId: Long)(
+      attempt: (Long, Long) => Commit): Long =
+    retrying(root) { (inV, outV) =>
+      // no materialization: the ledger is one coalesced file, so the
+      // replay check and the commit's union re-read it for less than an
+      // eager localCheckpoint job costs
+      val applied = readSidecarTable(spark, root, Applied, inV)
+      val prior = applied.filter(col("batch_id") === batchId).collect()
+      if (prior.nonEmpty) Some(prior(0).getAs[Long]("out_v"))
+      else {
+        val c = attempt(inV, outV)
+        val appliedOut = applied.unionByName(
+          ledger(spark, Seq((batchId, inV, outV)))).coalesce(1)
+        if (commitManifestsCas(spark, root, outV, c.manifests,
+            c.tables + (Applied -> appliedOut), c.scalars))
+          Some(outV)
+        else None
+      }
     }
 
   /** Partitions that are FRAGMENTED at the latest (or pinned) committed
@@ -551,9 +656,7 @@ object ManifestedPartitions {
     */
   def fragmentedParts(spark: SparkSession, root: String, dataName: String,
       partCol: String, version: Option[Long] = None): Seq[Int] = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    readEntries(spark, root, dataName, v)
+    readEntries(spark, root, dataName, VersionedView.resolve(root, version))
       .groupBy(_.part)
       .map { case (part, es) => part -> es.map(_.files).sum }
       .filter(_._2 > 1).keys.toSeq.sorted
@@ -566,9 +669,7 @@ object ManifestedPartitions {
     */
   def liveStats(spark: SparkSession, root: String, dataName: String,
       version: Option[Long] = None): Map[Int, (Int, Long)] = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    readEntries(spark, root, dataName, v)
+    readEntries(spark, root, dataName, VersionedView.resolve(root, version))
       .groupBy(_.part)
       .map { case (part, es) =>
         part -> (es.map(_.files).sum, es.map(_.rows).sum)
@@ -583,9 +684,7 @@ object ManifestedPartitions {
   def liveFiles(spark: SparkSession, root: String, dataName: String,
       partCol: String,
       version: Option[Long] = None): Map[Int, Set[String]] = {
-    val v = version.orElse(latestVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    readEntries(spark, root, dataName, v)
+    readEntries(spark, root, dataName, VersionedView.resolve(root, version))
       .groupBy(_.part)
       .map { case (part, es) =>
         part -> es.flatMap { e =>
@@ -632,7 +731,7 @@ object ManifestedPartitions {
     }
 
   /** Grace window shielding freshly staged, not-yet-committed generations
-    * from [[expire]] (ADVICE r16: GC racing an in-flight stageAppend/
+    * from [[expire]] (ADVICE r16: GC racing an in-flight append/
     * stageRewriteAt deleted the staged bytes; the subsequent commit then
     * installed a manifest pointing at missing directories). A generation
     * directory that NO manifest version has ever referenced is deleted
@@ -710,12 +809,12 @@ object ManifestedPartitions {
               (everReferenced(dn).contains((g, p)) ||
                 Files.getLastModifiedTime(pDir).toMillis < horizon)
             if (deletable) {
-              VersionedView.deleteDir(pDir)
+              Dirs.delete(pDir)
               removed += 1
             }
           }
           if (listParts(d.toString, partCol).isEmpty)
-            VersionedView.deleteDir(d)
+            Dirs.delete(d)
         }
       }
     }
@@ -739,7 +838,7 @@ object ManifestedPartitions {
       nonceDirs.foreach { c =>
         if (!protectedRefs.contains((name, c.getFileName.toString)) &&
           Files.getLastModifiedTime(c).toMillis < horizon)
-          VersionedView.deleteDir(c)
+          Dirs.delete(c)
       }
     }
     (dead, removed)

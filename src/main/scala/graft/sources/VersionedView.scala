@@ -74,23 +74,9 @@ object VersionedView {
   def expireExact(path: String, dead: Seq[Long]): Seq[Long] = {
     dead.foreach { v =>
       Files.deleteIfExists(Paths.get(path, "_commits", v.toString))
-      deleteDir(Paths.get(path, s"v=$v"))
+      Dirs.delete(Paths.get(path, s"v=$v"))
     }
     dead
-  }
-
-  /** Recursive delete, children before parents; missing roots are a no-op. */
-  private[sources] def deleteDir(root: java.nio.file.Path): Unit = {
-    import java.util.Comparator
-    if (Files.exists(root)) {
-      val st = Files.walk(root)
-      try st.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach { f =>
-          try Files.deleteIfExists(f)
-          catch { case _: java.io.IOException => () }
-        }
-      finally st.close()
-    }
   }
 
   /** Write version `v`'s marker alone — the second half of a commit,
@@ -153,18 +139,15 @@ object VersionedView {
   /** The newest COMMITTED version (marker-backed only; staged dotfiles and
     * torn data dirs are invisible). None if nothing committed yet.
     */
-  def latestVersion(path: String): Option[Long] = {
-    import scala.jdk.CollectionConverters._
-    val commits = Paths.get(path, "_commits")
-    if (!Files.isDirectory(commits)) return None
-    val st = Files.list(commits)
-    val vs = try st.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.matches("\\d+"))
-      .map(_.toLong).toSeq
-    finally st.close()
-    if (vs.isEmpty) None else Some(vs.max)
-  }
+  def latestVersion(path: String): Option[Long] =
+    committedVersions(path).lastOption
+
+  /** The version a read serves: `version` if pinned, else the newest
+    * committed one (IllegalStateException if nothing is committed).
+    */
+  def resolve(path: String, version: Option[Long] = None): Long =
+    version.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalStateException(s"no committed version at $path"))
 
   /** Snapshot read of one committed version. */
   def readVersion(spark: SparkSession, path: String, v: Long): DataFrame = {
@@ -175,9 +158,6 @@ object VersionedView {
   }
 
   /** Read the latest committed version (the production entry point). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    spark.read.parquet(s"$path/v=$v")
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"$path/v=${resolve(path)}")
 }

@@ -81,7 +81,8 @@ object PostingsIndex {
     val posts = withBucket(postings(docs, idCol, textCol), nBuckets)
       .localCheckpoint(true) // feeds both the postings write and the stats
     ManifestedPartitions.init(posts, path, Postings, Tb,
-      sidecars = Map(Applied -> appliedDf(spark, Nil).coalesce(1)),
+      sidecars = Map(ManifestedPartitions.Applied ->
+        ManifestedPartitions.emptyLedger(spark)),
       sidecarScalars = Map(
         StatsName -> statsScalars(statsOf(posts, nBuckets))))
   }
@@ -98,24 +99,12 @@ object PostingsIndex {
     Stats(r.getLong(0), r.getLong(1), nBuckets)
   }
 
-  private val Applied = "applied"
-
-  private def appliedDf(spark: SparkSession,
-      rows: Seq[(Long, Long, Long)]): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    rows.toDF("batch_id", "in_v", "out_v")
-  }
-
   /** The committed corpus statistics at the latest (or pinned) version —
     * the `~stats` scalars of that version's marker body.
     */
   def readStats(spark: SparkSession, path: String,
-      version: Option[Long] = None): Stats = {
-    val v = version.orElse(VersionedView.latestVersion(path)).getOrElse(
-      throw new IllegalStateException(s"no committed index at $path"))
-    statsAt(path, v)
-  }
+      version: Option[Long] = None): Stats =
+    statsAt(path, VersionedView.resolve(path, version))
 
   private def statsAt(path: String, v: Long): Stats = {
     val m = ManifestedPartitions.readSidecarScalars(path, StatsName, v)
@@ -124,147 +113,86 @@ object PostingsIndex {
     Stats(m("n_docs"), m("total_dl"), m("n_buckets").toInt)
   }
 
-  /** APPEND a document batch WITHOUT rebuilding: the batch's postings are
-    * bucketed with the STORED n_buckets (frozen at build) and land ONCE
-    * as a writer-unique manifest-committed generation; the stats scalars
-    * advance by the batch's own (n_docs, total_dl) — exact because
-    * append's contract is NEW document ids (the standard ingest shape;
-    * an updated document is a delete + insert) — and commit IN THE SAME
-    * MARKER BODY as the postings manifest, so scores can never run on
-    * stats that diverged from the postings they describe. The commit is
-    * the CAS-with-retry default (r18 order #1): a lost version race
-    * re-reads the winner's stats and manifest and retries — the stats
-    * advance is recomputed per attempt, so an interleaved delete's
-    * decrement is never clobbered. Ingest cost ∝ batch, never the
-    * corpus. Returns the committed version.
+  /** The batch's postings bucketed with the STORED n_buckets (frozen at
+    * build), staged ONCE as a writer-unique generation, with the batch's
+    * own (n_docs, total_dl).
+    */
+  private def stage(spark: SparkSession, path: String, delta: DataFrame,
+      idCol: String,
+      textCol: String): (Stats, Seq[ManifestedPartitions.Entry]) = {
+    val nBuckets = readStats(spark, path).nBuckets
+    val posts = withBucket(postings(delta, idCol, textCol), nBuckets)
+      .localCheckpoint(true) // feeds both the stats and the postings write
+    (statsOf(posts, nBuckets),
+      ManifestedPartitions.writeGen(posts, path, Postings, Tb,
+        ManifestedPartitions.freshGen()))
+  }
+
+  /** The stats at `inV` advanced by a staged `batch` — exact because
+    * append's contract is NEW document ids (the standard ingest shape; an
+    * updated document is a delete + insert).
+    */
+  private def advanced(path: String, inV: Long,
+      batch: Stats): Map[String, Seq[(String, Long)]] = {
+    val st = statsAt(path, inV)
+    Map(StatsName -> statsScalars(Stats(st.nDocs + batch.nDocs,
+      st.totalDl + batch.totalDl, st.nBuckets)))
+  }
+
+  /** APPEND a document batch WITHOUT rebuilding: the batch's postings land
+    * as one staged generation and the stats scalars advance by the
+    * batch IN THE SAME MARKER BODY as the postings manifest, so scores
+    * can never run on stats that diverged from the postings they
+    * describe. ManifestedPartitions.commitAppend recomputes the advance
+    * against every CAS attempt's snapshot, so an interleaved delete's
+    * decrement is never clobbered. Ingest cost ∝ batch, never the corpus.
+    * Returns the committed version.
     */
   def append(spark: SparkSession, path: String, delta: DataFrame,
       idCol: String, textCol: String): Long = {
-    val nBuckets = readStats(spark, path).nBuckets
-    val posts = withBucket(postings(delta, idCol, textCol), nBuckets)
-      .localCheckpoint(true)
-    val batch = statsOf(posts, nBuckets)
-    val written =
-      ManifestedPartitions.writeGen(posts, path, Postings, Tb,
-        ManifestedPartitions.freshGen())
-    ManifestedPartitions.retryingCommit(path) { (inV, outV) =>
-      val st = statsAt(path, inV)
-      ManifestedPartitions.commitManifestsCas(spark, path, outV,
-        Map(Postings ->
-          (ManifestedPartitions.readEntries(spark, path, Postings, inV)
-            ++ written)),
-        sidecarScalars = Map(StatsName -> statsScalars(Stats(
-          st.nDocs + batch.nDocs, st.totalDl + batch.totalDl,
-          st.nBuckets))))
-    }
+    val (batch, written) = stage(spark, path, delta, idCol, textCol)
+    ManifestedPartitions.commitAppend(spark, path, Map(Postings -> written))(
+      advanced(path, _, batch))
   }
 
   /** Ingest micro-batch `batchId` EXACTLY ONCE — the streaming form of
-    * [[append]], ledger-keyed like the funnel MV's (ADVICE r17: the old
-    * batch-keyed `appendAt` derived its version from the batchId and
-    * commitManifests REPLACE-overwrote the marker, so a maintenance
-    * commit interleaving with the stream was silently clobbered — a lost
-    * update; and a re-delivered batch physically rewrote an
-    * already-committed generation in place). The applied-batches ledger
-    * rides every marker (auto-carried through maintenance commits): a
-    * batch seen before SKIPS — its version is committed and immutable —
-    * and a first delivery CAS-commits latest+1 with retry, so
-    * maintenance versions interleave freely. Returns the committed (or
-    * already-committed) version.
+    * [[append]] under ManifestedPartitions.ingestOnce's applied-batches
+    * ledger: a re-delivered batch returns its committed version before
+    * any tokenization or staging happens (the staging is a lazy val), and
+    * a first delivery commits the append's manifest and stats advance at
+    * latest+1, so maintenance versions interleave freely. Returns the
+    * committed (or already-committed) version.
     */
   def ingestBatch(spark: SparkSession, path: String, delta: DataFrame,
       idCol: String, textCol: String, batchId: Long): Long = {
-    // tokenize + stage LAZILY, inside the retry loop: the loop's first
-    // attempt already reads the ledger at the latest snapshot, so a
-    // separate up-front replay check paid one extra sidecar read +
-    // collect per batch (r18 optimization) — a RE-DELIVERED batch still
-    // returns from the ledger before any tokenization or staging happens
-    var staged: Option[(Stats, Seq[ManifestedPartitions.Entry])] = None
-    def stage(): (Stats, Seq[ManifestedPartitions.Entry]) =
-      staged.getOrElse {
-        val nBuckets = readStats(spark, path).nBuckets
-        val posts = withBucket(postings(delta, idCol, textCol), nBuckets)
-          .localCheckpoint(true)
-        val t = (statsOf(posts, nBuckets),
-          ManifestedPartitions.writeGen(posts, path, Postings, Tb,
-            ManifestedPartitions.freshGen()))
-        staged = Some(t)
-        t
-      }
-    ManifestedPartitions.retrying(path) { (inV, outV) =>
-      // CHECK the ledger at this attempt's snapshot: a RE-DELIVERED batch
-      // (crash-between-commit-and-checkpoint), or one a second writer
-      // delivered and won the race with (split-brain checkpoint), finds
-      // its ledger row and SKIPS — retrying blind would double-count it
-      val applied = ManifestedPartitions
-        .readSidecarTable(spark, path, Applied, inV)
-      val prior2 = applied.filter(col("batch_id") === batchId).collect()
-      if (prior2.nonEmpty) Some(prior2(0).getAs[Long]("out_v"))
-      else {
-        val (batch, written) = stage()
-        val st = statsAt(path, inV)
-        val appliedOut = applied
-          .unionByName(appliedDf(spark, Seq((batchId, inV, outV))))
-        if (ManifestedPartitions.commitManifestsCas(spark, path, outV,
-            Map(Postings ->
-              (ManifestedPartitions.readEntries(spark, path, Postings,
-                inV) ++ written)),
-            sidecarTables = Map(Applied -> appliedOut.coalesce(1)),
-            sidecarScalars = Map(StatsName -> statsScalars(Stats(
-              st.nDocs + batch.nDocs, st.totalDl + batch.totalDl,
-              st.nBuckets)))))
-          Some(outV)
-        else None
-      }
+    lazy val (batch, written) = stage(spark, path, delta, idCol, textCol)
+    ManifestedPartitions.ingestOnce(spark, path, batchId) { (inV, _) =>
+      ManifestedPartitions.Commit(ManifestedPartitions.appended(spark,
+          path, inV, Map(Postings -> written)),
+        scalars = advanced(path, inV, batch))
     }
   }
 
   /** DELETE a tombstone batch (doc ids) from the index — the GDPR leg of
-    * the postings lifecycle, mirroring the funnel index's vacuum: the
-    * affected buckets are discovered by a column-pruned (id, tb) scan
-    * joined to the tombstones, ONLY those buckets are rewritten
-    * (anti-join into a fresh generation; untouched buckets' files are
-    * never opened), and the stats row is decremented by exactly the
-    * deleted documents' own (n_docs, total_dl) — so idf/avgdl at the next
-    * probe reflect the post-delete corpus. New generation, updated
-    * manifest, and updated stats commit under ONE marker; the dead
-    * generations' bytes are physically removed by [[expire]]. Returns the
-    * number of posting rows purged; unmatched tombstones are ignored;
-    * tombstones are deduplicated so a repeated id cannot inflate the
-    * purge count or double-decrement the stats row (ADVICE r15).
+    * the postings lifecycle, ManifestedPartitions.delete keyed by the
+    * posting's `id` (the tombstones' `doc_id`, renamed): only the buckets
+    * holding deleted documents' postings are rewritten, and the stats
+    * scalars are decremented by exactly the deleted documents' own
+    * (n_docs, total_dl) against the same snapshot, so idf/avgdl at the
+    * next probe reflect the post-delete corpus. Postings and stats commit
+    * under ONE marker; the dead generations' bytes are physically removed
+    * by [[expire]]. Returns the number of posting rows purged; unmatched
+    * tombstones are ignored; tombstones are deduplicated so a repeated id
+    * cannot inflate the purge count or double-decrement the stats
+    * (ADVICE r15).
     */
   def delete(spark: SparkSession, path: String,
-      tombstones: DataFrame): Long = {
-    val ts = tombstones.select("doc_id").distinct().localCheckpoint(true)
-    // the whole plan — affected buckets, rewrite, stats decrement — is a
-    // function of the input snapshot, so every CAS attempt recomputes it
-    // against the then-latest version (a racing compactor moves rows
-    // between generations; a racing append changes the stats base)
-    ManifestedPartitions.retrying(path) { (inV, outV) =>
-      val dead = ManifestedPartitions.read(spark, path, Postings, Tb,
-          ManifestedPartitions.readEntries(spark, path, Postings, inV))
-        .select("id", Tb, "dl") // column-pruned: never reads w/tf
-        .join(broadcast(ts), col("id") === col("doc_id"))
-        .localCheckpoint(true) // buckets + purge count + stats decrement
-      val affected = dead.select(Tb).distinct()
-        .collect().map(_.getInt(0)).toSeq // bounded by the delete batch
-      if (affected.isEmpty) Some(0L)
-      else {
-        val st = statsAt(path, inV)
-        val merged = ManifestedPartitions.stageRewriteAt(
-          spark, path, Postings, Tb, affected,
-          df => df.join(broadcast(ts), df("id") === ts("doc_id"),
-            "left_anti"),
-          inV, ManifestedPartitions.freshGen())
-        if (ManifestedPartitions.commitManifestsCas(spark, path, outV,
-            Map(Postings -> merged),
-            sidecarScalars =
-              Map(StatsName -> statsScalars(decrementStats(st, dead)))))
-          Some(dead.count())
-        else None
-      }
+      tombstones: DataFrame): Long =
+    ManifestedPartitions.delete(spark, path, Seq((Postings, Tb)), "id",
+        tombstones.select(col("doc_id").as("id")), keep = Seq("dl")) {
+      (inV, dead) => Map(StatsName ->
+        statsScalars(decrementStats(statsAt(path, inV), dead)))
     }
-  }
 
   /** The deleted documents' own (n_docs, total_dl) decrement applied to
     * `st` — shared by [[delete]]'s sidecar and the OCC delete writer
@@ -347,8 +275,7 @@ object PostingsIndex {
     // ONE version resolution serving stats AND postings (the snapshot-
     // pinned probe discipline — scores can never mix one version's idf
     // with another's postings)
-    val v = version.orElse(VersionedView.latestVersion(path)).getOrElse(
-      throw new IllegalStateException(s"no committed index at $path"))
+    val v = VersionedView.resolve(path, version)
     val st = statsAt(path, v)
     // consumed twice (as the tf rows and for the per-term df counts) —
     // materialize once so the pruned scan doesn't re-run (ADVICE r14

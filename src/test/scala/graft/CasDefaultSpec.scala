@@ -113,7 +113,9 @@ class CasDefaultSpec extends SparkSpec {
               s"version $v body lacks key $k: $body")
           }
         }
-      MP.rewrite(spark, root, "b", "p", Seq(0), identity)
+      assert(MP.commitManifestsCas(spark, root, head + 1, Map("b" ->
+        MP.stageRewriteAt(spark, root, "b", "p", Seq(0), identity,
+          snapshotV = head, gen = head + 1))))
       assert(MP.compact(spark, root, Seq(("a", "p"), ("b", "p"))) == 1)
       assertComplete()
       val (expired, _) = MP.expire(spark, root,

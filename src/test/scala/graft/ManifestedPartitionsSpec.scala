@@ -104,7 +104,9 @@ class ManifestedPartitionsSpec extends SparkSpec {
         .collect()(0).getLong(0) == 2L)
       // staged v2: a new generation written, marker withheld — a reader
       // resolves ONE committed version for manifest AND sidecar: v1
-      val (gen, merged) = MP.stageAppend(spark, root, "d", "p", df(3 -> 1))
+      val gen = MP.latestVersion(root).get + 1
+      val merged = MP.readEntries(spark, root, "d", gen - 1) ++
+        MP.writeGen(df(3 -> 1), root, "d", "p", gen)
       assert(VersionedView.latestVersion(root).contains(1L))
       // the CAS commit stages the updated sidecar WRITER-UNIQUE
       // (version-nonce dir referenced from the marker body) and lands
@@ -213,8 +215,9 @@ class ManifestedPartitionsSpec extends SparkSpec {
       MP.init(df(1 -> 0, 2 -> 1), root, "d", "p")
       // GDPR-delete EVERY row: both partitions empty out and drop from
       // the manifest — a legal, fully-vacuumed snapshot
-      MP.rewrite(spark, root, "d", "p", Seq(0, 1),
-        _.filter(col("x") < 0))
+      assert(MP.commitManifestsCas(spark, root, 2L, Map("d" ->
+        MP.stageRewriteAt(spark, root, "d", "p", Seq(0, 1),
+          _.filter(col("x") < 0), snapshotV = 1L, gen = 2L))))
       assert(MP.readEntries(spark, root, "d", 2L).isEmpty)
       val empty = MP.readLatest(spark, root, "d", "p")
       assert(empty.columns.toSeq == Seq("x", "p"),
@@ -286,7 +289,9 @@ class ManifestedPartitionsSpec extends SparkSpec {
       MP.append(spark, root, "d", "p", df(3 -> 0)) // v2
       // a concurrent writer's IN-FLIGHT stage: generation written, commit
       // not yet landed — exactly what GC must not eat
-      val (gen, merged) = MP.stageAppend(spark, root, "d", "p", df(4 -> 1))
+      val gen = MP.latestVersion(root).get + 1
+      val merged = MP.readEntries(spark, root, "d", gen - 1) ++
+        MP.writeGen(df(4 -> 1), root, "d", "p", gen)
       val g3p1 = stage.resolve("d").resolve(s"g=$gen").resolve("p=1")
       assert(Files.isDirectory(g3p1))
       val (expired, _) = MP.expire(spark, root, Seq(("d", "p")), 1)

@@ -9,7 +9,7 @@ import graft.sources.{ManifestedPartitions => MP, VersionedView}
 
 /** Optimistic-concurrency maintenance commits (q_s_ivf_occ_maint, r16):
   * the gate proves the serialized end state's VALUES; this spec pins the
-  * protocol on a hand-planted dataset:
+  * protocol on hand-planted datasets:
   *   - exactly one of two racing writers wins the CAS, and the committed
   *     version's manifest is the WINNER's (the loser's staged generation
   *     is never referenced — the lost-update a replace-marker would have
@@ -17,7 +17,10 @@ import graft.sources.{ManifestedPartitions => MP, VersionedView}
   *   - the loser's retry against the winner's snapshot lands BOTH
   *     writers' effects;
   *   - the abandoned staged generation is garbage: unreferenced by any
-  *     committed manifest and physically removed by expire.
+  *     committed manifest and physically removed by expire;
+  *   - two default deletes of the same tombstones race cleanly: the loser
+  *     re-plans on the winner's snapshot, finds nothing live and purges
+  *     0, so the counts add up and no second version is committed.
   */
 class OccMaintSpec extends SparkSpec {
 
@@ -150,6 +153,70 @@ class OccMaintSpec extends SparkSpec {
       assert(v3gens.contains(winnerGen) && !v3gens.contains(loserGen),
         s"v3 references $v3gens — not the winner's manifest")
     } finally IvfIndex.deleteDir(root)
+  }
+
+  test("racing deletes of the SAME tombstones (IvfIndex.delete, " +
+    "FunnelMv.vacuum): neither throws, one purges every live tombstoned " +
+    "row, the other re-plans on the winner's snapshot and purges 0") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
+    // both threads start together and run the whole default delete, so
+    // they typically plan against the same snapshot and race its CAS
+    def race(delete: () => Long): Seq[Long] = {
+      val gate = new CyclicBarrier(2)
+      val pool = Executors.newFixedThreadPool(2)
+      try {
+        val futures = (0 until 2).map { _ =>
+          pool.submit(new Callable[Long] {
+            def call(): Long = {
+              gate.await(30, TimeUnit.SECONDS)
+              delete()
+            }
+          })
+        }
+        futures.map(_.get(240, TimeUnit.SECONDS))
+      } finally pool.shutdown()
+    }
+    def check(counts: Seq[Long], live: Long, root: String): Unit = {
+      assert(live > 0, "no tombstoned row was live — vacuous race")
+      assert(counts.sum == live && counts.contains(0L),
+        s"purge counts $counts for $live live tombstoned rows")
+      assert(MP.latestVersion(root).contains(2L),
+        "the losing delete committed a version of its own")
+    }
+
+    val e = spark.read.parquet(s"$sfCorrect/embeddings.parquet")
+    val ivf = Files.createTempDirectory("graft_occ_delete_ivf")
+    try {
+      IvfIndex.write(e, "vec_id", "embedding", 8, ivf.toString) // v1
+      // -1 matches nothing: only LIVE tombstoned rows count
+      val ts = e.filter(pmod(col("vec_id"), lit(9)) === 4)
+        .select(col("vec_id").as("id"))
+        .union(Seq(-1L).toDF("id")).localCheckpoint(true)
+      val tsIds = ts.collect().map(_.getLong(0)).toSet
+      val live = MP.readLatest(spark, ivf.toString, "lists", "cell")
+        .join(ts, Seq("id")).count()
+      check(race(() => IvfIndex.delete(spark, ivf.toString, ts)), live,
+        ivf.toString)
+      assert(MP.readLatest(spark, ivf.toString, "lists", "cell")
+        .filter(col("id").isInCollection(tsIds)).count() == 0,
+        "a tombstoned vector survived the racing deletes")
+    } finally IvfIndex.deleteDir(ivf.toString)
+
+    val mv = Files.createTempDirectory("graft_occ_delete_mv")
+    try {
+      val idx = Seq((1L, 0, "A", 10L, true, true),
+          (2L, 0, "B", 3L, false, false),
+          (3L, 0, "C", 12L, true, false),
+          (101L, 1, "A", 10L, true, true))
+        .toDF("doc_id", "batch", "fp", "n_tok", "q", "qr")
+      graft.dedup.FunnelMv.writeDocIndex(idx, mv.toString, 4) // v1
+      val tombstones = Seq(1L, 2L, 999L).toDF("doc_id")
+      check(race(() => graft.dedup.FunnelMv.vacuum(spark, mv.toString,
+        tombstones)), 2L, mv.toString)
+      assert(graft.dedup.FunnelMv.readDocIndex(spark, mv.toString)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+        == Set(3L, 101L), "a tombstoned doc survived the racing vacuums")
+    } finally IvfIndex.deleteDir(mv.toString)
   }
 
   test("tryMark CAS under a real multi-threaded race: exactly one winner " +

@@ -245,4 +245,64 @@ class PostingsIndexSpec extends SparkSpec {
         "pinned v1 probe changed after the OCC commit")
     } finally IvfIndex.deleteDir(root)
   }
+
+  test("ingestBatch is exactly-once: a re-delivered batch returns the " +
+    "same version and changes nothing; a dual delivery by two racing " +
+    "writers commits once") {
+    val sp = spark
+    import sp.implicits._
+    val docs = Seq((1L, "join vector join stream"),
+      (2L, "vector stream table")).toDF("doc_id", "text")
+    val stage = Files.createTempDirectory("graft_postings_ingest")
+    val root = stage.toString
+    def postingRows() = ManifestedPartitions.readLatest(spark, root,
+        "postings", "tb")
+      .select("id", "w", "tf", "dl").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .sorted.toSeq
+    try {
+      PostingsIndex.write(docs, "doc_id", "text", nBuckets, root) // v1
+      val b7 = Seq((3L, "join table scan")).toDF("doc_id", "text")
+      val v = PostingsIndex.ingestBatch(spark, root, b7, "doc_id", "text", 7L)
+      assert(v == 2L)
+      val stats = PostingsIndex.readStats(spark, root)
+      assert(stats == PostingsIndex.Stats(3L, 10L, nBuckets))
+      val rows = postingRows()
+      // re-delivery (crash between commit and checkpoint): same version,
+      // nothing new committed, stats and postings unchanged
+      assert(PostingsIndex.ingestBatch(spark, root, b7, "doc_id", "text",
+        7L) == v, "re-delivered batch returned a different version")
+      assert(ManifestedPartitions.latestVersion(root).contains(v))
+      assert(PostingsIndex.readStats(spark, root) == stats,
+        "re-delivery changed the stats")
+      assert(postingRows() == rows, "re-delivery changed the postings")
+
+      // split-brain checkpoint: TWO writers deliver batch 8 at once
+      val b8 = Seq((4L, "stream stream stream join")).toDF("doc_id", "text")
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val outs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      def writer() = new Thread(() =>
+        try {
+          barrier.await(120, java.util.concurrent.TimeUnit.SECONDS)
+          outs.add(PostingsIndex.ingestBatch(spark, root, b8, "doc_id",
+            "text", 8L))
+          ()
+        } catch { case t: Throwable => errs.add(t) })
+      val a = writer(); val b = writer()
+      a.start(); b.start(); a.join(240000); b.join(240000)
+      assert(errs.isEmpty, s"a dual-delivery writer failed: ${errs.peek()}")
+      import scala.jdk.CollectionConverters._
+      assert(outs.asScala.toSeq == Seq(3L, 3L),
+        s"dual delivery committed twice: ${outs.asScala.toSeq}")
+      assert(ManifestedPartitions.latestVersion(root).contains(3L))
+      val ledger = ManifestedPartitions.readSidecarTable(spark, root,
+          ManifestedPartitions.Applied, 3L)
+        .filter(col("batch_id") === 8L).count()
+      assert(ledger == 1L, s"ledger holds batch 8 $ledger times")
+      assert(PostingsIndex.readStats(spark, root)
+        == PostingsIndex.Stats(4L, 14L, nBuckets),
+        "dual delivery double-counted the batch in n_docs/total_dl")
+    } finally IvfIndex.deleteDir(root)
+  }
 }
