@@ -1,68 +1,25 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, DataFrame}
 
-/** Distributed exponentially-weighted moving average — a LINEAR RECURRENCE
-  * scan (`y_t = (1−α)·y_{t−1} + α·x_t`, seeded `y_1 = x_1`), which no window
-  * function can express: every output depends on the entire prefix through a
-  * non-associative-looking fold. The recurrence IS associative once lifted
-  * to affine maps (`v ↦ A·v + B` composes as `A₁A₂, A₂B₁+B₂` — Blelloch's
-  * scan), which is what makes a distributed plan possible at all
-  * (the reference's pandas `ewm` is a single-core sequential loop; at 100 TB
-  * the sequence for one group does not fit one machine).
+/** Distributed exponentially-weighted moving average, the recurrence
+  * `y_t = (1−α)·y_{t−1} + α·x_t` seeded `y_1 = x_1` (pandas
+  * `ewm(alpha=…, adjust=False).mean()`, the reference's EMA indicators),
+  * run as a [[SegmentedScan.recurrence]] over buckets of `bucketKey` (e.g.
+  * epoch-days of the date column).
   *
-  * Plan (a SequenceOps-style two-pass stitch, but for a recurrence instead
-  * of rank/lead):
+  * Carry: a fold seeded with `s` differs from the fresh fold by
+  * `(1−α)·(s − x_1)` after the first row, decaying by `(1−α)` per row, so an
+  * n-row segment leaves with `y_last + (1−α)^n · (s − x_1)`. For α=0.125 the
+  * correction underflows to exactly 0 past ~5 300 rows, so composition is
+  * numerically benign at any scale.
   *
-  *   1. DETERMINISTIC equal-width bucketing on a coarse monotone order key
-  *      (`bucketKey`, e.g. epoch-days of the date column): `lo`/`hi` from an
-  *      exact min/max aggregate, integer width `((hi−lo) div B)+1`, bucket
-  *      `(k−lo) div width`. Value-based — NOT `repartitionByRange`, whose
-  *      sampled bounds differ run to run; here two independent invocations
-  *      (the Verify aux dump and the gated query) segment identically, which
-  *      the oracle replay depends on.
-  *   2. one hash shuffle on the bucket id + in-partition sort by
-  *      (bucket, group, order) — rows of a (bucket, group) SEGMENT are
-  *      contiguous and ordered; lazily checkpointed so both passes read one
-  *      materialization.
-  *   3. boundary pass: per segment, a sequential fresh fold (`y_1 = x_1`)
-  *      emitting (bucket, group, count, first x, last local y) — tiny output
-  *      (≤ buckets × |groups| rows) collected to the driver.
-  *   4. driver composition in bucket order per group: the seed entering a
-  *      segment is the previous segment's OUTGOING value,
-  *      `y_out = y_localLast + (1−α)^count · (seed − x_first)` — the affine
-  *      correction of a fresh fold (difference from the seeded fold decays
-  *      by (1−α) per row). For α=0.125 the correction underflows to exactly
-  *      0 past ~5 300 rows: deep history has provably no effect, so the
-  *      composition is numerically benign at any scale.
-  *   5. output pass: per segment, the sequential recurrence seeded by the
-  *      composed incoming value (`y_1 = (1−α)·seed + α·x_1`; first segment
-  *      of a group folds fresh). Every output value is produced by the
-  *      recurrence itself — plain IEEE double `×`/`+` — so a DuckDB
-  *      recursive CTE seeded from the dumped seeds table reproduces every
-  *      row BIT-FOR-BIT (verified: 20 000-step folds agree to the last bit
-  *      across JVM and DuckDB).
-  *
-  * Passes 3 and 5 are `mapPartitions` — the charter's case (d), justified
-  * here because a per-row data-dependent recurrence is genuine per-partition
-  * imperative logic (windows/aggregates cannot express it, and an
-  * `aggregate()` HOF per segment would materialize each segment as one
-  * array row). Parallelism is #buckets for the scan passes, never #groups.
-  *
-  * Contracts: `orderCols` must be a total order within each group (include
-  * a unique tiebreaker); `bucketKey` must be a non-decreasing function of
-  * the leading order column (so segments are contiguous in time) and
-  * non-null; `valCol` must be non-null (loud IllegalArgumentException
-  * otherwise). Lifecycle: the checkpointed scan blocks back the returned
-  * frame and stay registered until unpersisted (Bench/Verify free them via
-  * `getPersistentRDDs`; long-lived callers should do the same once the
-  * result is consumed).
-  *
-  * Reference twin: pandas `ewm(alpha=…, adjust=False).mean()` over
-  * per-ticker closes (the standard EMA-indicator shape of the reference's
-  * stock analytics, e.g. datavisualization.py's moving-average feeds).
+  * Bit-exactness: every output is the step `(1−α)·y + α·x` in that operand
+  * order (a seeded segment opens with `(1−α)·seed + α·x`), so a DuckDB
+  * recursive CTE seeded from the seeds table reproduces every row bit for
+  * bit. Contracts: `orderCols` a total order within each group; `bucketKey`
+  * non-null and non-decreasing in the leading order column; `valCol`
+  * non-null (loud IllegalArgumentException otherwise).
   */
 object EwmaScan {
 
@@ -74,134 +31,23 @@ object EwmaScan {
       outCol, buckets)._1
 
   /** Returns (result, seeds): `result` is `df` plus the `outCol` EWMA
-    * column; `seeds` is the (bucket, group…, seed) boundary table — the
-    * value entering each segment (null for a group's first segment). The
-    * seeds table is what an external engine needs to replay the per-row
-    * recurrence exactly (Verify dumps it under aux/ for the DuckDB oracle).
+    * column; `seeds` is the (`__ewma_b`, group…, `seed`) table of the value
+    * entering each segment (null for a group's first segment) — what an
+    * external engine needs to replay the recurrence exactly (Verify dumps
+    * it under aux/ for the DuckDB oracle).
     */
   def ewmaWithSeeds(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[String], bucketKey: Column, valCol: String,
       alpha: Double, outCol: String,
       buckets: Int = 32): (DataFrame, DataFrame) = {
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1): $alpha")
-    require(buckets > 0, s"buckets must be positive: $buckets")
-    // duplicate input names survive into the checkpointed LogicalRDD schema
-    // and trip Spark's ambiguous-output WARN on every run — refuse loudly
-    require(df.schema.fieldNames.distinct.length == df.schema.fieldNames.length,
-      s"EwmaScan: duplicate column names in input: " +
-        df.schema.fieldNames.diff(df.schema.fieldNames.distinct).mkString(","))
-    val spark = df.sparkSession
     val om = 1.0 - alpha
-
-    val keyed = df
-      .withColumn("__ewma_k", bucketKey.cast("long"))
-      .withColumn("__ewma_x", col(valCol).cast("double"))
-
-    val gFields = groupCols.map(df.schema(_))
-    val seedSchema = StructType(
-      StructField("__ewma_b", IntegerType, nullable = false) +:
-        gFields.toIndexedSeq :+
-        StructField("seed", DoubleType, nullable = true))
-    val outSchema = StructType(
-      df.schema.fields :+ StructField(outCol, DoubleType, nullable = true))
-
-    // exact integer bucket bounds — both engines recompute these identically
-    val mm = keyed.agg(min(col("__ewma_k")), max(col("__ewma_k"))).first()
-    if (mm.isNullAt(0)) {
-      // empty input: typed empty results, no scan jobs
-      return (spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), outSchema),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), seedSchema))
-    }
-    val lo = mm.getLong(0)
-    // width > (hi−lo)/buckets ⟹ (k−lo) div width ≤ buckets−1, overflow-free
-    val width = (mm.getLong(1) - lo) / buckets + 1
-
-    val p = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = keyed
-      .withColumn("__ewma_b",
-        expr(s"CAST((__ewma_k - ${lo}L) DIV ${width}L AS INT)"))
-      .repartition(p, col("__ewma_b"))
-      .sortWithinPartitions(
-        (Seq("__ewma_b") ++ groupCols ++ orderCols).map(col): _*)
-      .localCheckpoint(false) // lazy: the boundary pass is the first consumer
-
-    val bIdx = sorted.schema.fieldIndex("__ewma_b")
-    val xIdx = sorted.schema.fieldIndex("__ewma_x")
-    val gIdxs = groupCols.map(sorted.schema.fieldIndex)
-
-    def xOf(r: Row): Double = {
-      if (r.isNullAt(xIdx)) throw new IllegalArgumentException(
-        s"EwmaScan: null $valCol value — the recurrence requires non-null inputs")
-      r.getDouble(xIdx)
-    }
-
-    // boundary pass: per (bucket, group) — count, first x, fresh-fold last y
-    val segStats = sorted.rdd.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, Seq[Any], Long, Double, Double)]
-      var curB = 0
-      var curG: Seq[Any] = null
-      var open = false
-      var cnt = 0L
-      var xFirst = 0.0
-      var y = 0.0
-      it.foreach { r =>
-        val rb = r.getInt(bIdx)
-        val rg = gIdxs.map(r.get(_))
-        val x = xOf(r)
-        if (!open || rb != curB || rg != curG) {
-          if (open) out += ((curB, curG, cnt, xFirst, y))
-          open = true; curB = rb; curG = rg
-          cnt = 1L; xFirst = x; y = x
-        } else {
-          cnt += 1; y = om * y + alpha * x
-        }
-      }
-      if (open) out += ((curB, curG, cnt, xFirst, y))
-      out.iterator
-    }.collect() // ≤ buckets × |groups| rows — tiny by the op's charter
-
-    // driver composition: seed entering each segment, in bucket order
-    val seedEntries: Seq[(Int, Seq[Any], java.lang.Double)] =
-      segStats.groupBy(_._2).toSeq.flatMap { case (g, segs) =>
-        var vIn: java.lang.Double = null
-        segs.sortBy(_._1).map { case (bk, _, cnt, xF, yL) =>
-          val entry = (bk, g, vIn)
-          vIn = if (vIn == null) yL
-                else yL + math.pow(om, cnt.toDouble) * (vIn - xF)
-          entry
-        }
-      }
-    val seedMap: Map[(Int, Seq[Any]), java.lang.Double] =
-      seedEntries.map { case (bk, g, s) => (bk, g) -> s }.toMap
-    val seedsDf = spark.createDataFrame(
-      java.util.Arrays.asList(seedEntries.map { case (bk, g, s) =>
-        Row.fromSeq(bk +: g :+ (if (s == null) null else s.doubleValue()))
-      }: _*), seedSchema)
-
-    // output pass: the recurrence itself, seeded per segment
-    val origIdxs = df.schema.fieldNames.map(sorted.schema.fieldIndex)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curB = 0
-      var curG: Seq[Any] = null
-      var open = false
-      var y = 0.0
-      it.map { r =>
-        val rb = r.getInt(bIdx)
-        val rg = gIdxs.map(r.get(_))
-        val x = xOf(r)
-        if (!open || rb != curB || rg != curG) {
-          open = true; curB = rb; curG = rg
-          val seed = seedMap.getOrElse((rb, rg), null)
-          y = if (seed == null) x else om * seed + alpha * x
-        } else {
-          y = om * y + alpha * x
-        }
-        Row.fromSeq(origIdxs.map(r.get(_)).toSeq :+ y)
-      }
-    }
-    (spark.createDataFrame(rows, outSchema), seedsDf)
+    SegmentedScan.recurrence(df, groupCols, orderCols, bucketKey, valCol,
+      buckets, Seq(outCol), SegmentedScan.Recurrence[Double](
+        "EwmaScan", "__ewma_b", Seq("seed"),
+        fresh = x => x,
+        step = (y, x) => om * y + alpha * x,
+        carry = (s, n, x1, yL) => yL + math.pow(om, n.toDouble) * (s - x1),
+        state = y => Seq(y)))
   }
 }

@@ -1,58 +1,24 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, DataFrame}
 
-/** Distributed Holt linear-trend smoothing (double exponential smoothing):
+/** Distributed Holt linear-trend smoothing (double exponential smoothing,
+  * statsmodels' `ExponentialSmoothing(trend='add')`), seeded l_1 = x_1,
+  * b_1 = 0 and run as a [[SegmentedScan.recurrence]]:
   *
   *   l_t = (1−α)·(l_{t−1} + b_{t−1}) + α·x_t
   *   b_t = β·(l_t − l_{t−1}) + (1−β)·b_{t−1}
   *
-  * seeded l_1 = x_1, b_1 = 0 — the forecasting recurrence behind pandas'
-  * `Holt(...).fit()` / statsmodels' `ExponentialSmoothing(trend='add')`
-  * (both sequential single-core loops). Like [[EwmaScan]]'s scalar EMA,
-  * no window function can express it; unlike the EMA it carries a
-  * TWO-dimensional state, so the lift that makes it distributable is the
-  * affine map on state vectors v = (l, b):
+  * i.e. v_t = A·v_{t−1} + c·x_t on v = (l, b), A = [[1−α, 1−α],
+  * [−αβ, β(1−α)+(1−β)]]. Carry: a fold seeded with `s` differs from the
+  * fresh fold by d_n = A^{n−1}·d_1, d_1 = step(s, x_1) − (x_1, 0), so an
+  * n-row segment leaves with last + A^{n−1}·d_1 (A^{n−1} by squaring). A's
+  * spectral radius √((1−α)(1−β)) < 1, so deep-history corrections decay.
   *
-  *   v_t = A·v_{t−1} + c·x_t,   A = [[1−α, 1−α], [−αβ, β(1−α)+(1−β)]],
-  *                              c = (α, αβ)
-  *
-  * Affine maps compose associatively (Blelloch scan over the 2×2 affine
-  * monoid), which yields the same two-pass stitch as EwmaScan:
-  *
-  *   1. deterministic equal-width bucketing on a monotone integer order
-  *      key (value-based, NOT repartitionByRange — independent invocations
-  *      must segment identically for the oracle replay);
-  *   2. one hash shuffle on the bucket id + in-partition sort; lazily
-  *      checkpointed so both passes read one materialization;
-  *   3. boundary pass: per (bucket, group) segment a fresh sequential fold
-  *      emitting (count, first x, last local (l, b)) — ≤ buckets×|groups|
-  *      rows to the driver;
-  *   4. driver composition in bucket order: a seeded fold differs from the
-  *      fresh fold by a vector that propagates LINEARLY,
-  *      d_n = A^{n−1}·d_1 with d_1 = A·seed + c·x_1 − (x_1, 0), so the
-  *      outgoing state is localLast + A^{n−1}·d_1 (A^{n−1} by 2×2
-  *      exponentiation-by-squaring; for α,β ∈ (0,1) A's spectral radius is
-  *      √((1−α)(1−β)) < 1, so deep-history corrections decay — numerically
-  *      benign at any scale);
-  *   5. output pass: the recurrence itself seeded per segment. Every output
-  *      value is produced by plain IEEE double ×/+ with fixed operand
-  *      order, so a DuckDB recursive CTE seeded from the dumped seeds
-  *      table reproduces every row BIT-FOR-BIT.
-  *
-  * Passes 3 and 5 are `mapPartitions` (charter case (d)): a data-dependent
-  * two-state recurrence is genuine per-partition imperative logic.
-  * Parallelism is #buckets, never #groups.
-  *
-  * Contracts match EwmaScan: `orderCols` a total order within groups,
-  * `bucketKey` non-null and non-decreasing in the leading order column,
-  * `valCol` non-null (loud IllegalArgumentException otherwise).
-  *
-  * Reference twin: the trend-projection step a stock dashboard runs on the
-  * daily close series (the reference's moving-average/trend chart feeds,
-  * e.g. datavisualization.py's smoothed series).
+  * Bit-exactness: every output is the step in the operand order above,
+  * mirrored verbatim by the oracle SQL, so a DuckDB recursive CTE seeded
+  * from the seeds table reproduces every row bit for bit. Contracts match
+  * [[EwmaScan]].
   */
 object HoltScan {
 
@@ -64,9 +30,9 @@ object HoltScan {
       levelCol, trendCol, buckets)._1
 
   /** Returns (result, seeds): `result` is `df` plus level and trend
-    * columns; `seeds` is the (bucket, group…, seed_l, seed_b) boundary
-    * table — the state ENTERING each segment (nulls for a group's first
-    * segment), which is all an external engine needs to replay the per-row
+    * columns; `seeds` is the (`__holt_b`, group…, `seed_l`, `seed_b`) table
+    * of the state ENTERING each segment (nulls for a group's first
+    * segment), which is all an external engine needs to replay the
     * recurrence exactly (Verify dumps it under aux/).
     */
   def holtWithSeeds(df: DataFrame, groupCols: Seq[String],
@@ -75,160 +41,36 @@ object HoltScan {
       buckets: Int = 32): (DataFrame, DataFrame) = {
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1): $alpha")
     require(beta > 0.0 && beta < 1.0, s"beta must be in (0,1): $beta")
-    require(buckets > 0, s"buckets must be positive: $buckets")
-    val spark = df.sparkSession
     val om = 1.0 - alpha
     val ob = 1.0 - beta
-
-    val keyed = df
-      .withColumn("__holt_k", bucketKey.cast("long"))
-      .withColumn("__holt_x", col(valCol).cast("double"))
-
-    val gFields = groupCols.map(df.schema(_))
-    val seedSchema = StructType(
-      StructField("__holt_b", IntegerType, nullable = false) +:
-        gFields.toIndexedSeq :+
-        StructField("seed_l", DoubleType, nullable = true) :+
-        StructField("seed_b", DoubleType, nullable = true))
-    val outSchema = StructType(df.schema.fields :+
-      StructField(levelCol, DoubleType, nullable = true) :+
-      StructField(trendCol, DoubleType, nullable = true))
-
-    val mm = keyed.agg(min(col("__holt_k")), max(col("__holt_k"))).first()
-    if (mm.isNullAt(0)) {
-      return (spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), outSchema),
-        spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), seedSchema))
+    type V = (Double, Double)
+    def step(v: V, x: Double): V = {
+      val l1 = om * (v._1 + v._2) + alpha * x
+      (l1, beta * (l1 - v._1) + ob * v._2)
     }
-    val lo = mm.getLong(0)
-    val width = (mm.getLong(1) - lo) / buckets + 1
-
-    val p = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = keyed
-      .withColumn("__holt_b",
-        expr(s"CAST((__holt_k - ${lo}L) DIV ${width}L AS INT)"))
-      .repartition(p, col("__holt_b"))
-      .sortWithinPartitions(
-        (Seq("__holt_b") ++ groupCols ++ orderCols).map(col): _*)
-      .localCheckpoint(false)
-
-    val bIdx = sorted.schema.fieldIndex("__holt_b")
-    val xIdx = sorted.schema.fieldIndex("__holt_x")
-    val gIdxs = groupCols.map(sorted.schema.fieldIndex)
-
-    def xOf(r: Row): Double = {
-      if (r.isNullAt(xIdx)) throw new IllegalArgumentException(
-        s"HoltScan: null $valCol value — the recurrence requires non-null inputs")
-      r.getDouble(xIdx)
-    }
-
-    // the recurrence step — THE canonical operand order, mirrored verbatim
-    // by the oracle SQL (bit-exactness depends on it)
-    @inline def step(l: Double, b: Double, x: Double): (Double, Double) = {
-      val l1 = om * (l + b) + alpha * x
-      val b1 = beta * (l1 - l) + ob * b
-      (l1, b1)
-    }
-
-    // boundary pass: per segment — count, first x, fresh-fold last (l, b)
-    val segStats = sorted.rdd.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, Seq[Any], Long, Double, Double, Double)]
-      var curB = 0
-      var curG: Seq[Any] = null
-      var open = false
-      var cnt = 0L
-      var xFirst = 0.0
-      var l = 0.0
-      var b = 0.0
-      it.foreach { r =>
-        val rb = r.getInt(bIdx)
-        val rg = gIdxs.map(r.get(_))
-        val x = xOf(r)
-        if (!open || rb != curB || rg != curG) {
-          if (open) out += ((curB, curG, cnt, xFirst, l, b))
-          open = true; curB = rb; curG = rg
-          cnt = 1L; xFirst = x; l = x; b = 0.0
-        } else {
-          cnt += 1
-          val s = step(l, b, x); l = s._1; b = s._2
-        }
-      }
-      if (open) out += ((curB, curG, cnt, xFirst, l, b))
-      out.iterator
-    }.collect() // ≤ buckets × |groups| rows — tiny by the op's charter
-
-    // 2×2 matrix helpers for the driver composition
-    type M = (Double, Double, Double, Double) // row-major
-    val A: M = (om, om, -alpha * beta, beta * om + ob)
-    val I: M = (1.0, 0.0, 0.0, 1.0)
+    type M = (Double, Double, Double, Double) // 2×2, row-major
     def mul(p: M, q: M): M = (
       p._1 * q._1 + p._2 * q._3, p._1 * q._2 + p._2 * q._4,
       p._3 * q._1 + p._4 * q._3, p._3 * q._2 + p._4 * q._4)
-    def mpow(m: M, e: Long): M = {
-      var r = I; var base = m; var k = e
+    def pow(m: M, e: Long): M = { // by squaring
+      var r: M = (1.0, 0.0, 0.0, 1.0); var base = m; var k = e
       while (k > 0) {
         if ((k & 1L) == 1L) r = mul(r, base)
         base = mul(base, base); k >>= 1
       }
       r
     }
-    def mv(m: M, v: (Double, Double)): (Double, Double) =
-      (m._1 * v._1 + m._2 * v._2, m._3 * v._1 + m._4 * v._2)
-
-    // driver composition: the state entering each segment, in bucket order
-    val seedEntries: Seq[(Int, Seq[Any], Option[(Double, Double)])] =
-      segStats.groupBy(_._2).toSeq.flatMap { case (g, segs) =>
-        var vIn: Option[(Double, Double)] = None
-        segs.sortBy(_._1).map { case (bk, _, cnt, xF, lL, bL) =>
-          val entry = (bk, g, vIn)
-          vIn = vIn match {
-            case None => Some((lL, bL))
-            case Some(s) =>
-              // seeded first-row state minus fresh first-row state
-              val s1 = step(s._1, s._2, xF)
-              val d1 = (s1._1 - xF, s1._2 - 0.0)
-              val dn = mv(mpow(A, cnt - 1), d1)
-              Some((lL + dn._1, bL + dn._2))
-          }
-          entry
-        }
-      }
-    val seedMap: Map[(Int, Seq[Any]), Option[(Double, Double)]] =
-      seedEntries.map { case (bk, g, s) => (bk, g) -> s }.toMap
-    val seedsDf = spark.createDataFrame(
-      java.util.Arrays.asList(seedEntries.map { case (bk, g, s) =>
-        Row.fromSeq(bk +: g :+
-          s.map(_._1).map(Double.box).orNull :+
-          s.map(_._2).map(Double.box).orNull)
-      }: _*), seedSchema)
-
-    // output pass: the recurrence itself, seeded per segment
-    val origIdxs = df.schema.fieldNames.map(sorted.schema.fieldIndex)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curB = 0
-      var curG: Seq[Any] = null
-      var open = false
-      var l = 0.0
-      var b = 0.0
-      it.map { r =>
-        val rb = r.getInt(bIdx)
-        val rg = gIdxs.map(r.get(_))
-        val x = xOf(r)
-        if (!open || rb != curB || rg != curG) {
-          open = true; curB = rb; curG = rg
-          seedMap.getOrElse((rb, rg), None) match {
-            case None => l = x; b = 0.0
-            case Some(s) =>
-              val s1 = step(s._1, s._2, x); l = s1._1; b = s1._2
-          }
-        } else {
-          val s1 = step(l, b, x); l = s1._1; b = s1._2
-        }
-        Row.fromSeq(origIdxs.map(r.get(_)).toSeq :+ l :+ b)
-      }
-    }
-    (spark.createDataFrame(rows, outSchema), seedsDf)
+    SegmentedScan.recurrence(df, groupCols, orderCols, bucketKey, valCol,
+      buckets, Seq(levelCol, trendCol), SegmentedScan.Recurrence[V](
+        "HoltScan", "__holt_b", Seq("seed_l", "seed_b"),
+        fresh = x => (x, 0.0),
+        step = step,
+        carry = { (s, n, x1, last) =>
+          val s1 = step(s, x1)
+          val (d1l, d1b) = (s1._1 - x1, s1._2 - 0.0) // d_1
+          val a = pow((om, om, -alpha * beta, beta * om + ob), n - 1)
+          (last._1 + (a._1 * d1l + a._2 * d1b), last._2 + (a._3 * d1l + a._4 * d1b))
+        },
+        state = v => Seq(v._1, v._2)))
   }
 }

@@ -1,407 +1,126 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Distributed sequence operators for LOW-CARDINALITY groups.
-  *
-  * Spark's `Window.partitionBy(g).orderBy(t)` funnels each group through a
-  * single task — with 3 groups, a cluster of any size runs 3-wide (measured
-  * 5.5× degradation at 10× data in tools.Soak). This operator instead
-  * range-partitions by (group ++ order) — one GROUP SPANS MANY partitions —
-  * and stitches per-range-partition window results into global ones with a
-  * tiny driver-side boundary exchange:
-  *
-  *   1. range-partition + sort by (group ++ order); tag rows with their
-  *      range partition id;
-  *   2. boundary job (tiny): per (partition, group) — row count and the
-  *      in-order FIRST row's lead-source value (min over the order-key
-  *      struct);
-  *   3. driver: prefix-sum counts into per-(partition, group) row-number
-  *      offsets; for each (partition, group), the successor lead value is
-  *      the group's first value in its next containing partition (group
-  *      rows are contiguous across the range partitions);
-  *   4. one fully codegen'd pass: a window over (partition-id, group) —
-  *      parallelism = #partitions, not #groups — gives local row numbers
-  *      and leads; a broadcast join against the collected boundary table
-  *      (P×G rows) shifts them global: rn = offset + local rn, and the
-  *      local last row takes the successor's lead value.
-  *
-  * Everything stays in Tungsten/whole-stage codegen — no RDD[Row] boxing
-  * (a prior two-pass mapPartitions formulation spent its time building Row
-  * objects: 33 s for 30M rows vs ~8 s for this plan at the same 50× soak).
-  * Exact same semantics as the window functions (proven by SequenceOpsSpec
-  * and the q_m2_ols_next DuckDB oracle). This is the charter's case (b)/(c)
-  * territory solved with composition: custom distribution logic expressed
-  * through built-in operators.
+import SegmentedScan._
+
+/** Window functions for LOW-CARDINALITY groups — row_number, lead, running
+  * sums and running maxima over PARTITION BY `groupCols` ORDER BY
+  * `orderCols` — as [[SegmentedScan]] range scans: parallelism is the
+  * range-partition count, not the group count. `orderCols` must be a total
+  * order within each group (include a unique tiebreaker); `groupCols` may
+  * be empty (a global scan, which a plain `Window.orderBy` would funnel
+  * through one task). Semantics equal the window functions (SequenceOpsSpec
+  * and the q_m2_ols_next DuckDB oracle pin them).
   */
 object SequenceOps {
 
-  /** Adaptive front door: when the group count already saturates the
-    * target parallelism, the plain window is the right plan; below that,
-    * the range-partitioned stitch takes over. Semantics identical.
-    */
-  def leadAndRowNumber(
-      df: DataFrame,
-      groupCols: Seq[String],
-      orderCols: Seq[String],
-      leadSrc: Option[String] = None,
-      leadOut: String = "lead",
-      rnCol: Option[String] = None,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val p = numPartitions.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val nGroups = df.select(groupCols.map(col): _*).distinct().limit(p).count()
-    if (nGroups >= p) {
-      val w = Window
-        .partitionBy(groupCols.map(col): _*)
-        .orderBy(orderCols.map(col): _*)
-      val withLead = leadSrc match {
-        case Some(src) => df.withColumn(leadOut, lead(col(src), 1).over(w))
-        case None => df
-      }
-      rnCol match {
-        case Some(rc) => withLead.withColumn(rc, row_number().over(w).cast("long"))
-        case None => withLead
-      }
-    } else {
-      withSequenceCols(df, groupCols, orderCols, leadSrc, leadOut, rnCol,
-        Some(p))
-    }
-  }
-
   /** Append a row_number column (`rnCol`) and/or a lead-by-1 column
-    * (`leadOut` of `leadSrc`) over PARTITION BY `groupCols` ORDER BY
-    * `orderCols` — order must be total within each group (include a unique
-    * tiebreaker) and the order keys must be non-null. `totalOut`
-    * additionally attaches each group's TOTAL row count to every row — the
-    * boundary job already computes it, so callers that need
-    * `count(*) OVER (PARTITION BY group)` (e.g. chronological split
-    * boundaries) get it without another shuffle + join.
+    * (`leadOut` of `leadSrc`); the order keys must be non-null. `totalOut`
+    * attaches the group's row count (`count(*) OVER (PARTITION BY group)`,
+    * e.g. for chronological splits) at no extra job. A segment summarises
+    * into its row count and first lead value: row numbers add the earlier
+    * segments' counts, and a segment's last row leads into the next one.
     */
-  def withSequenceCols(
-      df: DataFrame,
-      groupCols: Seq[String],
-      orderCols: Seq[String],
-      leadSrc: Option[String] = None,
-      leadOut: String = "lead",
-      rnCol: Option[String] = None,
+  def withSequenceCols(df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[String], leadSrc: Option[String] = None,
+      leadOut: String = "lead", rnCol: Option[String] = None,
       numPartitions: Option[Int] = None,
       totalOut: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    val p = numPartitions.getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val keys = (groupCols ++ orderCols).map(col)
-    // The eager localCheckpoint is REQUIRED for correctness, not speed: the
-    // boundary job and the stitch job must see the IDENTICAL partitioning,
-    // and a fresh execution of repartitionByRange re-samples its bounds.
-    // Truncating the lineage makes re-derivation impossible by
-    // construction — a lost block fails the job loudly instead of silently
-    // re-partitioning with different bounds (the failure mode a plain
-    // persist left open on eviction/executor loss). Lifecycle: the blocks
-    // stay registered until unpersisted (Spark 4.1 GC never reclaims a
-    // locally-checkpointed RDD); Bench/Verify free them between queries
-    // via getPersistentRDDs, and long-lived callers should unpersist the
-    // same way once the returned frame is consumed.
-    // lazy (eager = false): the boundary job is the single first consumer,
-    // so it materializes the blocks while it runs — one pass, not a
-    // separate materialization job ahead of it (measured 7.9 s vs 9.1 s
-    // steady at 10×-sf0.1 on q_m2_ols_next)
-    val sorted = df.repartitionByRange(p, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__seq_pid", spark_partition_id())
-      .localCheckpoint(false)
-    val schema = df.schema
-
-    // boundary job: per (pid, group) count + the in-order first lead value.
-    // min over the order-key struct = lexicographically first row (order
-    // keys non-null per contract), carrying its lead-source value along.
-    val firstAgg = leadSrc.map(src =>
-      min(struct(orderCols.map(col) :+ col(src): _*)).as("__seq_first"))
-    val aggs = count(lit(1)).as("__seq_cnt") +: firstAgg.toSeq
-    val bounds = sorted
-      .groupBy(col("__seq_pid") +: groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // ≤ partitions × |groups| rows — tiny by the op's charter
-      .map { r =>
-        val pid = r.getInt(0)
-        val g = groupCols.indices.map(i => r.get(1 + i))
-        val cnt = r.getLong(1 + groupCols.length)
-        val firstLead = leadSrc.map { _ =>
-          val st = r.getStruct(2 + groupCols.length)
-          st.get(st.length - 1)
-        }.orNull
-        (pid, g, cnt, firstLead)
-      }
-      .sortBy(_._1)
-
-    // driver: prefix-sum offsets; successor lead = the group's first value
-    // in its NEXT containing partition (contiguity of range partitioning)
-    val running = scala.collection.mutable.Map[Seq[Any], Long]()
-    val offsets = bounds.map { case (pid, g, cnt, _) =>
-      val off = running.getOrElse(g, 0L)
-      running(g) = off + cnt
-      (pid, g) -> off
-    }.toMap
-    val succLead: Map[(Int, Seq[Any]), Any] = bounds
-      .groupBy(_._2)
-      .flatMap { case (_, ents) =>
-        ents.sortBy(_._1).sliding(2).collect {
-          case Array((pid, g, _, _), (_, _, _, nextFirst)) =>
-            (pid, g) -> nextFirst
-        }
-      }
-    val totals = running.toMap
-
-    // broadcast boundary table: (pid, group..., off, cnt, total, succ)
-    val gFields = groupCols.map(schema(_))
-    val succType = leadSrc.map(schema(_).dataType).getOrElse(NullType)
-    val smallSchema = StructType(
-      StructField("__seq_pid", IntegerType, nullable = false) +:
-        gFields.toIndexedSeq :+
-        StructField("__seq_off", LongType, nullable = false) :+
-        StructField("__seq_cnt", LongType, nullable = false) :+
-        StructField("__seq_total", LongType, nullable = false) :+
-        StructField("__seq_succ", succType, nullable = true))
-    val smallRows = bounds.map { case (pid, g, cnt, _) =>
-      Row.fromSeq(pid +: g :+ offsets((pid, g)) :+ cnt :+ totals(g) :+
-        succLead.getOrElse((pid, g), null))
-    }
-    val small = spark.createDataFrame(
-      java.util.Arrays.asList(smallRows: _*), smallSchema)
-
-    // stitch job: local window over (pid, group) — parallel in #partitions
-    val lw = Window
-      .partitionBy(col("__seq_pid") +: groupCols.map(col): _*)
+    val segs = byRange(df, groupCols, orderCols, numPartitions)
+    // min over the order-key struct = the in-order first row (order keys
+    // non-null per contract), carrying its lead-source value along
+    val first = leadSrc.map(src => min(struct(orderCols.map(col) :+ col(src): _*)))
+    val bounds = summarise(segs, groupCols, count(lit(1)) +: first.toSeq)
+    val (offs, totals) = prefix(bounds, 0L)(_ + _.getLong(0))
+    // the successor lead is the same exclusive fold run backwards: each
+    // segment receives the first value of the group's next segment
+    val succ = prefix(bounds.reverse, null: Any) { (_, r) =>
+      leadSrc.map { _ => val st = r.getStruct(1); st.get(st.length - 1) }.orNull
+    }._1.reverse
+    val lw = Window.partitionBy(col(PidCol) +: groupCols.map(col): _*)
       .orderBy(orderCols.map(col): _*)
     val windowed = leadSrc.foldLeft(
-        sorted.withColumn("__seq_rnl", row_number().over(lw))) { (d, src) =>
+        segs.withColumn("__seq_rnl", row_number().over(lw))) { (d, src) =>
       d.withColumn("__seq_leadl", lead(col(src), 1).over(lw))
     }
-    // null-safe equality on the group columns: a null-keyed group
-    // aggregates into a null-keyed boundary row, and plain `=` would never
-    // match it back (null = null is false), silently dropping those rows —
-    // `<=>` keeps null-group rows intact (SequenceOpsSpec pins this).
-    val joinCond = (windowed("__seq_pid") === small("__seq_pid")) +:
-      groupCols.map(c => windowed(c) <=> small(c))
-    val local = groupCols.foldLeft(
-        windowed.join(broadcast(small), joinCond.reduce(_ && _))
-          .drop(small("__seq_pid"))) { (d, c) => d.drop(small(c)) }
-    val withLead = leadSrc match {
-      case Some(_) =>
-        local.withColumn(leadOut,
-          when(col("__seq_rnl") === col("__seq_cnt"), col("__seq_succ"))
-            .otherwise(col("__seq_leadl")))
-      case None => local
-    }
-    val withRn = rnCol match {
-      case Some(rc) => withLead.withColumn(rc,
-        (col("__seq_off") + col("__seq_rnl")).cast("long"))
-      case None => withLead
-    }
-    val withTotal = totalOut match {
-      case Some(tc) => withRn.withColumn(tc, col("__seq_total"))
-      case None => withRn
-    }
-    // restore original column order + appended outputs
-    val outCols = schema.fieldNames.map(col).toSeq ++
-      leadSrc.map(_ => col(leadOut)).toSeq ++
-      rnCol.map(col(_)).toSeq ++ totalOut.map(col(_)).toSeq
-    withTotal.select(outCols: _*)
+    def long(n: String) = StructField(n, LongType, nullable = false)
+    stitch(windowed, df.columns.toSeq, groupCols, bounds,
+      Seq(long("__seq_off"), long("__seq_cnt"), long("__seq_total"),
+        StructField("__seq_succ",
+          leadSrc.map(df.schema(_).dataType).getOrElse(NullType))),
+      bounds.indices.map { i =>
+        Seq(offs(i), bounds(i)._3.getLong(0), totals(bounds(i)._2), succ(i)) })(
+      leadSrc.map(_ => leadOut ->
+        when(col("__seq_rnl") === col("__seq_cnt"), col("__seq_succ"))
+          .otherwise(col("__seq_leadl"))).toSeq ++
+      rnCol.map(_ -> (col("__seq_off") + col("__seq_rnl")).cast("long")) ++
+      totalOut.map(_ -> col("__seq_total")))
   }
 
-  /** Exact running sum of an integral column over PARTITION BY `groupCols`
-    * ORDER BY `orderCols` (a total order; `groupCols` may be EMPTY for a
-    * global running sum — the case a plain `Window.orderBy` would funnel
-    * through one task). Same stitch as [[withSequenceCols]]: range
-    * partition + sort, a tiny per-(partition, group) sum boundary job,
-    * driver prefix sums, then a local cumulative window shifted by the
-    * broadcast offsets — parallelism stays #partitions. Long arithmetic
-    * throughout, so the result is exact and engine-portable (no
-    * floating-point order sensitivity).
-    */
-  /** Exact running MAX of an integral column over PARTITION BY
-    * `groupCols` ORDER BY `orderCols` — the prefix-scan sibling of
-    * [[runningSum]] (same range-partition + boundary-job + broadcast-
-    * offset stitch; parallelism stays #partitions instead of the one
-    * task a global `Window.orderBy` would use). Max is associative and
-    * order-insensitive within a slice, so the boundary job ships one
-    * long per (partition, group) and the stitch is
-    * `greatest(local cummax, prior-partition offset)`. The canonical
-    * consumer is watermark-lateness auditing: lateness = runningMax(ts)
-    * − ts over the arrival order.
-    */
-  def runningMax(
-      df: DataFrame,
-      groupCols: Seq[String],
-      orderCols: Seq[String],
-      valCol: String,
-      outCol: String,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val p = numPartitions.getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val keys = (groupCols ++ orderCols).map(col)
-    val schema = df.schema
-    val sorted = df.repartitionByRange(p, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__seq_pid", spark_partition_id())
-      .localCheckpoint(false)
-    val bounds = sorted
-      .groupBy(col("__seq_pid") +: groupCols.map(col): _*)
-      .agg(max(col(valCol).cast("long")).as("__seq_pmax"))
-      .collect() // ≤ partitions × |groups| rows — tiny by the op's charter
-      .map { r =>
-        val g = groupCols.indices.map(i => r.get(1 + i))
-        val m = if (r.isNullAt(1 + groupCols.length)) Long.MinValue
-                else r.getLong(1 + groupCols.length)
-        (r.getInt(0), g, m)
-      }
-      .sortBy(_._1)
-    // exclusive prefix max per group: offset for a partition = max over
-    // all PRIOR partitions' slices of the same group (MinValue = none)
-    val running = scala.collection.mutable.Map[Seq[Any], Long]()
-    val offsets = bounds.map { case (pid, g, m) =>
-      val off = running.getOrElse(g, Long.MinValue)
-      running(g) = math.max(off, m)
-      (pid, g) -> off
-    }.toMap
-    val gFields = groupCols.map(schema(_))
-    val smallSchema = StructType(
-      StructField("__seq_pid", IntegerType, nullable = false) +:
-        gFields.toIndexedSeq :+
-        StructField("__seq_moff", LongType, nullable = false))
-    val smallRows = bounds.map { case (pid, g, _) =>
-      Row.fromSeq(pid +: g :+ offsets((pid, g)))
-    }
-    val small = spark.createDataFrame(
-      java.util.Arrays.asList(smallRows: _*), smallSchema)
-    val lw = Window
-      .partitionBy(col("__seq_pid") +: groupCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val windowed = sorted.withColumn("__seq_cml",
-      max(col(valCol).cast("long")).over(lw))
-    val joinCond = (windowed("__seq_pid") === small("__seq_pid")) +:
-      groupCols.map(c => windowed(c) <=> small(c))
-    val local = groupCols.foldLeft(
-        windowed.join(broadcast(small), joinCond.reduce(_ && _))
-          .drop(small("__seq_pid"))) { (d, c) => d.drop(small(c)) }
-    // NULL local cummax (all-null prefix) stays NULL unless a prior
-    // partition carries a real max; MinValue offset means "no prior"
-    local.withColumn(outCol,
-        when(col("__seq_moff") === Long.MinValue, col("__seq_cml"))
-          .otherwise(greatest(col("__seq_cml"), col("__seq_moff"))))
-      .select(schema.fieldNames.map(col).toSeq :+ col(outCol): _*)
-  }
-
-  def runningSum(
-      df: DataFrame,
-      groupCols: Seq[String],
-      orderCols: Seq[String],
-      valCol: String,
-      outCol: String,
+  /** Exact running sum of an integral column (Long arithmetic, so exact and
+    * engine-portable). `totalOut` attaches the group's total. */
+  def runningSum(df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[String], valCol: String, outCol: String,
       numPartitions: Option[Int] = None,
       totalOut: Option[String] = None): DataFrame =
     runningSums(df, groupCols, orderCols, Seq(valCol -> outCol),
       numPartitions, totalOut)
 
-  /** Exact running sums of SEVERAL integral columns over the SAME
-    * PARTITION BY `groupCols` ORDER BY `orderCols` in ONE pass (r19):
-    * callers that need two cumulative counts over one ordering (the KS
-    * statistic's cum/cum_a) previously paid two full
-    * range-partition + boundary + stitch rounds; the boundary job
-    * aggregates all the sums at once and the stitch shifts each by its
-    * own offset. `totalOut`, when set, attaches the FIRST value column's
-    * group total (the [[runningSum]] contract).
-    */
-  def runningSums(
-      df: DataFrame,
-      groupCols: Seq[String],
-      orderCols: Seq[String],
-      vals: Seq[(String, String)],
+  /** Exact running sums of SEVERAL integral columns over the SAME ordering
+    * in ONE scan (the KS statistic's two cumulative counts). `totalOut`
+    * attaches the FIRST value column's group total. */
+  def runningSums(df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[String], vals: Seq[(String, String)],
       numPartitions: Option[Int] = None,
-      totalOut: Option[String] = None): DataFrame = {
+      totalOut: Option[String] = None): DataFrame =
+    scan(SumMonoid, df, groupCols, orderCols, vals, numPartitions, totalOut)
+
+  /** Exact running MAX of an integral column; a null-only prefix stays
+    * null. The canonical consumer is watermark-lateness auditing:
+    * lateness = runningMax(ts) − ts over the arrival order. */
+  def runningMax(df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[String], valCol: String, outCol: String,
+      numPartitions: Option[Int] = None): DataFrame =
+    scan(MaxMonoid, df, groupCols, orderCols, Seq(valCol -> outCol),
+      numPartitions, None)
+
+  /** A Long monoid: aggregate (summary and local window; skips nulls),
+    * identity, driver `plus`, and stitch of (offset, local value). */
+  private final case class Monoid(zero: Long, agg: Column => Column,
+      plus: (Long, Long) => Long, stitch: (Column, Column) => Column)
+  private val SumMonoid = Monoid(0L, sum(_), _ + _, _ + _)
+  // MinValue offset = no prior value: a null local prefix stays null
+  private val MaxMonoid = Monoid(Long.MinValue, max(_), math.max,
+    (off, local) => when(off === Long.MinValue, local)
+      .otherwise(greatest(local, off)))
+
+  private def scan(m: Monoid, df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[String], vals: Seq[(String, String)],
+      numPartitions: Option[Int], totalOut: Option[String]): DataFrame = {
     require(vals.nonEmpty, "runningSums needs at least one value column")
-    val spark = df.sparkSession
-    val p = numPartitions.getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val keys = (groupCols ++ orderCols).map(col)
-    val schema = df.schema
-    // same correctness-critical checkpoint as withSequenceCols: boundary
-    // job and stitch job must observe the identical range partitioning
-    val sorted = df.repartitionByRange(p, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__seq_pid", spark_partition_id())
-      .localCheckpoint(false)
-    val bounds = sorted
-      .groupBy(col("__seq_pid") +: groupCols.map(col): _*)
-      // coalesce: a (partition, group) slice whose values are ALL NULL sums
-      // to NULL; its boundary offset is 0 (window sums skip nulls), and the
-      // un-coalesced getLong below would NPE
-      .agg(
-        coalesce(sum(col(vals.head._1).cast("long")), lit(0L))
-          .as("__seq_psum0"),
-        vals.tail.zipWithIndex.map { case ((v, _), i) =>
-          coalesce(sum(col(v).cast("long")), lit(0L))
-            .as(s"__seq_psum${i + 1}")
-        }: _*)
-      .collect() // ≤ partitions × |groups| rows — tiny by the op's charter
-      .map { r =>
-        val g = groupCols.indices.map(i => r.get(1 + i))
-        val sums = vals.indices.map(i => r.getLong(1 + groupCols.length + i))
-        (r.getInt(0), g, sums)
-      }
-      .sortBy(_._1)
-    val running =
-      scala.collection.mutable.Map[Seq[Any], IndexedSeq[Long]]()
-    val offsets = bounds.map { case (pid, g, sums) =>
-      val off = running.getOrElse(g, vals.indices.map(_ => 0L))
-      running(g) = off.zip(sums).map { case (a, b) => a + b }
-      (pid, g) -> off
-    }.toMap
-    // group totals fall out of the same driver prefix-sum fold — callers
-    // that need `sum(val) OVER (PARTITION BY group)` (median selection's
-    // rank bounds) get it via `totalOut` without another aggregate +
-    // broadcast join (r19; mirrors withSequenceCols' totalOut)
-    val totals = running.toMap
-    val gFields = groupCols.map(schema(_))
-    val smallSchema = StructType(
-      StructField("__seq_pid", IntegerType, nullable = false) +:
-        gFields.toIndexedSeq ++:
-        vals.indices.map(i =>
-          StructField(s"__seq_soff$i", LongType, nullable = false))
-          .toIndexedSeq :+
-        StructField("__seq_stot", LongType, nullable = false))
-    val smallRows = bounds.map { case (pid, g, _) =>
-      Row.fromSeq((pid +: g) ++ offsets((pid, g)) :+ totals(g).head)
+    val segs = byRange(df, groupCols, orderCols, numPartitions)
+    val vs = vals.map(v => col(v._1).cast("long"))
+    val bounds = summarise(segs, groupCols,
+      vs.map(v => coalesce(m.agg(v), lit(m.zero))))
+    val (offs, totals) = prefix(bounds, vs.map(_ => m.zero)) { (s, r) =>
+      s.indices.map(i => m.plus(s(i), r.getLong(i)))
     }
-    val small = spark.createDataFrame(
-      java.util.Arrays.asList(smallRows: _*), smallSchema)
-    val lw = Window
-      .partitionBy(col("__seq_pid") +: groupCols.map(col): _*)
+    val lw = Window.partitionBy(col(PidCol) +: groupCols.map(col): _*)
       .orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val windowed = vals.zipWithIndex.foldLeft(sorted) {
-      case (d, ((v, _), i)) =>
-        d.withColumn(s"__seq_csl$i", sum(col(v).cast("long")).over(lw))
+    val windowed = vs.zipWithIndex.foldLeft(segs) { case (d, (v, i)) =>
+      d.withColumn(s"__seq_l$i", m.agg(v).over(lw))
     }
-    val joinCond = (windowed("__seq_pid") === small("__seq_pid")) +:
-      groupCols.map(c => windowed(c) <=> small(c))
-    val local = groupCols.foldLeft(
-        windowed.join(broadcast(small), joinCond.reduce(_ && _))
-          .drop(small("__seq_pid"))) { (d, c) => d.drop(small(c)) }
-    val withOuts = vals.zipWithIndex.foldLeft(local) {
-      case (d, ((_, out), i)) =>
-        d.withColumn(out, col(s"__seq_soff$i") + col(s"__seq_csl$i"))
-    }
-    val withTotal = totalOut match {
-      case Some(tc) => withOuts.withColumn(tc, col("__seq_stot"))
-      case None => withOuts
-    }
-    withTotal.select(schema.fieldNames.map(col).toSeq ++
-      vals.map(v => col(v._2)) ++ totalOut.map(col(_)): _*)
+    stitch(windowed, df.columns.toSeq, groupCols, bounds,
+      (vs.indices.map(i => s"__seq_off$i") :+ "__seq_tot")
+        .map(StructField(_, LongType, nullable = false)),
+      bounds.indices.map(i => offs(i) :+ totals(bounds(i)._2).head))(
+      vals.zipWithIndex.map { case ((_, out), i) =>
+        out -> m.stitch(col(s"__seq_off$i"), col(s"__seq_l$i")) } ++
+      totalOut.map(_ -> col("__seq_tot")))
   }
 }
