@@ -89,14 +89,11 @@ object SequenceOps {
       numPartitions, None)
 
   /** A Long monoid: aggregate (summary and local window; skips nulls),
-    * identity, driver `plus`, and stitch of (offset, local value). */
+    * identity, driver `plus`, and `combine` of two non-null columns. */
   private final case class Monoid(zero: Long, agg: Column => Column,
-      plus: (Long, Long) => Long, stitch: (Column, Column) => Column)
+      plus: (Long, Long) => Long, combine: (Column, Column) => Column)
   private val SumMonoid = Monoid(0L, sum(_), _ + _, _ + _)
-  // MinValue offset = no prior value: a null local prefix stays null
-  private val MaxMonoid = Monoid(Long.MinValue, max(_), math.max,
-    (off, local) => when(off === Long.MinValue, local)
-      .otherwise(greatest(local, off)))
+  private val MaxMonoid = Monoid(Long.MinValue, max(_), math.max, greatest(_, _))
 
   private def scan(m: Monoid, df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[String], vals: Seq[(String, String)],
@@ -104,10 +101,12 @@ object SequenceOps {
     require(vals.nonEmpty, "runningSums needs at least one value column")
     val segs = byRange(df, groupCols, orderCols, numPartitions)
     val vs = vals.map(v => col(v._1).cast("long"))
+    // per value column: the segment's aggregate and its non-null count
     val bounds = summarise(segs, groupCols,
-      vs.map(v => coalesce(m.agg(v), lit(m.zero))))
-    val (offs, totals) = prefix(bounds, vs.map(_ => m.zero)) { (s, r) =>
-      s.indices.map(i => m.plus(s(i), r.getLong(i)))
+      vs.flatMap(v => Seq(coalesce(m.agg(v), lit(m.zero)), count(v))))
+    val (offs, totals) = prefix(bounds, vs.map(_ => (m.zero, 0L))) { (s, r) =>
+      s.indices.map(i => (m.plus(s(i)._1, r.getLong(2 * i)),
+        s(i)._2 + r.getLong(2 * i + 1)))
     }
     val lw = Window.partitionBy(col(PidCol) +: groupCols.map(col): _*)
       .orderBy(orderCols.map(col): _*)
@@ -115,12 +114,21 @@ object SequenceOps {
     val windowed = vs.zipWithIndex.foldLeft(segs) { case (d, (v, i)) =>
       d.withColumn(s"__seq_l$i", m.agg(v).over(lw))
     }
+    // the earlier segments' non-null count tells "no value yet" (the local
+    // result stands, NULL included) from an offset that happens to be the
+    // monoid's zero; a NULL local prefix after earlier values is the offset
+    def out(i: Int): Column = {
+      val (off, n, local) =
+        (col(s"__seq_off$i"), col(s"__seq_n$i"), col(s"__seq_l$i"))
+      when(n === 0L, local).when(local.isNull, off)
+        .otherwise(m.combine(off, local))
+    }
     stitch(windowed, df.columns.toSeq, groupCols, bounds,
-      (vs.indices.map(i => s"__seq_off$i") :+ "__seq_tot")
-        .map(StructField(_, LongType, nullable = false)),
-      bounds.indices.map(i => offs(i) :+ totals(bounds(i)._2).head))(
-      vals.zipWithIndex.map { case ((_, out), i) =>
-        out -> m.stitch(col(s"__seq_off$i"), col(s"__seq_l$i")) } ++
+      (vs.indices.flatMap(i => Seq(s"__seq_off$i", s"__seq_n$i")) :+
+        "__seq_tot").map(StructField(_, LongType, nullable = false)),
+      bounds.indices.map(i => offs(i).flatMap { case (a, n) => Seq(a, n) } :+
+        totals(bounds(i)._2).head._1))(
+      vals.zipWithIndex.map { case ((_, o), i) => o -> out(i) } ++
       totalOut.map(_ -> col("__seq_tot")))
   }
 }

@@ -1,12 +1,20 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path => NioPath, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A writer lost the optimistic version race more times than
   * [[ManifestedPartitions.MaxCommitRetries]] — thrown by the default
@@ -39,11 +47,13 @@ class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
   *   - every committed body is COMPLETE: [[commitManifestsCas]] copies
   *     forward each key of the previous body the new commit does not
   *     override, so a read of version v parses v's marker alone;
-  *   - readers resolve a committed version and construct the exact
-  *     directory list to scan — pruning to a probed partition subset is
-  *     path construction, stronger than partition filtering, and a probe
-  *     pinned to version v keeps serving v bit-exactly while maintenance
-  *     commits v+1 (snapshot isolation);
+  *   - readers resolve a committed version and scan it through the
+  *     manifest itself: [[read]] turns the version's entries into Spark's
+  *     file index ([[ManifestIndex]]) with the schema from `_schema`, so a
+  *     read starts no listing or schema-inference job. Pruning to a probed
+  *     partition subset is passing only those entries, and a probe pinned
+  *     to version v keeps serving v bit-exactly while maintenance commits
+  *     v+1 (snapshot isolation);
   *   - a TORN maintenance run (new generation written, no marker) is
   *     invisible: readers keep resolving the old version;
   *   - old generations are garbage-collected only when no retained
@@ -78,8 +88,8 @@ class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
   * with per-file statistics; ours lists partition-generation directories
   * with per-directory file/row counts, the same commit-point discipline
   * with a coarser unit). The manifest stays tiny: |partitions| × live
-  * generations entries, read once per probe and folded into driver-side
-  * path construction.
+  * generations entries, read once per probe; the files of each entry's
+  * immutable directory are listed on the driver ([[entryFiles]]).
   */
 object ManifestedPartitions {
 
@@ -123,24 +133,27 @@ object ManifestedPartitions {
   }
 
   /** Write `df` as generation `gen` of the dataset — a NEW immutable
-    * directory tree; nothing live is touched. `repartition(partCol)` so
-    * one task owns a partition ⇒ one file per partition per generation
-    * (the per-partition file count is a deployment knob — a cluster
-    * writing TB-scale partitions would repartition(n, partCol)). Returns
-    * the written partitions' [[Entry]] rows with exact file/row counts,
-    * measured from the just-written files' parquet FOOTERS on the driver
-    * (the Delta/Iceberg commit-time discipline: the writer records stats
-    * for the files it just produced — bounded by the BATCH's partitions,
-    * never a listing of live data; no second Spark job over `df`). Also
-    * persists the dataset schema once (`_schema` DDL beside the
-    * generations) so an empty snapshot remains readable after deletes
-    * vacuum every partition (ADVICE r16).
+    * directory tree; nothing live is touched. A hash repartition on
+    * `partCol` sends each partition to one task ⇒ one file per partition
+    * per generation. Its explicit count (the default parallelism) keeps
+    * the write as wide as the machine: adaptive execution coalesces a
+    * count-less `repartition(partCol)` of a small batch into ONE task
+    * that writes every partition file serially. Returns the written
+    * partitions' [[Entry]] rows with exact file/row counts, measured from
+    * the just-written files' parquet FOOTERS on the driver (the
+    * Delta/Iceberg commit-time discipline: the writer records stats for
+    * the files it just produced — bounded by the BATCH's partitions, never
+    * a listing of live data; no second Spark job over `df`). Also persists
+    * the dataset schema once (`_schema` DDL beside the generations): every
+    * [[read]] takes its schema from it, so an empty snapshot remains
+    * readable after deletes vacuum every partition (ADVICE r16).
     */
   def writeGen(df: DataFrame, root: String, dataName: String,
       partCol: String, gen: Long): Seq[Entry] = {
     val dir = s"$root/$dataName/g=$gen"
     labeled(df.sparkSession, s"writeGen $dataName") {
-      df.repartition(col(partCol))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+          col(partCol))
         .write.mode("overwrite").partitionBy(partCol).parquet(dir)
     }
     val schemaFile = Paths.get(root, dataName, "_schema")
@@ -163,13 +176,7 @@ object ManifestedPartitions {
     // directories at all — those partitions drop out of the manifest,
     // which is the contract
     val partFiles = listParts(dir, partCol).map { p =>
-      val pdir = Paths.get(dir, s"$partCol=$p")
-      val st = Files.list(pdir)
-      val files = try st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toList
-      finally st.close()
-      p -> files
+      p -> entryFiles(root, dataName, partCol, gen, p)
     }
     // footer reads fan out over a small driver pool: each open pays
     // Hadoop local-FS fixed costs (~50 ms), so a serial loop over the
@@ -201,11 +208,34 @@ object ManifestedPartitions {
   /** Row count from a parquet file's footer (sum of row-group counts) —
     * a ~1 ms driver read, no Spark job.
     */
-  private def parquetRowCount(f: java.nio.file.Path): Long = {
+  private def parquetRowCount(f: NioPath): Long = {
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(f.toUri), hadoopConf))
     try rd.getRecordCount finally rd.close()
+  }
+
+  /** The directory of partition `part` in generation `gen`. */
+  private def entryDir(root: String, dataName: String, partCol: String,
+      gen: Long, part: Int): NioPath =
+    Paths.get(root, dataName, s"g=$gen", s"$partCol=$part")
+
+  /** The parquet files of one (generation, partition) directory, sorted
+    * by name (none if the directory is absent) — a driver-side listing of
+    * one immutable directory, shared by [[writeGen]]'s footer step,
+    * [[liveFiles]] and the read path's [[ManifestIndex]].
+    */
+  private def entryFiles(root: String, dataName: String, partCol: String,
+      gen: Long, part: Int): Seq[NioPath] = {
+    val dir = entryDir(root, dataName, partCol, gen, part)
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val st = Files.list(dir)
+      try st.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .toList.sortBy(_.getFileName.toString)
+      finally st.close()
+    }
   }
 
   /** The `<partCol>=N` partition values present under `dir` (GC-side
@@ -367,39 +397,90 @@ object ManifestedPartitions {
   def latestVersion(root: String): Option[Long] =
     VersionedView.latestVersion(root)
 
-  /** Scan exactly `entries`' directories — version-resolved reading. The
-    * basePath option re-attaches `g` and `partCol` from the directory
-    * names; `g` is dropped (a physical placement detail). Pruning to a
-    * partition subset is done by passing only those partitions' entries:
-    * the unlisted directories are never opened, which is static pruning
-    * by path construction. An EMPTY entry list (legal after deletes
-    * vacuum an entire snapshot) returns an empty frame with the
-    * dataset's persisted schema instead of throwing (ADVICE r16).
+  /** Scan exactly `entries`' directories — version-resolved reading that
+    * starts no Spark job. The frame is a parquet relation over a
+    * [[ManifestIndex]]: its data columns are the persisted `_schema`
+    * minus `partCol`, made nullable as Spark's file sources make them,
+    * followed by `partCol` (typed from `_schema`) as the partition
+    * column. No directory is inferred or listed by Spark; pruning to a
+    * partition subset is passing only those partitions' entries, so the
+    * unlisted directories are never opened. An EMPTY entry list (legal
+    * after deletes vacuum an entire snapshot) is an index with no files:
+    * an empty frame with the dataset's schema (ADVICE r16).
     */
   def read(spark: SparkSession, root: String, dataName: String,
       partCol: String, entries: Seq[Entry]): DataFrame = {
-    if (entries.isEmpty) return emptyFrame(spark, root, dataName)
-    val paths = entries.map { e =>
-      s"$root/$dataName/g=${e.gen}/$partCol=${e.part}"
-    }
-    spark.read.option("basePath", s"$root/$dataName")
-      .parquet(paths: _*)
-      .drop("g")
-  }
-
-  /** An empty DataFrame with the dataset's persisted `_schema` — what a
-    * probe of a fully-vacuumed snapshot reads (previously it read
-    * `any.take(1)` of the live entries, which crashed when the manifest
-    * itself was empty).
-    */
-  def emptyFrame(spark: SparkSession, root: String,
-      dataName: String): DataFrame = {
     val schemaFile = Paths.get(root, dataName, "_schema")
     require(Files.exists(schemaFile),
       s"no persisted schema for $dataName at $root")
     val schema = StructType.fromDDL(Files.readString(schemaFile))
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
+    val partSchema = StructType(Seq(schema(partCol).copy(nullable = true)))
+    val dataSchema = asNullable(StructType(schema.filterNot(_.name == partCol)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      ManifestIndex(root, dataName, partCol, entries)(partSchema),
+      partSchema, dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** `t` with every field, element and value nullable — the schema
+    * Spark's file sources give the data they read.
+    */
+  private def asNullable[T <: DataType](t: T): T = (t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), true)
+    case other => other
+  }).asInstanceOf[T]
+
+  /** The manifest as Spark's [[FileIndex]]: one [[PartitionDirectory]]
+    * per entry, its files listed on the driver ([[entryFiles]]) the
+    * first time the planner asks — the directories are immutable, so
+    * the listing is the snapshot's. A case class keyed by the snapshot,
+    * so two reads of one snapshot compare equal (exchange reuse and
+    * cache lookups see one relation), as `InMemoryFileIndex` does by its
+    * root paths. `partitionFilters` are evaluated against each entry's
+    * partition value, as Spark's own file indexes do: the planner drops
+    * partition-key filters after the scan.
+    */
+  private final case class ManifestIndex(root: String, dataName: String,
+      partCol: String, entries: Seq[Entry])(val partitionSchema: StructType)
+      extends FileIndex {
+
+    private lazy val dirs: Seq[(InternalRow, Array[FileStatus])] =
+      entries.map { e =>
+        val value = Cast(Literal(e.part), partitionSchema.head.dataType).eval()
+        InternalRow(value) -> entryFiles(root, dataName, partCol, e.gen,
+            e.part).map { f =>
+          val at = Files.readAttributes(f, classOf[BasicFileAttributes])
+          new FileStatus(at.size(), false, 1, 0L,
+            at.lastModifiedTime().toMillis, new Path(f.toUri))
+        }.toArray
+      }
+
+    def rootPaths: Seq[Path] = entries.map(e =>
+      new Path(entryDir(root, dataName, partCol, e.gen, e.part).toUri))
+
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val keep = partitionFilters.reduceOption(And).map { f =>
+        Predicate.createInterpreted(f.transform {
+          case a: AttributeReference =>
+            BoundReference(0, partitionSchema.head.dataType, nullable = true)
+        })
+      }
+      dirs.collect {
+        case (value, files) if keep.forall(_.eval(value)) =>
+          PartitionDirectory(value, files)
+      }
+    }
+
+    def inputFiles: Array[String] =
+      dirs.flatMap(_._2).map(_.getPath.toString).toArray
+
+    def refresh(): Unit = ()
+
+    def sizeInBytes: Long = dirs.flatMap(_._2).map(_.getLen).sum
   }
 
   /** Read the latest committed snapshot of the whole dataset. */
@@ -688,16 +769,8 @@ object ManifestedPartitions {
       .groupBy(_.part)
       .map { case (part, es) =>
         part -> es.flatMap { e =>
-          val dir = Paths.get(s"$root/$dataName/g=${e.gen}/$partCol=${e.part}")
-          if (!Files.isDirectory(dir)) Nil
-          else {
-            val st = Files.list(dir)
-            try st.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .map(f => s"g=${e.gen}/$partCol=${e.part}/${f.getFileName}")
-              .toList
-            finally st.close()
-          }
+          entryFiles(root, dataName, partCol, e.gen, e.part)
+            .map(f => s"g=${e.gen}/$partCol=${e.part}/${f.getFileName}")
         }.toSet
       }
   }

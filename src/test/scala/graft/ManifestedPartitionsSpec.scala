@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.similarity.IvfIndex
+import graft.dedup.FunnelMv
+import graft.similarity.{IvfIndex, IvfPqIndex}
 import graft.sources.{ManifestedPartitions => MP, VersionedView}
+import graft.text.PostingsIndex
 
 /** The generic manifest-committed partition layer (r16, verdict order #1)
   * every persisted index family now maintains itself through. Pins the
@@ -21,13 +28,60 @@ import graft.sources.{ManifestedPartitions => MP, VersionedView}
   *     both visible or neither;
   *   - retention GC deletes dead (generation, partition) directories at
   *     partition granularity — a partially-referenced generation keeps
-  *     its live partitions — and below-horizon reads fail LOUDLY.
+  *     its live partitions — and below-horizon reads fail LOUDLY;
+  *   - the manifest-backed read starts no Spark job, has the schema and
+  *     the partition-filtered rows of Spark's own read of the same
+  *     directories, and a generation write runs wider than one task.
   */
 class ManifestedPartitionsSpec extends SparkSpec {
 
   import spark.implicits._
 
   private def df(rows: (Int, Int)*) = rows.toSeq.toDF("x", "p")
+
+  /** Spark's own read of `entries`' directories — the reference the
+    * manifest-backed [[MP.read]] must match. */
+  private def reference(root: String, dataName: String, partCol: String,
+      entries: Seq[MP.Entry]): DataFrame =
+    spark.read.option("basePath", s"$root/$dataName")
+      .parquet(entries.map(e =>
+        s"$root/$dataName/g=${e.gen}/$partCol=${e.part}"): _*)
+      .drop("g")
+
+  private def sortedRows(d: DataFrame): Seq[String] =
+    d.collect().map(_.toString).toSeq.sorted
+
+  /** `body`'s result and the jobs it started. The jobs carry a job group
+    * of this call's own; listener events arrive asynchronously but in
+    * order, so a closing job in the same group marks the end of `body`'s
+    * events. */
+  private def jobsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val group = s"mp-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "close")
+            closed.countDown()
+          else jobs.add(e)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = body
+      sc.setJobDescription("close")
+      sc.parallelize(Seq(1), 1).count()
+      assert(closed.await(60, TimeUnit.SECONDS), "closing job never seen")
+      (out, jobs.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("init/append: snapshot-isolated reads; pinned version unchanged") {
     val stage = Files.createTempDirectory("graft_mp_basic")
@@ -304,6 +358,99 @@ class ManifestedPartitionsSpec extends SparkSpec {
       assert(MP.readLatest(spark, root, "d", "p")
         .select("x").collect().map(_.getInt(0)).sorted.toSeq
         == Seq(1, 2, 3, 4))
+    } finally IvfIndex.deleteDir(root)
+  }
+
+  test("read over a 40-entry snapshot starts no Spark job: no listing, " +
+    "no schema inference") {
+    val stage = Files.createTempDirectory("graft_mp_nojob")
+    val root = stage.toString
+    try {
+      MP.init(df((0 until 20).map(p => p -> p): _*), root, "d", "p")
+      MP.append(spark, root, "d", "p", df((0 until 20).map(p => -p -> p): _*))
+      val entries = MP.readEntries(spark, root, "d", 2L)
+      assert(entries.size == 40)
+      val (read, jobs) = jobsOf(MP.read(spark, root, "d", "p", entries))
+      val descs = jobs.map(_.properties.getProperty("spark.job.description"))
+      assert(jobs.size == 0, s"read started: $descs")
+      assert(read.count() == 40)
+    } finally IvfIndex.deleteDir(root)
+  }
+
+  test("read has the schema of Spark's inferred read, nullability " +
+    "included, for every persisted-index dataset") {
+    val e = spark.read.parquet(s"$sfSmoke/embeddings.parquet")
+    val docs = spark.read.parquet(s"$sfSmoke/documents.parquet")
+    val idx = Seq((1L, 0, "A", 10L, true, true), (2L, 0, "B", 5L, true, false))
+      .toDF("doc_id", "batch", "fp", "n_tok", "q", "qr")
+    val stage = Files.createTempDirectory("graft_mp_schema")
+    def at(name: String) = stage.resolve(name).toString
+    try {
+      IvfIndex.write(e, "vec_id", "embedding", 4, at("ivf"))
+      IvfPqIndex.write(e, "vec_id", "embedding", 4, 64, 8, 16, at("ivfpq"))
+      PostingsIndex.write(docs, "doc_id", "text", 4, at("bm25"))
+      FunnelMv.writeVersioned(docs, at("mv"), 4, 3, 0.9, 0.1, 0.9)
+      FunnelMv.writeDocIndex(idx, at("docs"), 4)
+      Seq(("ivf", "lists", "cell"), ("ivfpq", "lists", "cell"),
+          ("ivfpq", "raw", "rb"), ("bm25", "postings", "tb"),
+          ("mv", "fps", "fpb"), ("docs", "docindex", "fpb")).foreach {
+        case (r, dn, pc) =>
+          val entries = MP.readEntries(spark, at(r), dn, 1L)
+          val got = MP.read(spark, at(r), dn, pc, entries).schema
+          val want = reference(at(r), dn, pc, entries).schema
+          assert(got == want, s"$r/$dn: ${got.treeString} vs ${want.treeString}")
+      }
+    } finally IvfIndex.deleteDir(stage.toString)
+  }
+
+  test("read evaluates partition filters: a filtered read returns the " +
+    "reference read's rows") {
+    val stage = Files.createTempDirectory("graft_mp_pfilter")
+    val root = stage.toString
+    try {
+      MP.init(df((0 until 12).map(i => i -> i % 6): _*), root, "d", "p")
+      MP.append(spark, root, "d", "p", df(100 -> 1, 101 -> 4, 102 -> 5))
+      val entries = MP.readEntries(spark, root, "d", 2L)
+      val cases: Seq[DataFrame => DataFrame] = Seq(
+        _.filter(col("p").isin(1, 4)),
+        _.filter(col("p") > 3 && col("x") < 100),
+        _.filter(col("p") === 7))
+      cases.foreach { f =>
+        val got = sortedRows(f(MP.read(spark, root, "d", "p", entries)))
+        assert(got == sortedRows(f(reference(root, "d", "p", entries))))
+      }
+      assert(sortedRows(MP.read(spark, root, "d", "p", entries)
+        .filter(col("p").isin(1, 4))) == Seq("[1,1]", "[10,4]", "[100,1]",
+        "[101,4]", "[4,4]", "[7,1]"))
+    } finally IvfIndex.deleteDir(root)
+  }
+
+  test("snapshot isolation: a frame built at v1 and collected after an " +
+    "append commits v2 returns exactly v1's rows") {
+    val stage = Files.createTempDirectory("graft_mp_isolation")
+    val root = stage.toString
+    try {
+      MP.init(df(1 -> 0, 2 -> 1, 3 -> 2), root, "d", "p")
+      val v1 = MP.readLatest(spark, root, "d", "p")
+      MP.append(spark, root, "d", "p", df(4 -> 0, 5 -> 1, 6 -> 3))
+      assert(MP.latestVersion(root).contains(2L))
+      assert(sortedRows(v1) == Seq("[1,0]", "[2,1]", "[3,2]"))
+      assert(MP.readLatest(spark, root, "d", "p").count() == 6)
+    } finally IvfIndex.deleteDir(root)
+  }
+
+  test("writeGen writes a many-partition batch with more than one task, " +
+    "still one file per partition") {
+    assert(spark.sparkContext.defaultParallelism > 1)
+    val stage = Files.createTempDirectory("graft_mp_width")
+    val root = stage.toString
+    try {
+      val (entries, jobs) = jobsOf(MP.writeGen(
+        df((0 until 240).map(i => i -> i % 24): _*), root, "d", "p", 1L))
+      assert(entries.map(_.part) == (0 until 24))
+      assert(entries.forall(_.files == 1), s"not one file each: $entries")
+      val writeTasks = jobs.last.stageInfos.maxBy(_.stageId).numTasks
+      assert(writeTasks > 1, s"the write stage ran $writeTasks task(s)")
     } finally IvfIndex.deleteDir(root)
   }
 }

@@ -234,4 +234,24 @@ class SequenceOpsSpec extends SparkSpec {
     assert(j.count() == 6)
     assert(j.filter(!(col("cm_w") <=> col("cm_s"))).count() == 0)
   }
+
+  test("runningSum: a segment whose local prefix is all-null keeps the " +
+    "earlier segments' total, zero included") {
+    import spark.implicits._
+    val w = Window.partitionBy("g").orderBy("t")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // values for t ≤ 4, NULL after: with 4 segments the later segments
+    // see only NULLs locally; the second frame's values sum to 0
+    Seq(Seq(1L, 1L, 1L, 1L), Seq(1L, -1L, 1L, -1L)).foreach { vs =>
+      val df = (1 to 8).map(t => (1, t, vs.lift(t - 1))).toDF("g", "t", "v")
+      val want = df.withColumn("cs_w", sum("v").over(w)).select("g", "t", "cs_w")
+      val got = SequenceOps.runningSum(df, Seq("g"), Seq("t"), "v", "cs_s",
+          numPartitions = Some(4))
+        .select("g", "t", "cs_s")
+      val j = want.join(got, Seq("g", "t"))
+      assert(j.count() == 8)
+      val bad = j.filter(!(col("cs_w") <=> col("cs_s")))
+      assert(bad.count() == 0, s"mismatches: ${bad.collect().mkString(";")}")
+    }
+  }
 }
