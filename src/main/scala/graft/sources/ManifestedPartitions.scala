@@ -223,7 +223,8 @@ object ManifestedPartitions {
   /** The parquet files of one (generation, partition) directory, sorted
     * by name (none if the directory is absent) — a driver-side listing of
     * one immutable directory, shared by [[writeGen]]'s footer step,
-    * [[liveFiles]] and the read path's [[ManifestIndex]].
+    * [[liveFiles]] and the read path's [[ManifestIndex]] (which refuses a
+    * listing that differs from the entry's file count).
     */
   private def entryFiles(root: String, dataName: String, partCol: String,
       gen: Long, part: Int): Seq[NioPath] = {
@@ -436,7 +437,8 @@ object ManifestedPartitions {
   /** The manifest as Spark's [[FileIndex]]: one [[PartitionDirectory]]
     * per entry, its files listed on the driver ([[entryFiles]]) the
     * first time the planner asks — the directories are immutable, so
-    * the listing is the snapshot's. A case class keyed by the snapshot,
+    * the listing is the snapshot's, checked against each entry's
+    * recorded file count. A case class keyed by the snapshot,
     * so two reads of one snapshot compare equal (exchange reuse and
     * cache lookups see one relation), as `InMemoryFileIndex` does by its
     * root paths. `partitionFilters` are evaluated against each entry's
@@ -447,11 +449,19 @@ object ManifestedPartitions {
       partCol: String, entries: Seq[Entry])(val partitionSchema: StructType)
       extends FileIndex {
 
+    // an entry whose directory is gone or holds other than the files its
+    // manifest recorded (an expire that ran after this snapshot was
+    // resolved, or a lost directory) fails the scan loudly: a read never
+    // serves part of a snapshot
     private lazy val dirs: Seq[(InternalRow, Array[FileStatus])] =
       entries.map { e =>
         val value = Cast(Literal(e.part), partitionSchema.head.dataType).eval()
-        InternalRow(value) -> entryFiles(root, dataName, partCol, e.gen,
-            e.part).map { f =>
+        val files = entryFiles(root, dataName, partCol, e.gen, e.part)
+        if (files.size != e.files) throw new IllegalStateException(
+          s"$root: $dataName generation ${e.gen} partition " +
+            s"$partCol=${e.part} holds ${files.size} parquet files, its " +
+            s"manifest entry ${e.files}")
+        InternalRow(value) -> files.map { f =>
           val at = Files.readAttributes(f, classOf[BasicFileAttributes])
           new FileStatus(at.size(), false, 1, 0L,
             at.lastModifiedTime().toMillis, new Path(f.toUri))

@@ -439,6 +439,35 @@ class ManifestedPartitionsSpec extends SparkSpec {
     } finally IvfIndex.deleteDir(root)
   }
 
+  test("a frame whose snapshot lost a directory to expire fails loudly, " +
+    "never returning part of the snapshot") {
+    val stage = Files.createTempDirectory("graft_mp_lost")
+    val root = stage.toString
+    def lostDir(e: Throwable): Boolean = e match {
+      case null => false
+      case s: IllegalStateException => s.getMessage.contains(root) &&
+        s.getMessage.contains("partition p=0")
+      case other => lostDir(other.getCause)
+    }
+    try {
+      MP.init(df(1 -> 0, 2 -> 1, 3 -> 2), root, "d", "p")
+      MP.append(spark, root, "d", "p", df(4 -> 0)) // v2: p=0 fragmented
+      val v2 = MP.readLatest(spark, root, "d", "p")
+      assert(MP.compact(spark, root, Seq(("d", "p"))) == 1) // v3
+      val (expired, removed) = MP.expire(spark, root, Seq(("d", "p")), 1, 0L)
+      assert(expired == Seq(1L, 2L) && removed == 2)
+      val err = intercept[Exception](v2.collect())
+      assert(lostDir(err), err.toString)
+      // a directory lost some other way fails the same way
+      val v3 = MP.readEntries(spark, root, "d", 3L)
+      IvfIndex.deleteDir(stage.resolve("d")
+        .resolve(s"g=${v3.find(_.part == 0).get.gen}").resolve("p=0").toString)
+      val err3 = intercept[Exception](
+        MP.read(spark, root, "d", "p", v3).collect())
+      assert(lostDir(err3), err3.toString)
+    } finally IvfIndex.deleteDir(root)
+  }
+
   test("writeGen writes a many-partition batch with more than one task, " +
     "still one file per partition") {
     assert(spark.sparkContext.defaultParallelism > 1)
