@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.CleanPipeline
 import graft.mining.MiningPipelines
 import graft.olap.{OlapQueries, TimeDims}
@@ -19,16 +17,7 @@ object AnalyticsMain {
       sys.exit(2)
     }
     val Array(rawDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-analytics")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val fact = TimeDims.withTimeDims(
       TimeDims.fromYear(CleanPipeline.clean(spark, rawDir), 2024)).cache()

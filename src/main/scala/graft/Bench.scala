@@ -1,19 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine optimizer rules (HOF dot-product fusion) — config-free install
-    graft.functions.DotProductRewrite.install(spark)
-    graft.functions.Md5ChainRewrite.install(spark)
-    graft.functions.PqFoldRewrite.install(spark)
+    val spark = GraftSession.build()
     // optional comma-separated filter for targeted iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // deterministic order: hash-Map iteration reshuffles whenever an entry
@@ -22,14 +11,6 @@ object Bench {
     val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .sortBy(_._1)
-    // drop caches the query pinned once it materializes: operators cache
-    // intermediates for reuse within their own plan, and 50 queries sharing
-    // one JVM would otherwise accumulate storage-memory pressure
-    def clearCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     // a query that throws is FAILED, not timed: its name is reported and
     // its time is left out of every total
     val failed = scala.collection.mutable.LinkedHashSet[String]()
@@ -38,7 +19,7 @@ object Bench {
       try fn(spark, sfDir).count()
       catch { case _: Throwable => failed += name }
       val dt = (System.nanoTime() - t0) / 1e9
-      clearCaches()
+      GraftSession.clearCaches(spark)
       name -> dt
     }
     // cold pass = JVM/codegen warm-up included; timed passes = steady-state

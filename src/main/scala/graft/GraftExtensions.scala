@@ -2,19 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** The engine's `SparkSessionExtensions` hook — activate with
+/** The engine's `SparkSessionExtensions` hook for sessions built outside
+  * [[GraftSession.build]] — activate with
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)` on the builder). Injects
-  * the engine's optimizer rules; sessions that can't be rebuilt install
-  * the same rules at runtime via
-  * [[graft.functions.DotProductRewrite.install]].
+  * Injects the rules of [[GraftSession.rules]]. Engine entry points use
+  * [[GraftSession.build]], which installs the same list at runtime.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => graft.functions.DotProductRewrite)
-    ext.injectOptimizerRule(_ => graft.functions.Md5ChainRewrite)
-    ext.injectOptimizerRule(_ => graft.functions.PqFoldRewrite)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftSession.rules.foreach(r => ext.injectOptimizerRule(_ => r))
 }

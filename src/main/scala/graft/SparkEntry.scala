@@ -28,7 +28,9 @@ object SparkEntry {
     *
     * Non-ANSI evaluation is pinned per call: DuckDB's aggregates (corr over
     * a constant/1-row frame, x/0) yield NULL, while Spark 4's ANSI mode
-    * throws — non-ANSI restores the matching NULL semantics.
+    * throws — non-ANSI restores the matching NULL semantics. A
+    * [[GraftSession.build]] session is already non-ANSI; the pin is for
+    * callers that build their own session (perfbench does).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalogs.map { q =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -20,18 +19,7 @@ object Verify {
     // all run because oracles replay from them
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine optimizer rules (HOF dot-product fusion) — config-free install
-    graft.functions.DotProductRewrite.install(spark)
-    graft.functions.Md5ChainRewrite.install(spark)
-    graft.functions.PqFoldRewrite.install(spark)
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
 
     // ---- oracle_sql.json FIRST ----------------------------------------
@@ -67,13 +55,6 @@ object Verify {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    // drop caches a query pinned once its output is written — 330 queries
-    // share this JVM and un-freed caches skew heap/storage for later ones
-    def clearCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     def timed(tag: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       try { body; System.err.println(
@@ -81,7 +62,7 @@ object Verify {
       catch { case e: Throwable => System.err.println(
         f"[verify] $tag FAILED in ${(System.nanoTime() - t0) / 1e9}%.2fs: " +
           s"${e.getMessage}") }
-      clearCaches()
+      GraftSession.clearCaches(spark)
     }
 
     // ---- aux dumps BEFORE query dumps ----------------------------------
@@ -89,7 +70,6 @@ object Verify {
     // the run is truncated, every oracle whose query DID dump must still
     // find its aux inputs. Written to the sibling auxAbs dir — provably
     // outside the driver's result glob (see the auxAbs note above).
-    spark.conf.set("spark.sql.ansi.enabled", "false")
     // clear the aux sibling first (ADVICE r14): individual dumps overwrite
     // their own subdirs, but a RENAMED/REMOVED aux entry would otherwise
     // leave a stale dump that an oracle still referencing the old name

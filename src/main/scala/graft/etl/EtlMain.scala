@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** E1 batch entry point (reference: preprocess_stocks.py __main__, :232-234):
   * raw messy CSVs in, cleaned per-ticker + unified fact table out.
   *
@@ -14,16 +12,7 @@ object EtlMain {
       sys.exit(2)
     }
     val Array(rawDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     val cleaned = CleanPipeline.clean(spark, rawDir)
     CleanPipeline.writeCleaned(cleaned, outDir)
     // S8: JDBC fact-table persistence -- dormant unless a URL is provided,

@@ -25,9 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * two-variable product and sum lambdas, identity finish.
   *
   * Charter rung (c): a `Rule[LogicalPlan]` delivered both ways —
-  * [[graft.GraftExtensions]] injects it via `spark.sql.extensions` at
-  * session build, and [[DotProductRewrite.install]] retrofits a live
-  * session through `spark.experimental.extraOptimizations`.
+  * [[graft.GraftSession.build]] installs it through
+  * `spark.experimental.extraOptimizations`, and [[graft.GraftExtensions]]
+  * injects it via `spark.sql.extensions` into sessions built elsewhere.
   */
 object DotProductRewrite extends Rule[LogicalPlan] {
 
@@ -107,13 +107,10 @@ object DotProductRewrite extends Rule[LogicalPlan] {
         DotProduct(v, v)
     }
 
-  /** Idempotently add the rule to a LIVE session (the experimental
-    * extra-optimizations hook — runs as the optimizer's user-provided
-    * batch). Sessions built from config use [[graft.GraftExtensions]].
+  /** Idempotently add the rule to a live session's extra optimizations
+    * (the optimizer's user-provided batch) through
+    * [[graft.GraftSession.install]]; [[graft.GraftSession.build]] already
+    * does this for every engine session.
     */
-  def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
+  def install(spark: SparkSession): Unit = graft.GraftSession.install(spark, this)
 }

@@ -57,13 +57,9 @@ object Md5ChainRewrite extends Rule[LogicalPlan] {
       case Chain(input) => Md5Prefix60(input)
     }
 
-  /** Idempotently add the rule to a LIVE session (same hook as
-    * [[DotProductRewrite.install]]); config-built sessions get it via
-    * [[graft.GraftExtensions]].
+  /** Idempotently add the rule to a live session (same hook as
+    * [[DotProductRewrite.install]]); [[graft.GraftSession.build]] already
+    * does this for every engine session.
     */
-  def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
+  def install(spark: SparkSession): Unit = graft.GraftSession.install(spark, this)
 }

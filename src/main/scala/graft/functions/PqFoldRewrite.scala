@@ -110,13 +110,9 @@ object PqFoldRewrite extends Rule[LogicalPlan] {
         AdcFold(c, t)
     }
 
-  /** Idempotently add the rule to a LIVE session (same hook as
-    * [[DotProductRewrite.install]]); config-built sessions get it via
-    * [[graft.GraftExtensions]].
+  /** Idempotently add the rule to a live session (same hook as
+    * [[DotProductRewrite.install]]); [[graft.GraftSession.build]] already
+    * does this for every engine session.
     */
-  def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
+  def install(spark: SparkSession): Unit = graft.GraftSession.install(spark, this)
 }

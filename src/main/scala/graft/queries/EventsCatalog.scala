@@ -83,14 +83,19 @@ object EventsCatalog {
   // stream silently reading stale data while the batch twin reads fresh.
   // (mtime+size alone can collide when a same-sized rewrite lands within
   // the same millisecond; the file key disambiguates.) One staged dir per
-  // source path: a superseded identity's dir is deleted on replacement, so
-  // stale copies don't accumulate on disk. All staged dirs go on JVM exit.
-  private val streamDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private lazy val streamDirCleanup = sys.addShutdownHook {
-    streamDirCache.values.forEach { case (_, p) => Dirs.delete(p) }
+  // (variant, source path): a superseded identity's dir is deleted on
+  // replacement, so stale copies don't accumulate on disk. All staged dirs
+  // go on JVM exit, through one shutdown hook.
+  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (String, String)]()
+  private lazy val stagedDirsCleanup = sys.addShutdownHook {
+    stagedDirs.values.forEach { case (_, p) => Dirs.delete(p) }
   }
-  private[queries] def streamableEventsDir(dir: String): String = {
+  /** The staged dir of `variant` for `dir`'s events.parquet, made by
+    * `stage(source)` when the source's identity has changed or is new.
+    */
+  private def stagedEventsDir(dir: String, variant: String)(
+      stage: java.nio.file.Path => String): String = {
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val attrs = java.nio.file.Files.readAttributes(
       src, classOf[java.nio.file.attribute.BasicFileAttributes])
@@ -98,16 +103,21 @@ object EventsCatalog {
       Option(attrs.fileKey).map(_.toString).getOrElse(""),
       attrs.lastModifiedTime.toMillis.toString,
       attrs.size.toString).mkString("|")
-    streamDirCache.compute(src.toString, (_, prev) => prev match {
+    stagedDirs.compute((variant, src.toString), (_, prev) => prev match {
       case (id, p) if id == identity => (id, p)
       case other =>
         if (other != null) Dirs.delete(other._2) // evict superseded copy
-        streamDirCleanup // register the shutdown hook once, on first staging
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_events")
-        java.nio.file.Files.copy(src, d.resolve("events.parquet"))
-        (identity, d.toString)
+        stagedDirsCleanup // register the shutdown hook once, on first staging
+        (identity, stage(src))
     })._2
   }
+
+  private[queries] def streamableEventsDir(dir: String): String =
+    stagedEventsDir(dir, "copy") { src =>
+      val d = java.nio.file.Files.createTempDirectory("graft_stream_events")
+      java.nio.file.Files.copy(src, d.resolve("events.parquet"))
+      d.toString
+    }
 
   // Heartbeat-staged variant for OUTER stream-stream joins: ONE
   // Spark-written parquet holding the normalized events PLUS a
@@ -123,50 +133,32 @@ object EventsCatalog {
   // rewrite normalizes ts to µs (raw INT64 = the engine's own
   // convention, which the footer-driven reader accepts), and a one-file
   // dir is the same layout every other staged streaming query reads.
-  // Cache/eviction identity follows streamDirCache.
-  private val heartbeatDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private lazy val heartbeatDirCleanup = sys.addShutdownHook {
-    heartbeatDirCache.values.forEach { case (_, p) => Dirs.delete(p) }
-  }
   private[queries] def streamableEventsDirWithHeartbeat(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val attrs = java.nio.file.Files.readAttributes(
-      src, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val identity = Seq(
-      Option(attrs.fileKey).map(_.toString).getOrElse(""),
-      attrs.lastModifiedTime.toMillis.toString,
-      attrs.size.toString).mkString("|")
-    heartbeatDirCache.compute(src.toString, (_, prev) => prev match {
-      case (id, p) if id == identity => (id, p)
-      case other =>
-        if (other != null) Dirs.delete(other._2)
-        heartbeatDirCleanup
-        val ev = t(s, dir, "events") // ts normalized to epoch µs
-        // one day past the real data: far beyond any watermark delay +
-        // join lag used by the catalog queries
-        val hbTs = ev.agg(max(col("ts"))).head.getLong(0) + 86400000000L
-        val hb = s.createDataFrame(
-          java.util.Arrays.asList(
-            org.apache.spark.sql.Row(-1L, hbTs, -1L, "purchase", 0.0, null),
-            org.apache.spark.sql.Row(-2L, hbTs, -1L, "click", 0.0, null)),
-          graft.model.Schemas.events)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_hb_write")
-        ev.select(graft.model.Schemas.events.fieldNames.map(col): _*)
-          .unionByName(hb)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val st = java.nio.file.Files.list(tmp)
-        val part =
-          try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst.get()
-          finally st.close()
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_hb")
-        java.nio.file.Files.move(part, d.resolve("events.parquet"))
-        Dirs.delete(tmp)
-        (identity, d.toString)
-    })._2
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    stagedEventsDir(dir, "heartbeat") { _ =>
+      val ev = t(s, dir, "events") // ts normalized to epoch µs
+      // one day past the real data: far beyond any watermark delay +
+      // join lag used by the catalog queries
+      val hbTs = ev.agg(max(col("ts"))).head.getLong(0) + 86400000000L
+      val hb = s.createDataFrame(
+        java.util.Arrays.asList(
+          org.apache.spark.sql.Row(-1L, hbTs, -1L, "purchase", 0.0, null),
+          org.apache.spark.sql.Row(-2L, hbTs, -1L, "click", 0.0, null)),
+        graft.model.Schemas.events)
+      val tmp = java.nio.file.Files.createTempDirectory("graft_hb_write")
+      ev.select(graft.model.Schemas.events.fieldNames.map(col): _*)
+        .unionByName(hb)
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val st = java.nio.file.Files.list(tmp)
+      val part =
+        try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
+          .findFirst.get()
+        finally st.close()
+      val d = java.nio.file.Files.createTempDirectory("graft_stream_hb")
+      java.nio.file.Files.move(part, d.resolve("events.parquet"))
+      Dirs.delete(tmp)
+      d.toString
+    }
 
   /** Stream-stream LEFT OUTER interval join through the ENGINE path
     * (EventStreams.purchaseClickLeftJoin): q_e_interval_stream's join

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ManifestedPartitions => MP, VersionedView}
@@ -27,15 +26,7 @@ object CasContentionSoak {
     val writerCounts = args.headOption.getOrElse("1,2,4,8")
       .split(",").toSeq.map(_.trim.toInt)
     val rounds = if (args.length > 1) args(1).toInt else 6
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cas-contention-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     import spark.implicits._
 
     writerCounts.foreach { w =>

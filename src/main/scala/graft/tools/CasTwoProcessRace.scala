@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.sources.{ManifestedPartitions => MP, VersionedView}
 
 /** TWO-PROCESS CAS race (r18): the thread-based race gates prove the
@@ -23,18 +24,6 @@ import graft.sources.{ManifestedPartitions => MP, VersionedView}
   */
 object CasTwoProcessRace {
 
-  private def session(app: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   private def appendLoop(spark: SparkSession, root: String, base: Int,
       rounds: Int): Unit = {
     import spark.implicits._
@@ -47,7 +36,7 @@ object CasTwoProcessRace {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--child")) {
       val (root, rounds) = (args(1), args(2).toInt)
-      val spark = session("graft-cas-child")
+      val spark = GraftSession.build()
       // handshake: tell the parent this JVM's session is warm so the
       // append loops genuinely overlap instead of racing a cold start
       Files.writeString(Paths.get(root, "_child_ready"), "up")
@@ -57,7 +46,7 @@ object CasTwoProcessRace {
       return
     }
     val rounds = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = session("graft-cas-parent")
+    val spark = GraftSession.build()
     import spark.implicits._
     val stage = Files.createTempDirectory("graft_cas_2proc")
     val root = stage.toString

@@ -3,7 +3,8 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Intra-query job attribution: run one catalog query and print every
   * Spark job's wall-clock with its call site, so a multi-job lifecycle
@@ -16,16 +17,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProductRewrite.install(spark)
-    graft.functions.Md5ChainRewrite.install(spark)
-    graft.functions.PqFoldRewrite.install(spark)
+    val spark = GraftSession.build()
     case class Job(id: Int, desc: String, start: Long, var end: Long)
     val jobs = mutable.ArrayBuffer[Job]()
     val listener = new SparkListener {
@@ -50,9 +42,7 @@ object JobProfile {
       // warm pass (codegen/JIT), then the measured pass — mirrors the
       // bench's steady-state estimator
       fn(spark, sfDir).count()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
       jobs.synchronized(jobs.clear())
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
@@ -82,9 +72,7 @@ object JobProfile {
           println(f"    gap=$gap%7.0f dur=$dur%7.0f  ${j.desc}")
         prevEnd = math.max(prevEnd, if (j.end > 0) j.end else j.start)
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
     }
     spark.stop()
   }

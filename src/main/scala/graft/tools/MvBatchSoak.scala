@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.FunnelMv
@@ -23,19 +22,7 @@ object MvBatchSoak {
     val cadence = if (args.length > 1) args(1).toInt else 2
     val batchDocs = if (args.length > 2) args(2).toInt else 20
     val nBuckets = 256 // deployment-sized: a small batch probes few buckets
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-mv-batch-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProductRewrite.install(spark)
-    graft.functions.Md5ChainRewrite.install(spark)
-    graft.functions.PqFoldRewrite.install(spark)
+    val spark = graft.GraftSession.build()
 
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .filter(col("text").isNotNull)

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Prints formatted physical plans for the headline queries so the
   * scale-critical properties are auditable: parquet filter pushdown +
@@ -22,18 +20,8 @@ object PlanAudit {
         // stage seams (checkpoint scans, broadcast budgets, range
         // partitioning, band-bucket joins)
         "q_pipeline_pack_e2e", "q_pipeline_ivfpq_e2e")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // engine optimizer rules — the audited plans must be the plans the
-    // bench actually runs
-    graft.functions.DotProductRewrite.install(spark)
-    graft.functions.Md5ChainRewrite.install(spark)
-    graft.functions.PqFoldRewrite.install(spark)
+    // the audited plans are the plans the bench runs: same session
+    val spark = GraftSession.build()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     names.foreach { n =>
       println(s"\n========== $n ==========")

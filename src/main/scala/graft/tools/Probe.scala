@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Perf probe: run named catalog queries N times in one session, printing
   * per-iteration wall time — separates JVM/codegen warm-up from steady
@@ -12,27 +12,14 @@ object Probe {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine optimizer rules — probe timings must measure the same plans
-    // the bench runs
-    graft.functions.DotProductRewrite.install(spark)
-    graft.functions.Md5ChainRewrite.install(spark)
-    graft.functions.PqFoldRewrite.install(spark)
+    val spark = GraftSession.build()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        GraftSession.clearCaches(spark)
         dt
       }
       println(f"PROBE $name%-24s ${times.map(t => f"$t%.2f").mkString(" ")}")

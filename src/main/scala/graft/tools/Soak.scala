@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Scale soak: synthesize an ~N×-sf0.1 star schema by unioning key-shifted
   * copies (keys stay consistent across tables, so joins/windows behave like
@@ -23,23 +23,11 @@ object Soak {
     val outDir = if (args.length > 1) args(1)
       else "target/soak_sf1"
     val querySet = args.drop(2).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // engine optimizer rules, exactly like Bench/Verify — without them the
-    // soak times the INTERPRETED higher-order dot-product folds instead of
-    // the codegen'd DotProduct the shipped engine runs (measured 10.7×
-    // on q_s_knn_ivf's in-cell re-rank before this was added)
-    graft.functions.DotProductRewrite.install(spark)
-    graft.functions.Md5ChainRewrite.install(spark)
-    graft.functions.PqFoldRewrite.install(spark)
+    // the engine session with its optimizer rules — without them the soak
+    // times the INTERPRETED higher-order dot-product folds instead of the
+    // codegen'd DotProduct the shipped engine runs (measured 10.7× on
+    // q_s_knn_ivf's in-cell re-rank)
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
 
     // ---- per-copy key stride: DERIVED from the data, not assumed --------
@@ -195,24 +183,20 @@ object Soak {
     headline.foreach(n => require(SparkEntry.queries.contains(n),
       s"unknown soak query $n"))
 
-    // operators self-materialize shared intermediates (localCheckpoint);
-    // free them between runs so timings don't pay earlier queries' blocks
-    def clear(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    // warm once at sf0.1 so soak timings measure data volume, not codegen
+    // warm once at sf0.1 so soak timings measure data volume, not codegen;
+    // clearCaches frees the intermediates operators self-materialize
+    // (localCheckpoint), so no run pays for an earlier query's blocks
     headline.foreach { n =>
-      SparkEntry.queries(n)(spark, src).count(); clear()
+      SparkEntry.queries(n)(spark, src).count()
+      GraftSession.clearCaches(spark)
     }
     val results = headline.map { n =>
       val s0 = System.nanoTime()
       val small = SparkEntry.queries(n)(spark, src).count()
-      clear()
+      GraftSession.clearCaches(spark)
       val sMid = System.nanoTime()
       val big = SparkEntry.queries(n)(spark, outDir).count()
-      clear()
+      GraftSession.clearCaches(spark)
       val sEnd = System.nanoTime()
       val tSmall = (sMid - s0) / 1e9
       val tBig = (sEnd - sMid) / 1e9

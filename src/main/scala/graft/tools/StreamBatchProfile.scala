@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-micro-batch overhead decomposition for the streaming gates
@@ -23,13 +22,7 @@ object StreamBatchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val n = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     import java.nio.file.{Files, Paths}
     val ev = graft.sources.EventsTs.read(spark, sfDir)
       .select(graft.model.Schemas.events.fieldNames.map(col): _*)
