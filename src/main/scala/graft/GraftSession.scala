@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The one session definition every entry point and the test suite share:
   * `local[cpus]` with as many shuffle partitions, UTC (matches the DuckDB
-  * oracle), non-ANSI (pandas/DuckDB NULL semantics), no UI, WARN logs, and
-  * the engine's optimizer rules installed — so the plans the oracle checks
-  * are the plans the bench times.
+  * oracle), non-ANSI (pandas/DuckDB NULL semantics), no UI, and the
+  * engine's optimizer rules installed — so the plans the oracle checks are
+  * the plans the bench times. Logs are WARN and above, on stderr, from
+  * `src/main/resources/log4j2.properties`.
   *
   * The rules go in through `spark.experimental.extraOptimizations`, not
   * `.withExtensions`: a spec can then take a rule out of that list and
@@ -40,7 +41,6 @@ object GraftSession {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     rules.foreach(install(spark, _))
     spark
   }

@@ -74,7 +74,7 @@ object Verify {
     // their own subdirs, but a RENAMED/REMOVED aux entry would otherwise
     // leave a stale dump that an oracle still referencing the old name
     // silently replays against outdated data instead of failing loudly
-    graft.similarity.IvfIndex.deleteDir(auxAbs)
+    graft.sources.Dirs.delete(auxAbs)
     SparkEntry.auxDumps.foreach { case (name, fn) =>
       timed(s"aux $name") {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

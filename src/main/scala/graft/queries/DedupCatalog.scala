@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.Dirs
+
 import QueryDef._
 import graft.dedup.Dedup
 
@@ -1449,8 +1451,7 @@ object DedupCatalog {
       import graft.dedup.FunnelMv
       val raw0 = t(s, dir, "documents").filter(col("text").isNotNull)
         .select("doc_id", "text").localCheckpoint(true)
-      val stage = java.nio.file.Files.createTempDirectory("graft_incr_mv")
-      try {
+      Dirs.scratch("graft_incr_mv") { stage =>
         // BUILD: persist the base view + fp index; stage the batch as
         // files (in production it lands from ingestion — reading it back
         // keeps the incremental path a pure consumer of persisted state)
@@ -1465,7 +1466,7 @@ object DedupCatalog {
           .orderBy("stage_ord")
           // materialize before the staged artifacts are deleted below
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(incrMvFullRecomputeSql(""))
   )
@@ -1882,8 +1883,7 @@ object DedupCatalog {
       import graft.sources.VersionedView
       val raw0 = t(s, dir, "documents").filter(col("text").isNotNull)
         .select("doc_id", "text").localCheckpoint(true)
-      val stage = java.nio.file.Files.createTempDirectory("graft_mv_tt")
-      try {
+      Dirs.scratch("graft_mv_tt") { stage =>
         // BUILD: base view + fp index via the production build step
         FunnelMv.write(raw0, s"$stage/mv", E2eMinTokens, E2eMaxStopword,
           E2eMinDistinct, E2eMaxTopBigram)
@@ -1914,7 +1914,7 @@ object DedupCatalog {
             col("n_docs"), col("n_tokens"), col("torn_invisible"))
           .orderBy("version", "stage_ord")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       WITH $delIndexCtes,
@@ -1977,9 +1977,7 @@ object DedupCatalog {
     (s, dir) => {
       import graft.dedup.FunnelMv
       val (idx, del) = deleteCapableIndex(s, dir)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_funnel_vacuum")
-      try {
+      Dirs.scratch("graft_funnel_vacuum") { stage =>
         FunnelMv.writeDocIndex(idx, stage.toString, nBuckets = 16)
         val before = FunnelMv.readDocIndex(s, stage.toString).count()
         val purged = FunnelMv.vacuum(s, stage.toString, del)
@@ -1998,7 +1996,7 @@ object DedupCatalog {
           .crossJoin(broadcast(book))
           .orderBy("stage_ord")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       WITH $delIndexCtes,
@@ -2058,19 +2056,16 @@ object DedupCatalog {
   val dPipelineMvStreamIngest = QueryDef(
     "q_pipeline_mv_stream_ingest",
     (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       import org.apache.spark.sql.expressions.Window
       import graft.dedup.FunnelMv
       import graft.sources.{ManifestedPartitions, VersionedView}
       val raw0 = t(s, dir, "documents").filter(col("text").isNotNull)
         .select("doc_id", "text").localCheckpoint(true)
-      val stage = Files.createTempDirectory("graft_mv_stream")
-      val vroot = s"$stage/versioned"
-      val feed = stage.resolve("feed")
-      val ckpt = stage.resolve("ckpt")
-      val compactEvery = 2
-      Files.createDirectories(feed)
-      try {
+      Dirs.scratch("graft_mv_stream") { stage =>
+        val vroot = s"$stage/versioned"
+        val feed = stage.resolve("feed")
+        val ckpt = stage.resolve("ckpt")
+        val compactEvery = 2
         // BUILD: base view + fp-bucketed fp index + empty ledger as v1
         FunnelMv.writeVersioned(raw0, vroot, MvFpBuckets, E2eMinTokens,
           E2eMaxStopword, E2eMinDistinct, E2eMaxTopBigram)
@@ -2080,15 +2075,7 @@ object DedupCatalog {
           .withColumn("slice",
             ntile(3).over(Window.orderBy("doc_id")) - 1)
           .localCheckpoint(true)
-        QueryDef.stageSlices(sliced, "slice", 3, stage,
-          i => stage.resolve(f"slice$i%02d.parquet"))
-        def land(i: Int): Unit = {
-          val dst = feed.resolve(f"b$i%02d.parquet")
-          Files.copy(stage.resolve(f"slice$i%02d.parquet"), dst,
-            StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-        }
+        QueryDef.stageSlices(sliced, "slice", 3, stage)
         // the IVM step for one micro-batch: ledger-keyed exactly-once
         // ingest, then the SCHEDULED compaction — only when this call
         // advanced the head (a re-delivered batch must not re-compact).
@@ -2121,9 +2108,10 @@ object DedupCatalog {
             }.start()
           try q.processAllAvailable() finally q.stop()
         }
-        land(0); runPhase()
+        landSlice(stage, feed, 0); runPhase()
         val phase1Max = seen.max
-        land(1); land(2); runPhase() // RESTART from the checkpoint
+        landSlice(stage, feed, 1); landSlice(stage, feed, 2)
+        runPhase() // RESTART from the checkpoint
         val resumed = seen.size >= 3 &&
           seen.drop(1).forall(_ > phase1Max)
         // v1 base, v2=b0, v3=b1, v4=compaction (after b1), v5=b2
@@ -2159,7 +2147,7 @@ object DedupCatalog {
           .withColumn("bounded_reads", lit(boundedReads))
           .orderBy("stage_ord")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(incrMvFullRecomputeSql(
       ", TRUE AS resumed, TRUE AS replay_idempotent, TRUE AS bounded_reads"))
@@ -2186,9 +2174,8 @@ object DedupCatalog {
       import graft.sources.VersionedView
       val raw0 = t(s, dir, "documents").filter(col("text").isNotNull)
         .select("doc_id", "text").localCheckpoint(true)
-      val stage = Files.createTempDirectory("graft_mv_expire")
-      val vroot = s"$stage/versioned"
-      try {
+      Dirs.scratch("graft_mv_expire") { stage =>
+        val vroot = s"$stage/versioned"
         FunnelMv.write(raw0, s"$stage/mv", E2eMinTokens, E2eMaxStopword,
           E2eMinDistinct, E2eMaxTopBigram)
         VersionedView.commit(s.read.parquet(s"$stage/mv/view"), vroot, 1L)
@@ -2219,7 +2206,7 @@ object DedupCatalog {
           .withColumn("bytes_gone", lit(bytesGone))
           .orderBy("stage_ord")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(incrMvFullRecomputeSql(
       ", TRUE AS latest_unaffected, TRUE AS below_horizon_loud" +
@@ -2253,15 +2240,13 @@ object DedupCatalog {
   val dPipelineMvOcc = QueryDef(
     "q_pipeline_mv_occ",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.expressions.Window
       import graft.dedup.FunnelMv
       import graft.sources.{ManifestedPartitions => MP}
       val raw0 = t(s, dir, "documents").filter(col("text").isNotNull)
         .select("doc_id", "text").localCheckpoint(true)
-      val stage = Files.createTempDirectory("graft_mv_occ")
-      val vroot = s"$stage/versioned"
-      try {
+      Dirs.scratch("graft_mv_occ") { stage =>
+        val vroot = s"$stage/versioned"
         FunnelMv.writeVersioned(raw0, vroot, MvFpBuckets, E2eMinTokens,
           E2eMaxStopword, E2eMinDistinct, E2eMaxTopBigram) // v1
         val sliced = incrInsertBatch(raw0)
@@ -2315,7 +2300,7 @@ object DedupCatalog {
           .withColumn("bounded", lit(bounded))
           .orderBy("stage_ord")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(incrMvFullRecomputeSql(
       ", TRUE AS no_lost_update, TRUE AS exactly_once, TRUE AS bounded"))

@@ -1,9 +1,15 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Dirs
+import graft.streaming.EventStreams.{drainPhase, runToMemory}
 
 import QueryDef._
 
@@ -97,7 +103,7 @@ object EventsCatalog {
   private def stagedEventsDir(dir: String, variant: String)(
       stage: java.nio.file.Path => String): String = {
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val attrs = java.nio.file.Files.readAttributes(
+    val attrs = Files.readAttributes(
       src, classOf[java.nio.file.attribute.BasicFileAttributes])
     val identity = Seq(
       Option(attrs.fileKey).map(_.toString).getOrElse(""),
@@ -114,8 +120,8 @@ object EventsCatalog {
 
   private[queries] def streamableEventsDir(dir: String): String =
     stagedEventsDir(dir, "copy") { src =>
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_events")
-      java.nio.file.Files.copy(src, d.resolve("events.parquet"))
+      val d = Files.createTempDirectory("graft_stream_events")
+      Files.copy(src, d.resolve("events.parquet"))
       d.toString
     }
 
@@ -140,25 +146,42 @@ object EventsCatalog {
       // one day past the real data: far beyond any watermark delay +
       // join lag used by the catalog queries
       val hbTs = ev.agg(max(col("ts"))).head.getLong(0) + 86400000000L
-      val hb = s.createDataFrame(
-        java.util.Arrays.asList(
-          org.apache.spark.sql.Row(-1L, hbTs, -1L, "purchase", 0.0, null),
-          org.apache.spark.sql.Row(-2L, hbTs, -1L, "click", 0.0, null)),
-        graft.model.Schemas.events)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hb_write")
-      ev.select(graft.model.Schemas.events.fieldNames.map(col): _*)
-        .unionByName(hb)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val st = java.nio.file.Files.list(tmp)
-      val part =
-        try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst.get()
-        finally st.close()
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_hb")
-      java.nio.file.Files.move(part, d.resolve("events.parquet"))
-      Dirs.delete(tmp)
-      d.toString
+      Dirs.scratch("graft_hb_write") { tmp =>
+        ev.select(graft.model.Schemas.events.fieldNames.map(col): _*)
+          .unionByName(heartbeat(s, hbTs))
+          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val st = Files.list(tmp)
+        val part =
+          try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
+            .findFirst.get()
+          finally st.close()
+        val d = Files.createTempDirectory("graft_stream_hb")
+        Files.move(part, d.resolve("events.parquet"))
+        d.toString
+      }
     }
+
+  /** The heartbeat pair at `hbTs` (epoch µs) in the events schema: one
+    * purchase and one click of user −1 (event ids −1 and −2), value 0.
+    * Every heartbeat row has a negative user_id, so `user_id >= 0` on a
+    * drained sink drops exactly the heartbeat.
+    */
+  private def heartbeat(s: SparkSession, hbTs: Long): DataFrame =
+    s.createDataFrame(
+      java.util.Arrays.asList(
+        Row(-1L, hbTs, -1L, "purchase", 0.0, null),
+        Row(-2L, hbTs, -1L, "click", 0.0, null)),
+      graft.model.Schemas.events)
+
+  /** How many files under `ckpt/state` end in `suffix` — which kind of
+    * state-store file (`.zip` snapshot, `.changelog`) a checkpointed
+    * streaming run actually wrote.
+    */
+  private def stateFiles(ckpt: Path, suffix: String): Long = {
+    val st = Files.walk(ckpt.resolve("state"))
+    try st.filter(_.getFileName.toString.endsWith(suffix)).count()
+    finally st.close()
+  }
 
   /** Stream-stream LEFT OUTER interval join through the ENGINE path
     * (EventStreams.purchaseClickLeftJoin): q_e_interval_stream's join
@@ -171,19 +194,15 @@ object EventsCatalog {
   val eLeftJoinStream = QueryDef(
     "q_e_left_join_stream",
     (s, dir) => {
-      val sink = "graft_left_join_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .purchaseClickLeftJoin(s, streamableEventsDirWithHeartbeat(s, dir),
             lagMinutes = 30)
           .select(col("user_id"),
             unix_micros(col("purchase_ts")).as("purchase_us"),
             col("purchase_value"),
             unix_micros(col("click_ts")).as("click_us"), col("click_value"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_left_join_stream_sink")
       }
       // heartbeat rows are dropped HERE, on the drained sink — a filter in
       // the streaming plan would be pushed below the watermark operators
@@ -191,7 +210,7 @@ object EventsCatalog {
       // the heartbeat would never reach event-time tracking, and the
       // watermark would freeze below the real data's tail (observed: the
       // last two unmatched purchases never emitted)
-      s.table(sink).filter(col("user_id") >= 0L)
+      drained.filter(col("user_id") >= 0L)
         .orderBy(col("user_id"), col("purchase_us"),
           col("purchase_value"), asc_nulls_last("click_us"),
           asc_nulls_last("click_value"))
@@ -225,22 +244,18 @@ object EventsCatalog {
   val eFullJoinStream = QueryDef(
     "q_e_full_join_stream",
     (s, dir) => {
-      val sink = "graft_full_join_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .purchaseClickFullJoin(s, streamableEventsDirWithHeartbeat(s, dir),
             lagMinutes = 30)
           .select(col("user_id"),
             unix_micros(col("purchase_ts")).as("purchase_us"),
             col("purchase_value"),
             unix_micros(col("click_ts")).as("click_us"), col("click_value"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_full_join_stream_sink")
       }
       // heartbeat dropped post-sink — the q_e_left_join_stream pushdown trap
-      s.table(sink).filter(col("user_id") >= 0L)
+      drained.filter(col("user_id") >= 0L)
         .orderBy(col("user_id"), asc_nulls_last("purchase_us"),
           asc_nulls_last("purchase_value"), asc_nulls_last("click_us"),
           asc_nulls_last("click_value"))
@@ -279,17 +294,13 @@ object EventsCatalog {
   val eClosedSessions = QueryDef(
     "q_e_closed_sessions",
     (s, dir) => {
-      val sink = "graft_closed_sessions_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .closedSessions(s, streamableEventsDirWithHeartbeat(s, dir))
           .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_closed_sessions_sink")
       }
-      s.table(sink).filter(col("user_id") >= 0L)
+      drained.filter(col("user_id") >= 0L)
         .orderBy("user_id", "start_us")
     },
     Some("""
@@ -314,21 +325,17 @@ object EventsCatalog {
   val eHourlyStream = QueryDef(
     "q_e_hourly_stream",
     (s, dir) => {
-      val sink = "graft_hourly_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
+      val drained = withStatePartitions(s, 8) {
         val sdir = streamableEventsDir(dir)
-        val q = graft.sources.EventsTs.normalize(
+        val df = graft.sources.EventsTs.normalize(
             s.readStream.schema(graft.model.Schemas.events).parquet(sdir),
             sdir)
           .withColumn("hour",
             date_format(timestamp_micros(col("ts")), "yyyy-MM-dd HH"))
           .groupBy("hour", "event_type").agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_hourly_stream_sink", OutputMode.Complete())
       }
-      s.table(sink).groupBy("hour")
+      drained.groupBy("hour")
         .pivot("event_type", eventTypes)
         .agg(sum("n"))
         .na.fill(0L, eventTypes)
@@ -348,17 +355,13 @@ object EventsCatalog {
   val eSessionizeStream = QueryDef(
     "q_e_sessionize_stream",
     (s, dir) => {
-      val sink = "graft_sessionize_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .sessionize(s, streamableEventsDir(dir))
           .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_sessionize_stream_sink", OutputMode.Update())
       }
-      s.table(sink).groupBy("user_id")
+      drained.groupBy("user_id")
         .agg(max("n_sessions").as("n_sessions"),
           max("n_events").as("n_events"))
         .orderBy("user_id")
@@ -480,40 +483,20 @@ object EventsCatalog {
   val eDedupStream = QueryDef(
     "q_e_dedup_stream",
     (s, dir) => {
-      val sink = "graft_dedup_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .dedupStream(s, streamableEventsDir(dir),
             Seq("user_id", "event_type"))
           .select(col("user_id"), col("event_type"),
             unix_micros(col("tsm")).as("ts_us"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_dedup_stream_sink")
       }
-      s.table(sink).orderBy("user_id", "event_type", "ts_us")
+      drained.orderBy("user_id", "event_type", "ts_us")
     },
     Some("""
       SELECT DISTINCT user_id, event_type, epoch_us(ts) AS ts_us
       FROM events ORDER BY user_id, event_type, ts_us""")
   )
-
-  // Stream-STATE width is a first-class knob, sized independently of the
-  // batch job's shuffle width: a stateful streaming query creates one
-  // state store per shuffle partition per stateful operator (a
-  // stream-stream join keeps FOUR), and every micro-batch commits every
-  // store — so an over-wide default buys nothing but store-commit
-  // overhead at this key cardinality. Production streaming jobs pin this
-  // per-query before the first run (it is sticky in the checkpoint);
-  // here it is scoped to the query and restored after the sink drains.
-  private[queries] def withStatePartitions[T](s: org.apache.spark.sql.SparkSession,
-      n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, prev)
-  }
 
   /** Stream-stream interval join through the ENGINE path
     * (EventStreams.purchaseClickJoin: both-side watermarks + two-sided
@@ -529,20 +512,16 @@ object EventsCatalog {
   val eIntervalStream = QueryDef(
     "q_e_interval_stream",
     (s, dir) => {
-      val sink = "graft_interval_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .purchaseClickJoin(s, streamableEventsDir(dir), lagMinutes = 30)
           .select(col("user_id"),
             unix_micros(col("purchase_ts")).as("purchase_us"),
             col("purchase_value"),
             unix_micros(col("click_ts")).as("click_us"), col("click_value"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_interval_stream_sink")
       }
-      s.table(sink).orderBy("user_id", "purchase_us", "click_us",
+      drained.orderBy("user_id", "purchase_us", "click_us",
         "purchase_value", "click_value")
     },
     Some("""
@@ -623,22 +602,18 @@ object EventsCatalog {
   val eEnrichStream = QueryDef(
     "q_e_enrich_stream",
     (s, dir) => {
-      val sink = "graft_enrich_stream_sink"
-      s.catalog.dropTempView(sink)
       val dim = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      withStatePartitions(s, 8) {
-        val q = s.readStream.schema(graft.model.Schemas.events)
+      val drained = withStatePartitions(s, 8) {
+        val df = s.readStream.schema(graft.model.Schemas.events)
           .parquet(streamableEventsDir(dir))
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(28,6)")).as("dv"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_enrich_stream_sink", OutputMode.Complete())
       }
-      s.table(sink)
+      drained
         .select(col("c_mktsegment"), col("n_events"),
           col("dv").cast("double").as("total_value"))
         .orderBy("c_mktsegment")
@@ -669,18 +644,14 @@ object EventsCatalog {
   val eHoltStream = QueryDef(
     "q_e_holt_stream",
     (s, dir) => {
-      val sink = "graft_holt_stream_sink"
-      s.catalog.dropTempView(sink)
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .holtStream(s, streamableEventsDir(dir), HoltStreamAlpha,
             HoltStreamBeta, HoltStreamMod)
           .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_holt_stream_sink", OutputMode.Update())
       }
-      s.table(sink).groupBy("event_type")
+      drained.groupBy("event_type")
         .agg(max(struct(col("n"), col("level"), col("trend"))).as("f"))
         .select(col("event_type"), col("f.n").as("n"),
           col("f.level").as("level"), col("f.trend").as("trend"))
@@ -954,8 +925,6 @@ object EventsCatalog {
   val eScdStream = QueryDef(
     "q_e_scd_stream",
     (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      import org.apache.spark.sql.DataFrame
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal"))
       val dim0 = cust
@@ -969,22 +938,17 @@ object EventsCatalog {
       val batches =
         Seq(batch(7, 100L, 100.0), batch(5, 200L, 200.0),
           batch(3, 300L, 300.0))
-      val stage = Files.createTempDirectory("graft_scd_feed")
-      val feed = stage.resolve("feed")
-      Files.createDirectories(feed)
-      try {
+      Dirs.scratch("graft_scd_feed") { stage =>
+        val feed = stage.resolve("feed")
         // one partitioned write stages all three batch files
-        // (QueryDef.stageSlices); ascending mtimes pin the
+        // (QueryDef.stageSlices); landing them in order pins the
         // FileStreamSource replay order
         QueryDef.stageSlices(
           batches.zipWithIndex
             .map { case (b, i) => b.withColumn("slice", lit(i)) }
             .reduce(_ unionByName _),
-          "slice", 3, stage, i => feed.resolve(f"b$i%02d.parquet"))
-        (0 until 3).foreach { i =>
-          Files.setLastModifiedTime(feed.resolve(f"b$i%02d.parquet"),
-            java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-        }
+          "slice", 3, stage)
+        (0 until 3).foreach(landSlice(stage, feed, _))
         var state = dim0.localCheckpoint()
         // the per-batch SCD2 merge joins run inside foreachBatch — scope
         // the state/shuffle width down like the other streaming entries
@@ -1005,7 +969,7 @@ object EventsCatalog {
           try q.processAllAvailable() finally q.stop()
         }
         state.orderBy(col("c_custkey"), col("valid_from"))
-      } finally Dirs.delete(stage)
+      }
     },
     Some("""
       WITH base AS (SELECT c_custkey, c_acctbal FROM customer),
@@ -1213,17 +1177,13 @@ object EventsCatalog {
   val eFunnelStream = QueryDef(
     "q_e_funnel_stream",
     (s, dir) => {
-      val sink = "graft_funnel_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .funnelStream(s, streamableEventsDir(dir))
           .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_funnel_stream_sink", OutputMode.Update())
       }
-      val firsts = s.table(sink).groupBy("user_id")
+      val firsts = drained.groupBy("user_id")
         .agg(min("t_view").as("t_view"), min("t_click").as("t_click"),
           min("t_buy").as("t_buy"))
       firsts.agg(
@@ -1252,19 +1212,15 @@ object EventsCatalog {
   val eCusumStream = QueryDef(
     "q_e_cusum_stream",
     (s, dir) => {
-      val sink = "graft_cusum_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .cusumStream(s, streamableEventsDir(dir), CusumBurnIn, CusumH)
           .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_cusum_stream_sink")
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type", "day_id").orderBy(col("n_seen").desc)
-      s.table(sink)
+      drained
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("event_type"), col("day_id"),
           r6(col("s_pos")).as("s_pos"), r6(col("s_neg")).as("s_neg"),
@@ -1406,22 +1362,18 @@ object EventsCatalog {
   val eSessionWindowStream = QueryDef(
     "q_e_session_window_stream",
     (s, dir) => {
-      val sink = "graft_swin_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
+      val drained = withStatePartitions(s, 8) {
         val sdir = streamableEventsDirWithHeartbeat(s, dir)
-        val q = graft.sources.EventsTs.normalize(
+        val df = graft.sources.EventsTs.normalize(
             s.readStream.schema(graft.model.Schemas.events).parquet(sdir),
             sdir)
           .withColumn("tsm", timestamp_micros(col("ts")))
           .withWatermark("tsm", "1 hour")
           .groupBy(session_window(col("tsm"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_swin_stream_sink")
       }
-      s.table(sink)
+      drained
         .where(col("user_id") >= 0) // drop the heartbeat pair
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("start_us"),
@@ -1512,20 +1464,16 @@ object EventsCatalog {
   val eHwStream = QueryDef(
     "q_e_hw_stream",
     (s, dir) => {
-      val sink = "graft_hw_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .holtWintersStream(s, streamableEventsDir(dir), HwsM, HwsAlpha,
             HwsBeta, HwsGamma)
           .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_hw_stream_sink")
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type", "day_id").orderBy(col("n_seen").desc)
-      s.table(sink)
+      drained
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("event_type"), col("day_id"), col("level"),
           col("trend"), col("season"), col("fitted"))
@@ -2029,18 +1977,14 @@ object EventsCatalog {
   val ePipelineStream = QueryDef(
     "q_pipeline_stream_e2e",
     (s, dir) => {
-      val sink = "graft_pipeline_stream_sink"
-      s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.EventStreams
+      val drained = withStatePartitions(s, 8) {
+        val df = graft.streaming.EventStreams
           .dedupHourlyActives(s, streamableEventsDirWithHeartbeat(s, dir))
           .select(unix_micros(col("hw.start")).as("hour_us"),
             col("event_type"), col("n_active"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_pipeline_stream_sink")
       }
-      s.table(sink).orderBy("hour_us", "event_type")
+      drained.orderBy("hour_us", "event_type")
     },
     Some("""
       WITH d AS (
@@ -2051,6 +1995,11 @@ object EventsCatalog {
              count(*) AS n_active
       FROM d GROUP BY 1, 2 ORDER BY 1, 2""")
   )
+
+  // the RocksDB state-store provider, as a session-conf pair for withConf
+  private val RocksdbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** RocksDB state-store gate (r14, verdict headroom item): the identical
     * composed pipeline as q_pipeline_stream_e2e — watermarked dedup
@@ -2071,43 +2020,28 @@ object EventsCatalog {
   val eRocksdbStream = QueryDef(
     "q_e_rocksdb_stream",
     (s, dir) => {
-      import java.nio.file.Files
       val sink = "graft_rocksdb_stream_sink"
       s.catalog.dropTempView(sink) // idempotent across bench warm-up reps
-      val stage = Files.createTempDirectory("graft_rocksdb_gate")
-      val ckpt = stage.resolve("ckpt")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider")
-      try {
-        withStatePartitions(s, 8) {
-          val q = graft.streaming.EventStreams
-            .dedupHourlyActives(s, streamableEventsDirWithHeartbeat(s, dir))
-            .select(unix_micros(col("hw.start")).as("hour_us"),
-              col("event_type"), col("n_active"))
-            .writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
+      Dirs.scratch("graft_rocksdb_gate") { stage =>
+        val ckpt = stage.resolve("ckpt")
+        withConf(s, RocksdbProvider) {
+          withStatePartitions(s, 8) {
+            val q = graft.streaming.EventStreams
+              .dedupHourlyActives(s, streamableEventsDirWithHeartbeat(s, dir))
+              .select(unix_micros(col("hw.start")).as("hour_us"),
+                col("event_type"), col("n_active"))
+              .writeStream.format("memory").queryName(sink)
+              .option("checkpointLocation", ckpt.toString)
+              .outputMode("append").start()
+            try q.processAllAvailable() finally q.stop()
+          }
+          s.table(sink)
+            .withColumn("rocksdb_state", lit(stateFiles(ckpt, ".zip") > 0))
+            .orderBy("hour_us", "event_type")
+            // the memory sink is lazily re-read from the temp view;
+            // materialize before the checkpoint dir is deleted below
+            .localCheckpoint(true)
         }
-        val zips = {
-          val st = Files.walk(ckpt.resolve("state"))
-          try st.filter(_.getFileName.toString.endsWith(".zip")).count()
-          finally st.close()
-        }
-        s.table(sink)
-          .withColumn("rocksdb_state", lit(zips > 0))
-          .orderBy("hour_us", "event_type")
-          // the memory sink is lazily re-read from the temp view;
-          // materialize before the checkpoint dir is deleted below
-          .localCheckpoint(true)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
-        Dirs.delete(stage)
       }
     },
     Some("""
@@ -2119,6 +2053,66 @@ object EventsCatalog {
              count(*) AS n_active, TRUE AS rocksdb_state
       FROM d GROUP BY 1, 2 ORDER BY 1, 2""")
   )
+
+  /** The body of the three complete-mode restart gates: the events feed
+    * is staged as four `event_id mod 4` slices; a checkpointed per-type
+    * aggregation (complete mode, one file per trigger, 8 state
+    * partitions, `conf` set for both phases) drains the first two into
+    * the memory sink `<name>_phase1` and stops, the other two land, and
+    * a NEW query restarts from the same checkpoint into `<name>_sink`.
+    * The result is that sink plus `resumed` (the restarted run's first
+    * data batch continued the checkpoint's numbering) and, for each
+    * `(column, suffix)` of `stateCols`, whether files ending in `suffix`
+    * exist under the checkpoint's state directory; it is materialized
+    * before the scratch directory `name…` goes.
+    */
+  private def restartAggGate(s: SparkSession, dir: String, name: String,
+      conf: Seq[(String, String)],
+      stateCols: Seq[(String, String)]): DataFrame = {
+    val ev = t(s, dir, "events") // ts normalized to epoch µs
+      .select(graft.model.Schemas.events.fieldNames.map(col): _*)
+    Dirs.scratch(name) { stage =>
+      val feed = stage.resolve("feed")
+      val ckpt = stage.resolve("ckpt")
+      // one partitioned write pre-stages all four slices (stageSlices);
+      // landSlice is the phase-boundary move into the watched feed dir
+      QueryDef.stageSlices(
+        ev.withColumn("slice", pmod(col("event_id"), lit(4))),
+        "slice", 4, stage)
+      // one run of the checkpointed aggregation until the feed drains;
+      // returns the smallest batchId that actually read rows
+      def runPhase(sink: String): Long = {
+        s.catalog.dropTempView(sink) // idempotent across bench reps
+        drainPhase(s.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(feed.toString)
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sumE(col("value")).as("total"))
+          .writeStream.outputMode("complete")
+          .option("checkpointLocation", ckpt.toString)
+          .format("memory").queryName(sink)
+          .start())
+      }
+      withConf(s, conf: _*) {
+        withStatePartitions(s, 8) {
+          landSlice(stage, feed, 0); landSlice(stage, feed, 1)
+          runPhase(s"${name}_phase1") // commits batches 0, 1
+          landSlice(stage, feed, 2); landSlice(stage, feed, 3)
+          val firstAfterRestart = runPhase(s"${name}_sink")
+          val drained = s.table(s"${name}_sink")
+            .withColumn("resumed", lit(firstAfterRestart > 0L))
+          stateCols
+            .foldLeft(drained) { case (df, (c, suffix)) =>
+              df.withColumn(c, lit(stateFiles(ckpt, suffix) > 0))
+            }
+            .orderBy("event_type")
+            // the complete-mode sink is lazily re-read from the temp view;
+            // materialize before the feed files are deleted
+            .localCheckpoint(true)
+        }
+      }
+    }
+  }
 
   /** Checkpoint-restart fault-tolerance gate (r13 verdict order #4):
     * every other streaming entry runs start→drain once; this one proves
@@ -2136,6 +2130,15 @@ object EventsCatalog {
     * a silently-fresh start would flip it (and a fresh start that
     * reprocessed everything would still show batchId 0, not pass).
     */
+  val eRestartStream = QueryDef(
+    "q_e_restart_stream",
+    (s, dir) => restartAggGate(s, dir, "graft_restart_gate", Nil, Nil),
+    Some(s"""
+      SELECT event_type, count(*) AS n,
+             ${sqlSumE("value")} AS total, TRUE AS resumed
+      FROM events GROUP BY 1 ORDER BY 1""")
+  )
+
   /** RocksDB-provider checkpoint-restart gate (r14) — completes the
     * {state store} × {lifecycle} matrix: q_e_rocksdb_stream proves the
     * RocksDB provider computes correctly in one lifecycle,
@@ -2153,79 +2156,8 @@ object EventsCatalog {
     */
   val eRocksdbRestartStream = QueryDef(
     "q_e_rocksdb_restart_stream",
-    (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val ev = t(s, dir, "events")
-        .select(graft.model.Schemas.events.fieldNames.map(col): _*)
-      val stage = Files.createTempDirectory("graft_rocksdb_restart")
-      val feed = stage.resolve("feed")
-      val ckpt = stage.resolve("ckpt")
-      Files.createDirectories(feed)
-      // all four slices pre-staged with ONE partitioned write (one events
-      // scan + one commit instead of four of each — QueryDef.stageSlices);
-      // landFile stays the phase-boundary move into the watched feed dir
-      QueryDef.stageSlices(
-        ev.withColumn("slice", pmod(col("event_id"), lit(4))),
-        "slice", 4, stage, i => stage.resolve(f"slice$i%02d.parquet"))
-      def landFile(i: Int): Unit = {
-        val dst = feed.resolve(f"b$i%02d.parquet")
-        Files.move(stage.resolve(f"slice$i%02d.parquet"), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-      }
-      def runPhase(sink: String): Long = {
-        s.catalog.dropTempView(sink)
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(feed.toString)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sumE(col("value")).as("total"))
-          .writeStream.outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .format("memory").queryName(sink)
-          .start()
-        def dataBatches = q.recentProgress.filter(_.numInputRows > 0)
-        try {
-          q.processAllAvailable()
-          var waited = 0
-          while (dataBatches.isEmpty && waited < 100) {
-            Thread.sleep(100); waited += 1
-          }
-        } finally q.stop()
-        require(dataBatches.nonEmpty,
-          s"no data batch reported by $sink after 10s")
-        dataBatches.map(_.batchId).min
-      }
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider")
-      try {
-        withStatePartitions(s, 8) {
-          landFile(0); landFile(1)
-          runPhase("graft_rocksdb_restart_phase1")
-          landFile(2); landFile(3)
-          val firstAfterRestart = runPhase("graft_rocksdb_restart_sink")
-          val zips = {
-            val st = Files.walk(ckpt.resolve("state"))
-            try st.filter(_.getFileName.toString.endsWith(".zip")).count()
-            finally st.close()
-          }
-          s.table("graft_rocksdb_restart_sink")
-            .withColumn("resumed", lit(firstAfterRestart > 0L))
-            .withColumn("rocksdb_state", lit(zips > 0))
-            .orderBy("event_type")
-            .localCheckpoint(true)
-        }
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
-        Dirs.delete(stage)
-      }
-    },
+    (s, dir) => restartAggGate(s, dir, "graft_rocksdb_restart",
+      Seq(RocksdbProvider), Seq("rocksdb_state" -> ".zip")),
     Some(s"""
       SELECT event_type, count(*) AS n,
              ${sqlSumE("value")} AS total, TRUE AS resumed,
@@ -2253,86 +2185,10 @@ object EventsCatalog {
     */
   val eRocksdbChangelogStream = QueryDef(
     "q_e_rocksdb_changelog_stream",
-    (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val ev = t(s, dir, "events")
-        .select(graft.model.Schemas.events.fieldNames.map(col): _*)
-      val stage = Files.createTempDirectory("graft_rocksdb_changelog")
-      val feed = stage.resolve("feed")
-      val ckpt = stage.resolve("ckpt")
-      Files.createDirectories(feed)
-      // one partitioned write pre-stages all four slices (stageSlices)
-      QueryDef.stageSlices(
-        ev.withColumn("slice", pmod(col("event_id"), lit(4))),
-        "slice", 4, stage, i => stage.resolve(f"slice$i%02d.parquet"))
-      def landFile(i: Int): Unit = {
-        val dst = feed.resolve(f"b$i%02d.parquet")
-        Files.move(stage.resolve(f"slice$i%02d.parquet"), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-      }
-      def runPhase(sink: String): Long = {
-        s.catalog.dropTempView(sink)
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(feed.toString)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sumE(col("value")).as("total"))
-          .writeStream.outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .format("memory").queryName(sink)
-          .start()
-        def dataBatches = q.recentProgress.filter(_.numInputRows > 0)
-        try {
-          q.processAllAvailable()
-          var waited = 0
-          while (dataBatches.isEmpty && waited < 100) {
-            Thread.sleep(100); waited += 1
-          }
-        } finally q.stop()
-        require(dataBatches.nonEmpty,
-          s"no data batch reported by $sink after 10s")
-        dataBatches.map(_.batchId).min
-      }
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val logKey = "spark.sql.streaming.stateStore.rocksdb" +
-        ".changelogCheckpointing.enabled"
-      val prevProv = s.conf.getOption(provKey)
-      val prevLog = s.conf.getOption(logKey)
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider")
-      s.conf.set(logKey, "true")
-      try {
-        withStatePartitions(s, 8) {
-          landFile(0); landFile(1)
-          runPhase("graft_rocksdb_changelog_phase1")
-          landFile(2); landFile(3)
-          val firstAfterRestart = runPhase("graft_rocksdb_changelog_sink")
-          val changelogs = {
-            val st = Files.walk(ckpt.resolve("state"))
-            try st.filter(_.getFileName.toString.endsWith(".changelog"))
-              .count()
-            finally st.close()
-          }
-          s.table("graft_rocksdb_changelog_sink")
-            .withColumn("resumed", lit(firstAfterRestart > 0L))
-            .withColumn("changelog_state", lit(changelogs > 0))
-            .orderBy("event_type")
-            .localCheckpoint(true)
-        }
-      } finally {
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None    => s.conf.unset(provKey)
-        }
-        prevLog match {
-          case Some(v) => s.conf.set(logKey, v)
-          case None    => s.conf.unset(logKey)
-        }
-        Dirs.delete(stage)
-      }
-    },
+    (s, dir) => restartAggGate(s, dir, "graft_rocksdb_changelog",
+      Seq(RocksdbProvider, "spark.sql.streaming.stateStore.rocksdb" +
+        ".changelogCheckpointing.enabled" -> "true"),
+      Seq("changelog_state" -> ".changelog")),
     Some(s"""
       SELECT event_type, count(*) AS n,
              ${sqlSumE("value")} AS total, TRUE AS resumed,
@@ -2340,80 +2196,31 @@ object EventsCatalog {
       FROM events GROUP BY 1 ORDER BY 1""")
   )
 
-  val eRestartStream = QueryDef(
-    "q_e_restart_stream",
-    (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      import org.apache.spark.sql.DataFrame
-      val ev = t(s, dir, "events") // ts normalized to epoch µs
-        .select(graft.model.Schemas.events.fieldNames.map(col): _*)
-      val stage = Files.createTempDirectory("graft_restart_gate")
-      val feed = stage.resolve("feed")
-      val ckpt = stage.resolve("ckpt").toString
-      Files.createDirectories(feed)
-      // one partitioned write pre-stages all four slices (stageSlices)
-      QueryDef.stageSlices(
-        ev.withColumn("slice", pmod(col("event_id"), lit(4))),
-        "slice", 4, stage, i => stage.resolve(f"slice$i%02d.parquet"))
-      def landFile(i: Int): Unit = {
-        val dst = feed.resolve(f"b$i%02d.parquet")
-        Files.move(stage.resolve(f"slice$i%02d.parquet"), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        // ascending mtimes pin the FileStreamSource replay order
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-      }
-      // one run of the checkpointed aggregation until the feed drains;
-      // returns the smallest batchId that actually read rows
-      def runPhase(sink: String): Long = {
-        s.catalog.dropTempView(sink) // idempotent across bench reps
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(feed.toString)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sumE(col("value")).as("total"))
-          .writeStream.outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName(sink)
-          .start()
-        // progress events post asynchronously to the listener bus; on a
-        // loaded host recentProgress can still be empty right after
-        // processAllAvailable returns — wait boundedly for the data batch
-        // WHILE THE QUERY IS STILL RUNNING (once stopped, the execution
-        // thread records no further progress, so a post-stop wait could
-        // never observe a late entry — ADVICE r13), then stop
-        def dataBatches = q.recentProgress.filter(_.numInputRows > 0)
-        try {
-          q.processAllAvailable()
-          var waited = 0
-          while (dataBatches.isEmpty && waited < 100) {
-            Thread.sleep(100); waited += 1
-          }
-        } finally q.stop()
-        require(dataBatches.nonEmpty,
-          s"no data batch reported by $sink after 10s")
-        dataBatches.map(_.batchId).min
-      }
-      try {
-        withStatePartitions(s, 8) {
-          landFile(0); landFile(1)
-          runPhase("graft_restart_gate_phase1") // commits batches 0, 1
-          landFile(2); landFile(3)
-          val firstAfterRestart = runPhase("graft_restart_gate_sink")
-          s.table("graft_restart_gate_sink")
-            .withColumn("resumed", lit(firstAfterRestart > 0L))
-            .orderBy("event_type")
-            // the complete-mode sink is lazily re-read from the temp view;
-            // materialize before the feed files are deleted below
-            .localCheckpoint(true)
-        }
-      } finally Dirs.delete(stage)
-    },
-    Some(s"""
-      SELECT event_type, count(*) AS n,
-             ${sqlSumE("value")} AS total, TRUE AS resumed
-      FROM events GROUP BY 1 ORDER BY 1""")
-  )
+  /** One phase of the two window restart gates: the watermarked
+    * (`delay`) hourly per-type window count over `stage/feed`, one file
+    * per trigger, checkpointed in `stage/ckpt` and appended to the
+    * transactional FILE sink `stage/out` (append-only parquet +
+    * _spark_metadata commit log) — the one built-in sink whose
+    * exactly-once contract survives a restart (a memory sink refuses to
+    * recover a checkpoint in append mode). Every phase writes into the
+    * same path under the same checkpoint, so a batch read of `out` sees
+    * exactly the committed files. Returns drainPhase's first data batchId.
+    */
+  private def windowPhase(s: SparkSession, schema: StructType, stage: Path,
+      delay: String): Long =
+    drainPhase(s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(stage.resolve("feed").toString)
+      .withColumn("tsc", timestamp_micros(col("ts")))
+      .withWatermark("tsc", delay)
+      .groupBy(window(col("tsc"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(date_format(col("window.start"), "yyyy-MM-dd HH")
+        .as("hour"), col("event_type"), col("n"))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", stage.resolve("ckpt").toString)
+      .format("parquet").option("path", stage.resolve("out").toString)
+      .start())
 
   /** Checkpoint-restart of a WATERMARKED append-mode window aggregation —
     * the harder fault-tolerance claim next to q_e_restart_stream's
@@ -2437,81 +2244,32 @@ object EventsCatalog {
   val eRestartWindowStream = QueryDef(
     "q_e_restart_window_stream",
     (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       val fields = graft.model.Schemas.events.fieldNames.map(col)
       val ev = t(s, dir, "events").select(fields: _*).localCheckpoint(true)
       val mm = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
         .first()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       def cut(i: Int): Long = lo + (hi - lo) / 4 * i
-      val hbTs = hi + 86400000000L
-      val hb = s.createDataFrame(
-        java.util.Arrays.asList(
-          org.apache.spark.sql.Row(-1L, hbTs, -1L, "purchase", 0.0, null),
-          org.apache.spark.sql.Row(-2L, hbTs, -1L, "click", 0.0, null)),
-        graft.model.Schemas.events)
-      val stage = Files.createTempDirectory("graft_restart_window")
-      val feed = stage.resolve("feed")
-      val ckpt = stage.resolve("ckpt").toString
-      Files.createDirectories(feed)
-      // one partitioned write pre-stages all four time-quartile slices
-      // (heartbeat pair unioned into the last — same rows per file as the
-      // old per-slice writes; QueryDef.stageSlices)
-      QueryDef.stageSlices(
-        ev.withColumn("slice",
-            when(col("ts") < cut(1), 0)
-              .when(col("ts") < cut(2), 1)
-              .when(col("ts") < cut(3), 2).otherwise(3))
-          .unionByName(hb.withColumn("slice", lit(3))),
-        "slice", 4, stage, i => stage.resolve(f"slice$i%02d.parquet"))
-      def landFile(i: Int): Unit = {
-        val dst = feed.resolve(f"b$i%02d.parquet")
-        Files.move(stage.resolve(f"slice$i%02d.parquet"), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-      }
-      // the sink is the transactional FILE sink (append-only parquet +
-      // _spark_metadata commit log) — the ONE built-in sink whose
-      // exactly-once contract survives a restart (a memory sink refuses
-      // to recover a checkpoint in append mode); both phases write into
-      // the same path under the same checkpoint, and the batch read
-      // below sees exactly the committed files
-      val out = stage.resolve("out").toString
-      def runPhase(): Long = {
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(feed.toString)
-          .withColumn("tsc", timestamp_micros(col("ts")))
-          .withWatermark("tsc", "1 second")
-          .groupBy(window(col("tsc"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(date_format(col("window.start"), "yyyy-MM-dd HH")
-            .as("hour"), col("event_type"), col("n"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", out)
-          .start()
-        // poll while the query is still running (post-stop, no further
-        // progress can be recorded — ADVICE r13), then stop
-        def dataBatches = q.recentProgress.filter(_.numInputRows > 0)
-        try {
-          q.processAllAvailable()
-          var waited = 0
-          while (dataBatches.isEmpty && waited < 100) {
-            Thread.sleep(100); waited += 1
-          }
-        } finally q.stop()
-        require(dataBatches.nonEmpty, "no data batch reported after 10s")
-        dataBatches.map(_.batchId).min
-      }
-      try {
+      Dirs.scratch("graft_restart_window") { stage =>
+        val feed = stage.resolve("feed")
+        // one partitioned write pre-stages all four time-quartile slices,
+        // the heartbeat pair in the last (QueryDef.stageSlices)
+        QueryDef.stageSlices(
+          ev.withColumn("slice",
+              when(col("ts") < cut(1), 0)
+                .when(col("ts") < cut(2), 1)
+                .when(col("ts") < cut(3), 2).otherwise(3))
+            .unionByName(heartbeat(s, hi + 86400000000L)
+              .withColumn("slice", lit(3))),
+          "slice", 4, stage)
+        def runPhase(): Long =
+          windowPhase(s, ev.schema, stage, "1 second")
         withStatePartitions(s, 8) {
-          landFile(0); landFile(1)
+          landSlice(stage, feed, 0); landSlice(stage, feed, 1)
           runPhase()
-          landFile(2); landFile(3)
+          landSlice(stage, feed, 2); landSlice(stage, feed, 3)
           val firstAfterRestart = runPhase()
-          s.read.parquet(out)
+          s.read.parquet(stage.resolve("out").toString)
             .groupBy("hour", "event_type")
             .agg(sum(col("n")).as("n"), count(lit(1)).as("emits"))
             .select(col("hour"), col("event_type"), col("n"),
@@ -2520,7 +2278,7 @@ object EventsCatalog {
             .orderBy("hour", "event_type")
             .localCheckpoint(true) // materialize before the sink is deleted
         }
-      } finally Dirs.delete(stage)
+      }
     },
     Some("""
       SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
@@ -2554,7 +2312,6 @@ object EventsCatalog {
   val eRestartReshuffleStream = QueryDef(
     "q_e_restart_reshuffle_stream",
     (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       val fields = graft.model.Schemas.events.fieldNames.map(col)
       val ev = t(s, dir, "events").select(fields: _*).localCheckpoint(true)
       val mm = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
@@ -2562,91 +2319,47 @@ object EventsCatalog {
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       // late slice: 10% of events across the whole range, landed last
       val isLate = pmod(col("event_id"), lit(10)) === 0
-      val onTime = ev.filter(!isLate)
       def cut(i: Int): Long = lo + (hi - lo) / 4 * i
       // delay covers the full data range so the late file is ADMITTED
       // (allowed lateness), +2 days of margin; windows then only close on
       // the final heartbeat, whose ts sits one day past hi + delay
       val delayUs = (hi - lo) + 2L * 86400000000L
       val hbTs = hi + delayUs + 86400000000L
-      val hb = s.createDataFrame(
-        java.util.Arrays.asList(
-          org.apache.spark.sql.Row(-1L, hbTs, -1L, "purchase", 0.0, null),
-          org.apache.spark.sql.Row(-2L, hbTs, -1L, "click", 0.0, null)),
-        graft.model.Schemas.events)
-      val stage = Files.createTempDirectory("graft_restart_reshuffle")
-      val feed = stage.resolve("feed")
-      val ckpt = stage.resolve("ckpt")
-      Files.createDirectories(feed)
-      // one partitioned write pre-stages all six slices — the four on-time
-      // quartiles, the late 10%, the heartbeat pair (QueryDef.stageSlices;
-      // same rows per file as the old six per-slice writes)
-      QueryDef.stageSlices(
-        ev.withColumn("slice",
-            when(isLate, 4)
-              .when(col("ts") < cut(1), 0)
-              .when(col("ts") < cut(2), 1)
-              .when(col("ts") < cut(3), 2).otherwise(3))
-          .unionByName(hb.withColumn("slice", lit(5))),
-        "slice", 6, stage, i => stage.resolve(f"slice$i%02d.parquet"))
-      def land(i: Int): Unit = {
-        val dst = feed.resolve(f"b$i%02d.parquet")
-        Files.move(stage.resolve(f"slice$i%02d.parquet"), dst,
-          StandardCopyOption.REPLACE_EXISTING)
-        // ascending mtimes pin the FileStreamSource replay order
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-      }
-      val out = stage.resolve("out").toString
-      def runPhase(): Long = {
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(feed.toString)
-          .withColumn("tsc", timestamp_micros(col("ts")))
-          .withWatermark("tsc", s"${delayUs / 1000000L} seconds")
-          .groupBy(window(col("tsc"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(date_format(col("window.start"), "yyyy-MM-dd HH")
-            .as("hour"), col("event_type"), col("n"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .format("parquet").option("path", out)
-          .start()
-        // poll while the query is still running (post-stop, no further
-        // progress can be recorded — ADVICE r13), then stop
-        def dataBatches = q.recentProgress.filter(_.numInputRows > 0)
-        try {
-          q.processAllAvailable()
-          var waited = 0
-          while (dataBatches.isEmpty && waited < 100) {
-            Thread.sleep(100); waited += 1
-          }
-        } finally q.stop()
-        require(dataBatches.nonEmpty, "no data batch reported after 10s")
-        dataBatches.map(_.batchId).min
-      }
-      try {
+      Dirs.scratch("graft_restart_reshuffle") { stage =>
+        val feed = stage.resolve("feed")
+        // one partitioned write pre-stages all six slices — the four
+        // on-time quartiles, the late 10%, the heartbeat pair
+        // (QueryDef.stageSlices)
+        QueryDef.stageSlices(
+          ev.withColumn("slice",
+              when(isLate, 4)
+                .when(col("ts") < cut(1), 0)
+                .when(col("ts") < cut(2), 1)
+                .when(col("ts") < cut(3), 2).otherwise(3))
+            .unionByName(heartbeat(s, hbTs).withColumn("slice", lit(5))),
+          "slice", 6, stage)
+        def runPhase(): Long =
+          windowPhase(s, ev.schema, stage, s"${delayUs / 1000000L} seconds")
         withStatePartitions(s, 8) {
-          land(0); land(1)
+          landSlice(stage, feed, 0); landSlice(stage, feed, 1)
           runPhase()
         }
         val firstAfterRestart = withStatePartitions(s, 5) {
-          land(2); land(3)
-          land(4) // the late-arriving file
-          land(5) // the heartbeat pair
+          landSlice(stage, feed, 2); landSlice(stage, feed, 3)
+          landSlice(stage, feed, 4) // the late-arriving file
+          landSlice(stage, feed, 5) // the heartbeat pair
           runPhase()
         }
         // state-store layout the RESTARTED run used: one directory per
         // state partition under <ckpt>/state/<operatorId=0>/ — must be
         // the checkpointed 8, not the reconfigured session's 5
         val stateParts = {
-          val op0 = ckpt.resolve("state").resolve("0")
-          val st = Files.list(op0)
+          val st = Files.list(stage.resolve("ckpt/state/0"))
           try st.filter(p => Files.isDirectory(p) &&
               p.getFileName.toString.forall(_.isDigit)).count()
           finally st.close()
         }
-        s.read.parquet(out)
+        s.read.parquet(stage.resolve("out").toString)
           .groupBy("hour", "event_type")
           .agg(sum(col("n")).as("n"), count(lit(1)).as("emits"))
           .select(col("hour"), col("event_type"), col("n"),
@@ -2655,7 +2368,7 @@ object EventsCatalog {
             lit(stateParts).as("state_parts"))
           .orderBy("hour", "event_type")
           .localCheckpoint(true) // materialize before the sink is deleted
-      } finally Dirs.delete(stage)
+      }
     },
     Some("""
       SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,

@@ -2035,9 +2035,7 @@ object MiscCatalog {
   val qOrcScan = QueryDef(
     "q_src_orc",
     (s, dir) => {
-      import java.nio.file.Files
-      val stage = Files.createTempDirectory("graft_orc")
-      try {
+      Dirs.scratch("graft_orc") { stage =>
         t(s, dir, "lineitem")
           .select(col("l_returnflag"), col("l_shipdate"),
             col("l_quantity"), col("l_extendedprice"))
@@ -2054,7 +2052,7 @@ object MiscCatalog {
             sumE(col("l_extendedprice")).as("sum_price"))
           .orderBy("l_returnflag")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally Dirs.delete(stage)
+      }
     },
     Some(s"""
       SELECT l_returnflag, count(*) AS n,
@@ -2079,10 +2077,8 @@ object MiscCatalog {
   val qCsvCorrupt = QueryDef(
     "q_src_csv_corrupt",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.types._
-      val stage = Files.createTempDirectory("graft_csv_corrupt")
-      try {
+      Dirs.scratch("graft_csv_corrupt") { stage =>
         t(s, dir, "orders")
           .select(when(pmod(col("o_orderkey"), lit(7)) === 0,
             concat_ws(",", col("o_orderkey"), col("o_orderstatus"),
@@ -2108,7 +2104,7 @@ object MiscCatalog {
               .as("sum_price_good"))
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally Dirs.delete(stage)
+      }
     },
     Some(s"""
       SELECT o_orderstatus, count(*) AS n_rows,
@@ -2133,9 +2129,7 @@ object MiscCatalog {
   val qPartitionedScan = QueryDef(
     "q_src_partitioned",
     (s, dir) => {
-      import java.nio.file.Files
-      val stage = Files.createTempDirectory("graft_part")
-      try {
+      Dirs.scratch("graft_part") { stage =>
         t(s, dir, "lineitem")
           .withColumn("yr", year(col("l_shipdate")))
           .write.mode("overwrite").partitionBy("yr")
@@ -2147,7 +2141,7 @@ object MiscCatalog {
             sumE(col("l_quantity")).as("sum_qty"))
           .orderBy("l_returnflag")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally Dirs.delete(stage)
+      }
     },
     Some(s"""
       SELECT l_returnflag, count(*) AS n,
@@ -2898,9 +2892,7 @@ object MiscCatalog {
   val qMergeSchema = QueryDef(
     "q_src_merge_schema",
     (s, dir) => {
-      import java.nio.file.Files
-      val stage = Files.createTempDirectory("graft_merge")
-      try {
+      Dirs.scratch("graft_merge") { stage =>
         val o = t(s, dir, "orders")
         o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
           .select(col("o_orderkey"), col("o_totalprice"))
@@ -2916,7 +2908,7 @@ object MiscCatalog {
             r2(sumE(coalesce(col("o_totalprice"), lit(0.0))))
               .as("sum_price"))
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally Dirs.delete(stage)
+      }
     },
     Some(s"""
       SELECT count(*) AS n_rows,
@@ -2941,10 +2933,8 @@ object MiscCatalog {
   val qJsonl = QueryDef(
     "q_src_jsonl",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.types._
-      val stage = Files.createTempDirectory("graft_jsonl")
-      try {
+      Dirs.scratch("graft_jsonl") { stage =>
         t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"))
@@ -2959,7 +2949,7 @@ object MiscCatalog {
             r2(sumE(col("o_totalprice"))).as("sum_price"))
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally Dirs.delete(stage)
+      }
     },
     Some(s"""
       SELECT o_orderstatus, count(*) AS n,
@@ -2977,10 +2967,8 @@ object MiscCatalog {
   val qCsvGzip = QueryDef(
     "q_src_csv_gzip",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.types._
-      val stage = Files.createTempDirectory("graft_csvgz")
-      try {
+      Dirs.scratch("graft_csvgz") { stage =>
         t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"))
@@ -2997,7 +2985,7 @@ object MiscCatalog {
             r2(sumE(col("o_totalprice"))).as("sum_price"))
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the staged dir is deleted
-      } finally Dirs.delete(stage)
+      }
     },
     Some(s"""
       SELECT o_orderstatus, count(*) AS n,
@@ -3726,10 +3714,8 @@ object MiscCatalog {
         .select(col("doc_id"),
           pmod(col("doc_id"), lit(8)).cast("int").as("part"))
         .localCheckpoint(true)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_cas_default")
-      val root = stage.toString
-      try {
+      Dirs.scratch("graft_cas_default") { stage =>
+        val root = stage.toString
         MP.init(docs.filter(pmod(col("doc_id"), lit(7)) === 0),
           root, "d", "part") // v1
         // six disjoint slices tile the remaining rows: writer A ingests
@@ -3767,7 +3753,7 @@ object MiscCatalog {
           .withColumn("one_winner_per_version", lit(oneWinnerPerVersion))
           .orderBy("part")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(root)
+      }
     },
     Some("""
       SELECT CAST(doc_id % 8 AS INT) AS part, count(*) AS n_docs,

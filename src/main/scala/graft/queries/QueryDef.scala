@@ -1,5 +1,8 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,38 +94,83 @@ object QueryDef {
     * (r18 optimization: one source scan and one write commit instead of
     * `n` of each): `df` carries an integer `sliceCol` in [0, n), the
     * files land WITHOUT the slice column (partitionBy drops it), and each
-    * slice's single part file is moved to `dest(i)`. Row ORDER within a
-    * slice file may differ from the per-slice writes, but every consumer
-    * of these feeds is row-order-insensitive by construction — the ingest
-    * operators bucket/aggregate rows through their own repartition, and
-    * the probes rank with deterministic tie-breaks — and the slice's row
-    * SET is identical. A slice that holds no rows (possible at tiny scale
+    * slice's single part file is moved into `stage`, where `landSlice`
+    * picks it up. Row ORDER within a slice file may differ from the
+    * per-slice writes, but every consumer of these feeds is
+    * row-order-insensitive by construction — the ingest operators
+    * bucket/aggregate rows through their own repartition, and the probes
+    * rank with deterministic tie-breaks — and the slice's row SET is
+    * identical. A slice that holds no rows (possible at tiny scale
     * factors) falls back to the old per-slice write so the feed still
     * receives a schema-only parquet file, exactly as before.
     */
   def stageSlices(df: DataFrame, sliceCol: String, n: Int,
-      tmpDir: java.nio.file.Path, dest: Int => java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    def movePart(dir: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      stage: Path): Unit = {
+    def movePart(dir: Path, to: Path): Unit = {
       val st = Files.list(dir)
       val part = try st.filter(_.getFileName.toString.endsWith(".parquet"))
         .findFirst().get() finally st.close()
       Files.move(part, to, StandardCopyOption.REPLACE_EXISTING)
     }
-    val tmp = tmpDir.resolve("__slices")
+    val tmp = stage.resolve("__slices")
     df.coalesce(1).write.mode("overwrite")
       .partitionBy(sliceCol).parquet(tmp.toString)
     (0 until n).foreach { i =>
       val d = tmp.resolve(s"$sliceCol=$i")
-      if (Files.isDirectory(d)) movePart(d, dest(i))
+      if (Files.isDirectory(d)) movePart(d, stagedSlice(stage, i))
       else {
-        val fb = tmpDir.resolve(s"__slice_empty_$i")
+        val fb = stage.resolve(s"__slice_empty_$i")
         df.filter(col(sliceCol) === i).drop(sliceCol)
           .coalesce(1).write.mode("overwrite").parquet(fb.toString)
-        movePart(fb, dest(i))
+        movePart(fb, stagedSlice(stage, i))
       }
     }
   }
+
+  private def stagedSlice(stage: Path, i: Int): Path =
+    stage.resolve(f"slice$i%02d.parquet")
+
+  /** Land slice `i` of `stageSlices(…, stage)` in the watched `feed`
+    * directory (created if absent) as `b<i>.parquet`, with its mtime
+    * pinned to 1000·(i+1) ms. Slices landed in ascending `i` thus carry
+    * strictly ascending mtimes — the order in which FileStreamSource
+    * replays them, one file per trigger under `maxFilesPerTrigger = 1`.
+    */
+  def landSlice(stage: Path, feed: Path, i: Int): Unit = {
+    val dst = feed.resolve(f"b$i%02d.parquet")
+    Files.createDirectories(feed)
+    Files.move(stagedSlice(stage, i), dst,
+      StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(dst, FileTime.fromMillis(1000L * (i + 1)))
+  }
+
+  /** Run `f` with each `key -> value` of `kv` set on `s`'s session conf.
+    * Once `withConf` returns or throws, every key holds the value it had
+    * before the call again, and a key that had none is unset.
+    */
+  def withConf[T](s: SparkSession, kv: (String, String)*)(f: => T): T = {
+    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
+  /** Run `f` with `n` shuffle partitions, restored by `withConf`.
+    *
+    * Stream-STATE width is a first-class knob, sized independently of the
+    * batch job's shuffle width: a stateful streaming query creates one
+    * state store per shuffle partition per stateful operator (a
+    * stream-stream join keeps FOUR), and every micro-batch commits every
+    * store — so an over-wide default buys nothing but store-commit
+    * overhead at this key cardinality. Production streaming jobs pin this
+    * per-query before the first run (it is sticky in the checkpoint);
+    * here it is scoped to the query and restored after the sink drains.
+    */
+  def withStatePartitions[T](s: SparkSession, n: Int)(f: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(f)
 
   /** A Scala double as a DuckDB literal that parses to the IDENTICAL
     * double. A bare decimal literal like `0.15384615384615385` parses as

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.Dirs
+
 import QueryDef._
 import graft.similarity.Ann
 
@@ -358,9 +360,7 @@ object SimilarityCatalog {
       import graft.similarity.IvfIndex
       val e = t(s, dir, "embeddings")
       val c = scaledCellCount(e.count())
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivf_persist")
-      try {
+      Dirs.scratch("graft_ivf_persist") { stage =>
         IvfIndex.write(e, "vec_id", "embedding", c, stage.toString)
         IvfIndex.probe(s, stage.toString,
             e.filter(col("vec_id") < QueryIdMax), "vec_id", "embedding",
@@ -369,7 +369,7 @@ object SimilarityCatalog {
           .orderBy("query_id", "rank")
           // materialize before the persisted index is deleted below
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(ivfReplaySql("ivf_scaled_cells", "ivf_scaled_centroids"))
   )
@@ -399,9 +399,7 @@ object SimilarityCatalog {
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
       val base = e.filter(!isDelta)
       val c = scaledCellCount(base.count())
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivf_append")
-      try {
+      Dirs.scratch("graft_ivf_append") { stage =>
         IvfIndex.write(base, "vec_id", "embedding", c, stage.toString)
         IvfIndex.append(s, stage.toString, e.filter(isDelta),
           "vec_id", "embedding")
@@ -411,7 +409,7 @@ object SimilarityCatalog {
           .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(ivfReplaySql("ivf_append_cells", "ivf_base_centroids"))
   )
@@ -438,9 +436,7 @@ object SimilarityCatalog {
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
       val base = e.filter(!isDelta)
       val c = scaledCellCount(base.count())
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivf_compact")
-      try {
+      Dirs.scratch("graft_ivf_compact") { stage =>
         IvfIndex.write(base, "vec_id", "embedding", c, stage.toString)
         IvfIndex.append(s, stage.toString, e.filter(isDelta),
           "vec_id", "embedding")
@@ -454,7 +450,7 @@ object SimilarityCatalog {
           .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(ivfReplaySql("ivf_append_cells", "ivf_base_centroids"))
   )
@@ -479,9 +475,7 @@ object SimilarityCatalog {
       import graft.similarity.IvfIndex
       val e = t(s, dir, "embeddings")
       val c = scaledCellCount(e.count())
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivf_delete")
-      try {
+      Dirs.scratch("graft_ivf_delete") { stage =>
         IvfIndex.write(e, "vec_id", "embedding", c, stage.toString)
         val purged = IvfIndex.delete(s, stage.toString,
           e.filter(pmod(col("vec_id"), lit(9)) === 4)
@@ -493,7 +487,7 @@ object SimilarityCatalog {
           .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(ivfReplaySql("ivf_scaled_cells", "ivf_scaled_centroids",
       "WHERE e.vec_id % 9 <> 4"))
@@ -526,9 +520,7 @@ object SimilarityCatalog {
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
       val base = e.filter(!isDelta)
       val c = scaledCellCount(base.count())
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivf_torn")
-      try {
+      Dirs.scratch("graft_ivf_torn") { stage =>
         IvfIndex.write(base, "vec_id", "embedding", c, stage.toString)
         IvfIndex.append(s, stage.toString, e.filter(isDelta),
           "vec_id", "embedding")
@@ -560,7 +552,7 @@ object SimilarityCatalog {
           .withColumn("torn_invisible", lit(tornInvisible))
           .withColumn("healed_equal", lit(tornVals == healedVals))
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       SELECT r.*, TRUE AS torn_invisible, TRUE AS healed_equal
@@ -590,9 +582,7 @@ object SimilarityCatalog {
       val base = e.filter(!isDelta)
       val c = scaledCellCount(base.count())
       val q = e.filter(col("vec_id") < QueryIdMax).localCheckpoint(true)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivf_snapshot")
-      try {
+      Dirs.scratch("graft_ivf_snapshot") { stage =>
         IvfIndex.write(base, "vec_id", "embedding", c, stage.toString) // v1
         def shape(df: DataFrame) =
           nnRows(df).orderBy("query_id", "rank")
@@ -618,7 +608,7 @@ object SimilarityCatalog {
             col("nn_id"), col("cos"), col("isolated"))
           .orderBy("version", "query_id", "rank")
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       SELECT * FROM (
@@ -660,10 +650,8 @@ object SimilarityCatalog {
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
       val base = e.filter(!isDelta)
       val c = scaledCellCount(base.count())
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivf_occ")
-      val root = stage.toString
-      try {
+      Dirs.scratch("graft_ivf_occ") { stage =>
+        val root = stage.toString
         IvfIndex.write(base, "vec_id", "embedding", c, root) // v1
         IvfIndex.append(s, root, e.filter(isDelta),
           "vec_id", "embedding") // v2
@@ -706,7 +694,7 @@ object SimilarityCatalog {
           .withColumn("compaction_survived", lit(compactionSurvived))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(root)
+      }
     },
     Some(s"""
       SELECT r.*, TRUE AS conflict_detected, TRUE AS compaction_survived
@@ -732,29 +720,23 @@ object SimilarityCatalog {
   val sIvfStreamIngest = QueryDef(
     "q_s_ivf_stream_ingest",
     (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       import graft.similarity.IvfIndex
       val e = t(s, dir, "embeddings")
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
       val base = e.filter(!isDelta)
       val delta = e.filter(isDelta)
       val c = scaledCellCount(base.count())
-      val stage = Files.createTempDirectory("graft_ivf_stream")
-      val feed = stage.resolve("feed")
-      Files.createDirectories(feed)
-      try {
+      Dirs.scratch("graft_ivf_stream") { stage =>
+        val feed = stage.resolve("feed")
         IvfIndex.write(base, "vec_id", "embedding", c,
           s"${stage.toString}/index")
-        // three arrival slices staged with ascending mtimes, pinning the
+        // three arrival slices landed with ascending mtimes, pinning the
         // FileStreamSource replay order (the q_e_scd_stream pattern) —
         // one partitioned write stages all three (QueryDef.stageSlices)
         QueryDef.stageSlices(
           delta.withColumn("slice", pmod(col("vec_id"), lit(3))),
-          "slice", 3, stage, i => feed.resolve(f"b$i%02d.parquet"))
-        (0 until 3).foreach { i =>
-          Files.setLastModifiedTime(feed.resolve(f"b$i%02d.parquet"),
-            java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-        }
+          "slice", 3, stage)
+        (0 until 3).foreach(landSlice(stage, feed, _))
         var batches = 0
         val q = s.readStream.schema(delta.schema)
           .option("maxFilesPerTrigger", 1)
@@ -778,7 +760,7 @@ object SimilarityCatalog {
           .withColumn("multi_batch", lit(batches >= 2))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       SELECT r.*, TRUE AS multi_batch
@@ -2194,9 +2176,7 @@ object SimilarityCatalog {
     (s, dir) => {
       import graft.similarity.IvfPqIndex
       val e = t(s, dir, "embeddings")
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_persist")
-      try {
+      Dirs.scratch("graft_ivfpq_persist") { stage =>
         IvfPqIndex.write(e, "vec_id", "embedding", IvfCells,
           PqDim, PqM, PqK, stage.toString)
         IvfPqIndex.probe(s, stage.toString,
@@ -2205,7 +2185,7 @@ object SimilarityCatalog {
           .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       WITH $ivfPqReplayCtes,
@@ -2264,9 +2244,7 @@ object SimilarityCatalog {
       import graft.similarity.IvfPqIndex
       val e = t(s, dir, "embeddings")
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_append")
-      try {
+      Dirs.scratch("graft_ivfpq_append") { stage =>
         IvfPqIndex.write(e.filter(!isDelta), "vec_id", "embedding",
           IvfCells, PqDim, PqM, PqK, stage.toString)
         IvfPqIndex.append(s, stage.toString, e.filter(isDelta),
@@ -2277,7 +2255,7 @@ object SimilarityCatalog {
           .transform(nnRows(_))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       WITH ${ivfPqReplayCtesFrom("ivfpq_base_centroids",
@@ -2304,9 +2282,7 @@ object SimilarityCatalog {
       import graft.sources.ManifestedPartitions
       val e = t(s, dir, "embeddings")
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_compact")
-      try {
+      Dirs.scratch("graft_ivfpq_compact") { stage =>
         IvfPqIndex.write(e.filter(!isDelta), "vec_id", "embedding",
           IvfCells, PqDim, PqM, PqK, stage.toString)
         IvfPqIndex.append(s, stage.toString, e.filter(isDelta),
@@ -2324,7 +2300,7 @@ object SimilarityCatalog {
           .withColumn("compacted_both", lit(fragLists && fragRaw))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       WITH ${ivfPqReplayCtesFrom("ivfpq_base_centroids",
@@ -2355,9 +2331,7 @@ object SimilarityCatalog {
       import graft.similarity.IvfPqIndex
       import graft.sources.ManifestedPartitions
       val e = t(s, dir, "embeddings")
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_delete")
-      try {
+      Dirs.scratch("graft_ivfpq_delete") { stage =>
         IvfPqIndex.write(e, "vec_id", "embedding", IvfCells,
           PqDim, PqM, PqK, stage.toString)
         val ts = e.filter(pmod(col("vec_id"), lit(9)) === 4)
@@ -2377,7 +2351,7 @@ object SimilarityCatalog {
           .withColumn("purged", lit(deadLive == 0L))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       WITH ${ivfPqReplayCtesFrom("ivfpq_centroids", "ivfpq_codebooks",
@@ -2409,9 +2383,7 @@ object SimilarityCatalog {
       import graft.similarity.IvfPqIndex
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < QueryIdMax).localCheckpoint(true)
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_snapshot")
-      try {
+      Dirs.scratch("graft_ivfpq_snapshot") { stage =>
         IvfPqIndex.write(e, "vec_id", "embedding", IvfCells,
           PqDim, PqM, PqK, stage.toString) // v1
         def shape(df: DataFrame) =
@@ -2443,7 +2415,7 @@ object SimilarityCatalog {
             col("nn_id"), col("cos"), col("isolated"))
           .orderBy("version", "query_id", "rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       SELECT * FROM (
@@ -2486,10 +2458,8 @@ object SimilarityCatalog {
       import graft.sources.ManifestedPartitions
       val e = t(s, dir, "embeddings")
       val isDelta = pmod(col("vec_id"), lit(10)) === 7
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_occ")
-      val root = stage.toString
-      try {
+      Dirs.scratch("graft_ivfpq_occ") { stage =>
+        val root = stage.toString
         IvfPqIndex.write(e.filter(!isDelta), "vec_id", "embedding",
           IvfCells, PqDim, PqM, PqK, root) // v1
         IvfPqIndex.append(s, root, e.filter(isDelta),
@@ -2582,7 +2552,7 @@ object SimilarityCatalog {
           .withColumn("atomic_pair", lit(atomicPair))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(root)
+      }
     },
     Some(s"""
       WITH ${ivfPqReplayCtesFrom("ivfpq_base_centroids",

@@ -3,9 +3,11 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.OutputMode
 
 import QueryDef._
 import graft.sketches.Hll
+import graft.streaming.EventStreams.runToMemory
 
 /** Sketch-family twins (capability beyond the reference): mergeable
   * summaries a 100 TB pipeline reaches for when exact answers are
@@ -412,19 +414,15 @@ object SketchCatalog {
   val hllStream = QueryDef(
     "q_hll_stream",
     (s, dir) => {
-      val sink = "graft_hll_stream_sink"
-      s.catalog.dropTempView(sink)
-      EventsCatalog.withStatePartitions(s, 8) {
+      val drained = withStatePartitions(s, 8) {
         val src = s.readStream.schema(graft.model.Schemas.events)
           .parquet(EventsCatalog.streamableEventsDir(dir))
-        val q = Hll.registers(src, Seq("event_type"), col("user_id"), P)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
+        val df = Hll.registers(src, Seq("event_type"), col("user_id"), P)
+        runToMemory(s, df, "graft_hll_stream_sink", OutputMode.Complete())
       }
       val exact = t(s, dir, "events").groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_distinct"))
-      Hll.estimate(s.table(sink), Seq("event_type"), P)
+      Hll.estimate(drained, Seq("event_type"), P)
         .join(exact, "event_type")
         .select(col("event_type"), r6(col("hll_est")).as("hll_est"),
           col("exact_distinct"))
@@ -484,21 +482,17 @@ object SketchCatalog {
     "q_cms_topk_stream",
     (s, dir) => {
       import graft.sketches.CountMin
-      val sink = "graft_cms_stream_sink"
-      s.catalog.dropTempView(sink)
-      EventsCatalog.withStatePartitions(s, 8) {
+      val drained = withStatePartitions(s, 8) {
         val src = s.readStream.schema(graft.model.Schemas.events)
           .parquet(EventsCatalog.streamableEventsDir(dir))
-        val q = CountMin.bucketMap(src.select("user_id"), "user_id", D, W)
+        val df = CountMin.bucketMap(src.select("user_id"), "user_id", D, W)
           .groupBy("i", "b").agg(count(lit(1)).as("c"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
+        runToMemory(s, df, "graft_cms_stream_sink", OutputMode.Complete())
       }
       val uc = t(s, dir, "events").groupBy("user_id")
         .agg(count(lit(1)).as("exact_cnt"))
       val est = CountMin.estimate(uc.select("user_id"), "user_id",
-        s.table(sink), D, W)
+        drained, D, W)
       uc.join(est, "user_id")
         .orderBy(col("exact_cnt").desc, col("user_id"))
         .limit(25)

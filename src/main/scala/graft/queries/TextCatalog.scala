@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Dirs
+
 import QueryDef._
 import graft.text.{Bpe, TextAnalysis}
 
@@ -695,9 +697,7 @@ object TextCatalog {
     "q_t_bm25_persist",
     (s, dir) => {
       import graft.text.PostingsIndex
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_bm25_persist")
-      try {
+      Dirs.scratch("graft_bm25_persist") { stage =>
         PostingsIndex.write(t(s, dir, "documents"), "doc_id", "text",
           nBuckets = 16, stage.toString)
         PostingsIndex.probe(s, stage.toString, Bm25Terms, "doc_id",
@@ -705,7 +705,7 @@ object TextCatalog {
           .orderBy("rank")
           // materialize before the persisted index is deleted below
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(bm25OracleSql())
   )
@@ -729,9 +729,7 @@ object TextCatalog {
       import graft.text.PostingsIndex
       val docs = t(s, dir, "documents")
       val isDelta = pmod(col("doc_id"), lit(3)) === 0
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_bm25_append")
-      try {
+      Dirs.scratch("graft_bm25_append") { stage =>
         PostingsIndex.write(docs.filter(!isDelta), "doc_id", "text",
           nBuckets = 16, stage.toString)
         PostingsIndex.append(s, stage.toString, docs.filter(isDelta),
@@ -744,7 +742,7 @@ object TextCatalog {
             k = Bm25K)
           .orderBy("rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(bm25OracleSql())
   )
@@ -766,9 +764,7 @@ object TextCatalog {
     (s, dir) => {
       import graft.text.PostingsIndex
       val docs = t(s, dir, "documents")
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_bm25_delete")
-      try {
+      Dirs.scratch("graft_bm25_delete") { stage =>
         PostingsIndex.write(docs, "doc_id", "text", nBuckets = 16,
           stage.toString)
         val purged = PostingsIndex.delete(s, stage.toString,
@@ -778,7 +774,7 @@ object TextCatalog {
             k = Bm25K)
           .orderBy("rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(bm25OracleSql(" AND doc_id % 7 <> 0"))
   )
@@ -810,10 +806,8 @@ object TextCatalog {
       import graft.sources.ManifestedPartitions
       val docs = t(s, dir, "documents")
       val isDelta = pmod(col("doc_id"), lit(3)) === 0
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_bm25_occ")
-      val root = stage.toString
-      try {
+      Dirs.scratch("graft_bm25_occ") { stage =>
+        val root = stage.toString
         PostingsIndex.write(docs.filter(!isDelta), "doc_id", "text",
           nBuckets = 16, root) // v1
         PostingsIndex.append(s, root, docs.filter(isDelta),
@@ -883,7 +877,7 @@ object TextCatalog {
           .withColumn("stats_consistent", lit(statsConsistent))
           .orderBy("rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(root)
+      }
     },
     Some(s"""
       SELECT r.*, TRUE AS conflict_detected, TRUE AS compaction_survived,
@@ -914,18 +908,15 @@ object TextCatalog {
   val tBm25StreamIngest = QueryDef(
     "q_t_bm25_stream_ingest",
     (s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       import org.apache.spark.sql.expressions.Window
       import graft.text.PostingsIndex
       import graft.sources.ManifestedPartitions
       val docs = t(s, dir, "documents")
       val isDelta = pmod(col("doc_id"), lit(3)) === 0
-      val stage = Files.createTempDirectory("graft_bm25_stream")
-      val idx = s"$stage/index"
-      val feed = stage.resolve("feed")
-      val ckpt = stage.resolve("ckpt")
-      Files.createDirectories(feed)
-      try {
+      Dirs.scratch("graft_bm25_stream") { stage =>
+        val idx = s"$stage/index"
+        val feed = stage.resolve("feed")
+        val ckpt = stage.resolve("ckpt")
         PostingsIndex.write(docs.filter(!isDelta), "doc_id", "text",
           nBuckets = 16, idx) // v1
         // three arrival slices: ascending doc_id ranges, ascending mtimes
@@ -933,15 +924,7 @@ object TextCatalog {
           .withColumn("slice",
             ntile(3).over(Window.orderBy("doc_id")) - 1)
           .localCheckpoint(true)
-        QueryDef.stageSlices(sliced, "slice", 3, stage,
-          i => stage.resolve(f"slice$i%02d.parquet"))
-        def land(i: Int): Unit = {
-          val dst = feed.resolve(f"b$i%02d.parquet")
-          Files.copy(stage.resolve(f"slice$i%02d.parquet"), dst,
-            StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1)))
-        }
+        QueryDef.stageSlices(sliced, "slice", 3, stage)
         // ledger-keyed exactly-once (ADVICE r17: the old batch-keyed
         // appendAt replace-committed version batchId+2, clobbering any
         // interleaved maintenance commit): a first delivery CAS-commits
@@ -971,9 +954,10 @@ object TextCatalog {
             }.start()
           try q.processAllAvailable() finally q.stop()
         }
-        land(0); runPhase()
+        landSlice(stage, feed, 0); runPhase()
         val phase1Max = seen.max
-        land(1); land(2); runPhase() // RESTART from the checkpoint
+        landSlice(stage, feed, 1); landSlice(stage, feed, 2)
+        runPhase() // RESTART from the checkpoint
         val resumed = seen.size >= 3 &&
           seen.drop(1).forall(_ > phase1Max)
         require(ManifestedPartitions.latestVersion(idx).contains(4L),
@@ -1003,7 +987,7 @@ object TextCatalog {
           .withColumn("replay_idempotent", lit(replayIdempotent))
           .orderBy("rank")
           .localCheckpoint(true)
-      } finally graft.similarity.IvfIndex.deleteDir(stage.toString)
+      }
     },
     Some(s"""
       SELECT r.*, TRUE AS resumed, TRUE AS replay_idempotent

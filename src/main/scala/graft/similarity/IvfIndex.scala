@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.functions.VectorFunctions
-import graft.sources.ManifestedPartitions
+import graft.sources.{Dirs, ManifestedPartitions}
 
 /** Persisted IVF index lifecycle — build once, probe many (r13 verdict
   * order #3). Every other ANN entry rebuilds its index inside the query;
@@ -50,7 +50,7 @@ object IvfIndex {
   def write(corpus: DataFrame, idCol: String, vecCol: String, nCells: Int,
       path: String,
       pretrained: Option[Seq[(Int, Array[Double])]] = None): Unit = {
-    deleteDir(path) // overwrite contract: no stale generations or markers
+    Dirs.delete(path) // overwrite contract: no stale generations or markers
     val sp = corpus.sparkSession
     import sp.implicits._
     val centroids = pretrained.getOrElse(
@@ -226,6 +226,8 @@ object IvfIndex {
     ManifestedPartitions.read(spark, path, Lists, Cell,
       ManifestedPartitions.prunedEntries(spark, path, Lists, probed, version))
 
-  /** Recursive delete of a staged index dir (sources.Dirs.delete). */
+  /** Recursive delete of a staged index dir: `sources.Dirs.delete` under
+    * the name the benchmark harness and the specs call.
+    */
   def deleteDir(p: String): Unit = graft.sources.Dirs.delete(p)
 }

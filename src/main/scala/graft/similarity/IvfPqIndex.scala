@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
-import graft.sources.ManifestedPartitions
+import graft.sources.{Dirs, ManifestedPartitions}
 
 /** Persisted IVF-PQ index with exact re-rank (r14 verdict order #3) — the
   * storage-bounded ANN layout a 100 TB corpus actually deploys. The plain
@@ -67,7 +67,7 @@ object IvfPqIndex {
     */
   def write(corpus: DataFrame, idCol: String, vecCol: String, nCells: Int,
       dim: Int, m: Int, k: Int, path: String): Unit = {
-    IvfIndex.deleteDir(path) // overwrite contract
+    Dirs.delete(path) // overwrite contract
     val sp = corpus.sparkSession
     import sp.implicits._
     val cents = ManifestedPartitions.labeled(sp, "ivfpq:hashCentroids") {

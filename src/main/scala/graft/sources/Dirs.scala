@@ -4,7 +4,7 @@ import java.io.IOException
 import java.nio.file.{Files, Path}
 
 /** Local directory helpers shared by the persisted layouts and the
-  * catalogs' scratch directories.
+  * catalogs' and tools' scratch directories.
   */
 object Dirs {
 
@@ -29,4 +29,15 @@ object Dirs {
     } catch { case _: IOException => () }
 
   def delete(root: String): Unit = delete(java.nio.file.Paths.get(root))
+
+  /** Run `f` on a fresh temporary directory named `prefix…` and delete it
+    * afterwards: once `scratch` returns or throws, the directory and
+    * everything `f` put in it are gone, and `f`'s result or exception
+    * reaches the caller unchanged. A result that still reads files under
+    * the directory (a lazy DataFrame) must be materialized inside `f`.
+    */
+  def scratch[T](prefix: String)(f: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir) finally delete(dir)
+  }
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` table (SURVEY §2.10 notes the
@@ -478,16 +479,41 @@ object EventStreams {
       }
   }
 
-  /** Drive a streaming frame to completion against static input (memory
-    * sink) and return the materialized result — the batch-driven smoke
-    * harness for local verification.
+  /** Drive a streaming frame to completion against static input into a
+    * memory sink named `name` and return the sink's table. Any earlier
+    * view of that name (a previous run's sink) is dropped first, so the
+    * result holds exactly this run's output; the query is stopped on
+    * return and on throw.
     */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
       outputMode: OutputMode = OutputMode.Append()): DataFrame = {
+    spark.catalog.dropTempView(name)
     val q = df.writeStream.outputMode(outputMode)
       .format("memory").queryName(name).start()
     try q.processAllAvailable()
     finally q.stop()
     spark.table(name)
+  }
+
+  /** Drain one phase of a restart gate: process everything available,
+    * then wait — while `q` is still running — for a progress entry that
+    * read input rows (at most 100 × 100 ms: progress posts to the
+    * listener bus asynchronously, and a stopped query records none, so a
+    * post-stop wait could never see a late entry). `q` is stopped on
+    * return and on throw. Returns the smallest batchId that read rows;
+    * throws, naming `q`, if none was reported.
+    */
+  def drainPhase(q: StreamingQuery): Long = {
+    def dataBatches = q.recentProgress.filter(_.numInputRows > 0)
+    try {
+      q.processAllAvailable()
+      var waited = 0
+      while (dataBatches.isEmpty && waited < 100) {
+        Thread.sleep(100); waited += 1
+      }
+    } finally q.stop()
+    require(dataBatches.nonEmpty, s"no data batch reported by query " +
+      s"${Option(q.name).getOrElse(q.id.toString)} after 10s")
+    dataBatches.map(_.batchId).min
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{ManifestedPartitions => MP, VersionedView}
+import graft.sources.{Dirs, ManifestedPartitions => MP, VersionedView}
 
 /** CONTENTION soak for the CAS-by-default commit path (r18): the
   * data-axis soaks scale row volume, but the r18 protocol's new cost is
@@ -30,9 +30,8 @@ object CasContentionSoak {
     import spark.implicits._
 
     writerCounts.foreach { w =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_cas_w$w")
-      val root = stage.toString
-      try {
+      Dirs.scratch(s"graft_cas_w$w") { stage =>
+        val root = stage.toString
         MP.init(Seq((0, 0)).toDF("x", "p"), root, "d", "p")
         val barrier = new java.util.concurrent.CyclicBarrier(w)
         val errs =
@@ -61,7 +60,7 @@ object CasContentionSoak {
           f"gapless=$gapless rows-intact=$intact")
         require(gapless && intact,
           s"protocol violation at w=$w: gapless=$gapless intact=$intact")
-      } finally graft.similarity.IvfIndex.deleteDir(root)
+      }
     }
     spark.stop()
   }

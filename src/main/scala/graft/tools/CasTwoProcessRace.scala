@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
-import graft.sources.{ManifestedPartitions => MP, VersionedView}
+import graft.sources.{Dirs, ManifestedPartitions => MP, VersionedView}
 
 /** TWO-PROCESS CAS race (r18): the thread-based race gates prove the
   * protocol under concurrent callers in ONE JVM; this drives it across
@@ -48,9 +48,8 @@ object CasTwoProcessRace {
     val rounds = args.headOption.map(_.toInt).getOrElse(8)
     val spark = GraftSession.build()
     import spark.implicits._
-    val stage = Files.createTempDirectory("graft_cas_2proc")
-    val root = stage.toString
-    try {
+    try Dirs.scratch("graft_cas_2proc") { stage =>
+      val root = stage.toString
       MP.init(Seq((0, 0)).toDF("x", "p"), root, "d", "p")
       // the child is a SEPARATE java process: same classes, own JVM, own
       // SparkSession — it shares ONLY the filesystem root with us
@@ -101,9 +100,6 @@ object CasTwoProcessRace {
       require(gapless && intact,
         s"CROSS-PROCESS protocol violation: gapless=$gapless " +
           s"intact=$intact xs=$xs")
-    } finally {
-      graft.similarity.IvfIndex.deleteDir(root)
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.dedup.FunnelMv
-import graft.sources.ManifestedPartitions
+import graft.sources.{Dirs, ManifestedPartitions}
 
 /** VERSION-AXIS soak for the streaming funnel MV (r17, verdict order #1):
   * the data-axis soaks (tools.Soak) scale corpus volume at a FIXED batch
@@ -30,9 +30,8 @@ object MvBatchSoak {
     // fixed per-batch payload — only stream AGE varies across batches
     val payload = docs.filter(col("doc_id") < batchDocs)
       .localCheckpoint(true)
-    val stage = java.nio.file.Files.createTempDirectory("graft_mv_bsoak")
-    val root = stage.toString
-    try {
+    Dirs.scratch("graft_mv_bsoak") { stage =>
+      val root = stage.toString
       val t0 = System.nanoTime()
       FunnelMv.writeVersioned(docs, root, nBuckets, 8, 0.9, 0.1, 0.9)
       println(f"[mv-soak] base MV built in ${(System.nanoTime() - t0) / 1e9}%.1f s " +
@@ -57,7 +56,7 @@ object MvBatchSoak {
       println(f"[mv-soak] batches=$batches early(3)=$early%.2fs " +
         f"late(3)=$late%.2fs late/early=${late / early}%.2f " +
         s"maxLiveFilesPerBucket=$maxFiles (bound=${cadence + 1})")
-    } finally graft.similarity.IvfIndex.deleteDir(root)
+    }
     spark.stop()
   }
 }
