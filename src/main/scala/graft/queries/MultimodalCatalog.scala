@@ -818,12 +818,17 @@ object MultimodalCatalog {
 
   // staged raw-media dir per testdata dir (bounded: ≤40 small files —
   // TEST staging only, mirroring the streamable-events pattern; real
-  // media lakes already sit in files)
+  // media lakes already sit in files). The directories go on JVM exit,
+  // through one shutdown hook.
   private val binDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private lazy val binDirCleanup = sys.addShutdownHook {
+    binDirCache.values.forEach(d => graft.sources.Dirs.delete(d))
+  }
   private def binaryStageDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     binDirCache.computeIfAbsent(dir, _ => {
+      binDirCleanup // register the shutdown hook once, on first staging
       val d = java.nio.file.Files.createTempDirectory("graft_bin_media")
       t(s, dir, "documents")
         .filter(col("doc_id") < 40 && col("text").isNotNull)
@@ -833,7 +838,6 @@ object MultimodalCatalog {
             d.resolve(s"doc_${r.getLong(0)}.bin"),
             r.getString(1).getBytes("UTF-8"))
         }
-      d.toFile.deleteOnExit()
       d.toString
     })
 

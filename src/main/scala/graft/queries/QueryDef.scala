@@ -18,8 +18,7 @@ final case class QueryDef(
 object QueryDef {
   /** Load one testdata table. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Tables.load(spark, dir, name)
 
   /** Load the events table with `ts` normalized to epoch MICROSECONDS —
     * the footer-driven read (sources.EventsTs) that survives testdata

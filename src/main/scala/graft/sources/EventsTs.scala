@@ -63,7 +63,7 @@ object EventsTs {
     * already walks, so this stays cheap even on wide multi-file tables).
     */
   def conversion(path: String): Conv = {
-    val conf = new Configuration()
+    val conf = ArtifactCache.hadoopConf
     val p = new HPath(path)
     val fs = p.getFileSystem(conf)
     val files = resolveParquet(fs, p)

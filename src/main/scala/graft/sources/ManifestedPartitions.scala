@@ -200,18 +200,13 @@ object ManifestedPartitions {
     } finally pool.shutdown()
   }
 
-  // one Configuration for every footer read — constructing one per file
-  // re-parses the Hadoop XML defaults each time (tens of ms), which
-  // dominates the ~1 ms footer read itself
-  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
-
   /** Row count from a parquet file's footer (sum of row-group counts) —
     * a ~1 ms driver read, no Spark job.
     */
   private def parquetRowCount(f: NioPath): Long = {
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), hadoopConf))
+        new org.apache.hadoop.fs.Path(f.toUri), ArtifactCache.hadoopConf))
     try rd.getRecordCount finally rd.close()
   }
 
@@ -636,7 +631,8 @@ object ManifestedPartitions {
     *   - the affected partitions of each dataset come from a
     *     column-pruned `(key, partCol ++ keep)` scan joined to the
     *     broadcast tombstones; the first dataset's hits (`dead`) are
-    *     materialized, the others only yield their partition list;
+    *     materialized and counted per partition in one pass (partitions
+    *     and purge count), the others only yield their partition list;
     *   - the datasets after the first are side tables keyed like it, so a
     *     batch with no live hit in the first dataset commits nothing, and
     *     any other dataset without hits is skipped;
@@ -665,7 +661,10 @@ object ManifestedPartitions {
           .join(broadcast(ts), Seq(key))
       val (dn0, pc0) = datasets.head
       val dead = hits(dn0, pc0, keep).localCheckpoint(true)
-      val parts0 = parts(dead, pc0)
+      // one pass over `dead` yields both its partitions and the purge
+      // count (bounded by the delete batch)
+      val perPart = dead.groupBy(pc0).count().collect()
+      val parts0 = perPart.map(_.getInt(0)).toSeq
       if (parts0.isEmpty) Some(0L)
       else {
         val affected = (dn0, pc0, parts0) +: datasets.tail.map {
@@ -677,7 +676,7 @@ object ManifestedPartitions {
         }.toMap
         if (commitManifestsCas(spark, root, outV, merged,
             sidecarScalars = scalars(inV, dead)))
-          Some(dead.count())
+          Some(perPart.map(_.getLong(1)).sum)
         else None
       }
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,6 +32,22 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.ansi.enabled") == "false")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+  }
+
+  // perfbench's warehouse workload: short catalog queries whose generated
+  // classes must all stay in Spark's JVM-wide codegen cache
+  private val warehouse = Seq("q_a1_quarterly_price", "q_a4_stats",
+    "q_a15_distinct", "q_w1_lead", "q_w4_rolling", "q_w12_ewma", "q_j_anti",
+    "q_j_semi", "q_j5_star_revenue", "q_cube", "q_m4_anomalies")
+
+  test("a second pass over the warehouse queries compiles no class") {
+    def compiled(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      warehouse.foreach(q => SparkEntry.queries(q)(spark, sfSmoke).collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiled() // the first pass fills the cache
+    assert(compiled() == 0)
   }
 
   private def dotCount(df: DataFrame): Int =

@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,38 +46,6 @@ class ManifestedPartitionsSpec extends SparkSpec {
 
   private def sortedRows(d: DataFrame): Seq[String] =
     d.collect().map(_.toString).toSeq.sorted
-
-  /** `body`'s result and the jobs it started. The jobs carry a job group
-    * of this call's own; listener events arrive asynchronously but in
-    * order, so a closing job in the same group marks the end of `body`'s
-    * events. */
-  private def jobsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
-    val sc = spark.sparkContext
-    val group = s"mp-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val closed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "close")
-            closed.countDown()
-          else jobs.add(e)
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = body
-      sc.setJobDescription("close")
-      sc.parallelize(Seq(1), 1).count()
-      assert(closed.await(60, TimeUnit.SECONDS), "closing job never seen")
-      (out, jobs.asScala.toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("init/append: snapshot-isolated reads; pinned version unchanged") {
     val stage = Files.createTempDirectory("graft_mp_basic")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
+import graft.sources.Dirs
 import graft.similarity.Ann
 import graft.streaming.EventStreams
 import graft.text.TextAnalysis
@@ -279,36 +280,42 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got(1L) == "en" && got(2L) == "de" && got(3L) == "fr")
   }
 
-  // streaming file sources require a directory
-  private lazy val eventsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_events")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfSmoke/events.parquet"),
-      d.resolve("events.parquet"))
-    d.toString
-  }
+  // streaming file sources require a directory: `f` gets one holding a
+  // copy of `sfDir`'s events table, deleted once `f` returns or throws
+  private def withEventsDir[T](sfDir: String, prefix: String)(
+      f: String => T): T =
+    Dirs.scratch(prefix) { d =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sfDir/events.parquet"),
+        d.resolve("events.parquet"))
+      f(d.toString)
+    }
 
   test("streaming windowed stats match batch aggregation") {
-    val stream = EventStreams.windowedStats(spark, eventsDir,
-      windowLen = "1 hour")
-    val got = EventStreams.runToMemory(spark, stream, "win_stats",
-      org.apache.spark.sql.streaming.OutputMode.Append())
-    // append mode emits only closed windows; compare a stable aggregate
-    val batch = spark.read.schema(EventStreams.eventSchema)
-      .parquet(s"$sfSmoke/events.parquet")
-    assert(got.count() > 0)
-    val totalN = got.agg(sum("n")).first().getLong(0)
-    assert(totalN <= batch.count())
+    withEventsDir(sfSmoke, "graft_events") { eventsDir =>
+      val stream = EventStreams.windowedStats(spark, eventsDir,
+        windowLen = "1 hour")
+      val got = EventStreams.runToMemory(spark, stream, "win_stats",
+        org.apache.spark.sql.streaming.OutputMode.Append())
+      // append mode emits only closed windows; compare a stable aggregate
+      val batch = spark.read.schema(EventStreams.eventSchema)
+        .parquet(s"$sfSmoke/events.parquet")
+      assert(got.count() > 0)
+      val totalN = got.agg(sum("n")).first().getLong(0)
+      assert(totalN <= batch.count())
+    }
   }
 
   test("streaming sessionization matches the batch oracle query") {
-    val ds = EventStreams.sessionize(spark, eventsDir)
-    val got = EventStreams.runToMemory(spark, ds.toDF(), "sessions",
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val want = SparkEntry.queries("q_e_sessionize")(spark, sfSmoke)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got == want, s"diff: ${want.toSet -- got.toSet}")
+    withEventsDir(sfSmoke, "graft_events") { eventsDir =>
+      val ds = EventStreams.sessionize(spark, eventsDir)
+      val got = EventStreams.runToMemory(spark, ds.toDF(), "sessions",
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val want = SparkEntry.queries("q_e_sessionize")(spark, sfSmoke)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(got == want, s"diff: ${want.toSet -- got.toSet}")
+    }
   }
 
   /** Stream-stream interval join vs its batch twin: exact row-set
@@ -343,16 +350,16 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("stream-stream interval join matches the batch join exactly") {
-    assertStreamJoinMatchesBatch(eventsDir, sfSmoke, "ss_join")
+    withEventsDir(sfSmoke, "graft_events") { eventsDir =>
+      assertStreamJoinMatchesBatch(eventsDir, sfSmoke, "ss_join")
+    }
   }
 
   test("stream-stream interval join matches batch at sf0.1 (100k events)") {
     val sf01 = "/root/testdata/sf0.1"
-    val d = java.nio.file.Files.createTempDirectory("graft_events_sf01")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf01/events.parquet"),
-      d.resolve("events.parquet"))
-    assertStreamJoinMatchesBatch(d.toString, sf01, "ss_join_sf01")
+    withEventsDir(sf01, "graft_events_sf01") { eventsDir =>
+      assertStreamJoinMatchesBatch(eventsDir, sf01, "ss_join_sf01")
+    }
   }
 
   test("stream-stream LEFT OUTER join emits unmatched purchases via " +

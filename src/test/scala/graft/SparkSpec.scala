@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +15,38 @@ trait SparkSpec extends AnyFunSuite {
   val refDir = "/root/reference"
   val sfSmoke = "/root/testdata/sf0.001"
   val sfCorrect = "/root/testdata/sf0.01"
+
+  /** `body`'s result and the jobs it started. The jobs carry a job group
+    * of this call's own; listener events arrive asynchronously but in
+    * order, so a closing job in the same group marks the end of `body`'s
+    * events. */
+  def jobsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val group = s"spec-${java.util.UUID.randomUUID()}"
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "close")
+            closed.countDown()
+          else jobs.add(e)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = body
+      sc.setJobDescription("close")
+      sc.parallelize(Seq(1), 1).count()
+      assert(closed.await(60, TimeUnit.SECONDS), "closing job never seen")
+      (out, jobs.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Compare two frames after sorting rows by `sortCols`: same row count,
     * same columns, per-cell equality with `tol` for floating point.
